@@ -35,14 +35,18 @@ import org.apache.spark.sql.functions._
   */
 object VectorIndex {
 
+  /** `corpus` with its `ivf_cell` against `centroids`. */
+  def assign(corpus: DataFrame, vecCol: String,
+             centroids: Seq[Seq[Float]]): DataFrame =
+    corpus.withColumn("ivf_cell", Similarity.ivfCell(col(vecCol), centroids))
+
   /** Cell-assign `corpus` against `centroids` and write it
     * partitioned by `ivf_cell` at `path`.
     */
   def build(corpus: DataFrame, vecCol: String,
             centroids: Seq[Seq[Float]], path: String,
             mode: String = "overwrite"): Unit =
-    corpus
-      .withColumn("ivf_cell", Similarity.ivfCell(col(vecCol), centroids))
+    assign(corpus, vecCol, centroids)
       .write.mode(mode).partitionBy("ivf_cell").parquet(path)
 
   /** Streaming-ingest maintenance: assign a (micro-)batch of new

@@ -577,15 +577,31 @@ object DedupQueries {
 
   private def componentLabels(s: SparkSession, dir: String): DataFrame = {
     val pairs = candidatePairs(s, dir) // hoisted (see Stage scaladoc)
-    Stage.durableFrame(s, "cc", dir) {
+    // the sweeps run when the frame is constructed: digest the pairs
+    Stage.durableFrame(s, "cc", dir, inputs = Seq(pairs)) {
       Dedup.connectedComponents(pairs, "id_a", "id_b")
+    }
+  }
+
+  /** Standing component labels of the corpus-internal candidate graph
+    * (both ends doc_id % 10 ≠ 0, the e54 incremental split), durably
+    * staged once: e180 reads them as a frame and c47 copies the
+    * published files as its v0 label table.
+    */
+  private[queries] def baseComponentLabels(s: SparkSession,
+      dir: String): java.nio.file.Path = {
+    val internal = candidatePairs(s, dir)
+      .where(col("id_a") % 10 =!= 0 && col("id_b") % 10 =!= 0)
+    Stage.durable("cc-base", dir, Seq(internal)) { p =>
+      Dedup.connectedComponents(internal, "id_a", "id_b")
+        .write.mode("overwrite").parquet(p.toString)
     }
   }
 
   /** tokens → distinct word shingles — the frame every minhash-family
     * query derives from, and the first durable checkpoint of the dedup
     * stage chain (shingles → hashes → signatures → pairs → components,
-    * each `_SUCCESS`-gated under target/graft-fixtures): a corpus
+    * each a durable stage under target/graft-fixtures): a corpus
     * pipeline tokenizes a snapshot exactly once, and every re-entrant
     * audit below reads the checkpoint instead of re-tokenizing.
     */

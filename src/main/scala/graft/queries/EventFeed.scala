@@ -21,9 +21,10 @@ import graft.streaming.Attribution
 object EventFeed {
   /** Number of DATA chunks (micro-batches) the feed splits the events
     * table into; sentinels add [[build]]'s `sentinelGaps.size` more.
-    * Folded into the fixture digest — changing it can never serve a
-    * stale staged feed. r19's streaming-floor experiment measured
-    * 2 vs 3 (see SCALE.md round-19 notes).
+    * The chunk plans it shapes are the feed's stage derivation, so
+    * changing it can never serve a stale staged feed. r19's
+    * streaming-floor experiment measured 2 vs 3 (see SCALE.md round-19
+    * notes).
     */
   private[queries] val dataChunks = 2
 
@@ -57,86 +58,41 @@ object EventFeed {
   def build(s: SparkSession, dir: String, tmpPrefix: String,
       perCampaign: Boolean, windowOf: (Long, Long) => Long,
       sentinelGaps: Seq[Long]): Built = {
-    // The feed is DURABLY staged per (query prefix × sf × testdata
-    // fingerprint): building it costs a ts-bounds pass plus one
-    // filtered single-file write per chunk over the events table (the
-    // dominant cost of the whole query at scale — 46.5 s of c33's
-    // 68 s at ×100 was feed construction), while the feed itself is a
-    // pure function of the source table and the query's static
-    // parameters. Pinned mtimes are part of the staged content (the
-    // publish rename preserves them), so arrival order is identical
-    // on every reuse. Checkpoints/output stay per-run in [[Stage
-    // .tempDir]] — only the input files are shared.
-    // the fixture key folds in a digest of the STATIC parameters the
-    // staged bytes depend on (perCampaign changes the data, windowOf
-    // and sentinelGaps the sentinel rows) — editing a caller's
-    // parameters can never silently serve the stale feed. windowOf is
-    // a function, so it is characterized by probing it at FOUR spans:
-    // two small fixed ones, one at the realistic multi-day scale an
-    // actual events feed spans, and one with a NONZERO lo (a formula
-    // that reads lo is invisible to lo=0 probes). A non-affine edit
-    // would have to agree at all four probe points to slip through,
-    // and the digest is a truncated MD5, not a 32-bit String.hashCode,
-    // so accidental collisions between candidate formulas are out.
-    val probeStr = s"n$dataChunks|$perCampaign|${sentinelGaps.mkString(",")}|" +
-      Seq((0L, 3000000L), (0L, 86400000000L),
-        (0L, 30L * 86400000000L),
-        (1700000000000000L, 1700000000000000L + 7L * 86400000000L))
-        .map { case (lo, hi) => windowOf(lo, hi) }.mkString("|")
-    val pdig = java.security.MessageDigest.getInstance("MD5")
-      .digest(probeStr.getBytes("UTF-8"))
-      .take(4).map("%02x".format(_)).mkString
-    val fix = Stage.durableDir(
-        s"feed-${tmpPrefix.stripSuffix("-")}-p$pdig",
-        dir, "_FEED_OK") { stage =>
-      val kCol =
-        if (perCampaign) get_json_object(col("props"), "$.k").cast("long")
-        else lit(0L)
-      val ev = Tables.events(s, dir).select(col("user_id"),
-        kCol.as("k"), col("event_id"), col("ts"),
-        unix_micros(col("ts")).as("ts_us"), col("event_type"),
-        col("value"))
-      val feed = stage.resolve("feed").toString
-      val bounds = ev.agg(min("ts_us"), max("ts_us")).head()
-      val (lo0, hi0) = (bounds.getLong(0), bounds.getLong(1))
-      val w = windowOf(lo0, hi0)
-      val step = (hi0 - lo0) / dataChunks + 1
-      val feedDir = new java.io.File(feed)
-      val stamped = scala.collection.mutable.Set[String]()
-      var fileIdx = 0
-      def pinNew(): Unit = feedDir.listFiles().foreach { f =>
-        val n = f.getName
-        if (!n.startsWith("_") && !n.startsWith(".") &&
-            !stamped.contains(n)) {
-          require(f.setLastModified(1700000000000L + fileIdx * 600000L),
-            s"mtime pin failed for $f — arrival order would race")
-          stamped += n
-        }
-      }
-      var lo = Long.MinValue
-      (Seq.tabulate(dataChunks - 1)(i => lo0 + (i + 1) * step)
-        :+ Long.MaxValue).foreach { hi =>
-        ev.where(col("ts_us") > lo && col("ts_us") <= hi)
-          .coalesce(1).write.mode("append").parquet(feed)
-        pinNew(); fileIdx += 1; lo = hi
-      }
-      sentinelGaps.foreach { g =>
-        val ts = hi0 + g * w
-        s.range(1).select(lit(-1L).as("user_id"), lit(0L).as("k"),
-            lit(-1L).as("event_id"), timestamp_micros(lit(ts)).as("ts"),
-            lit(ts).as("ts_us"), lit("noop").as("event_type"),
-            lit(0.0).as("value"))
-          .coalesce(1).write.mode("append").parquet(feed)
-        pinNew(); fileIdx += 1
-      }
-      java.nio.file.Files.write(stage.resolve("_FEED_OK"),
-        s"$lo0 $hi0".getBytes("UTF-8"))
+    // The feed is a durable stage: building it costs a ts-bounds pass
+    // plus one filtered single-file write per chunk over the events
+    // table (46.5 s of c33's 68 s at ×100 was feed construction), and
+    // it is a pure function of the source table and the query's
+    // parameters. The bounds are durable scalars, so the chunk and
+    // sentinel plans carry every parameter as a literal and the stage
+    // key digests them. Checkpoints/output stay per-run in
+    // [[Stage.tempDir]].
+    val name = s"feed-${tmpPrefix.stripSuffix("-")}"
+    val kCol =
+      if (perCampaign) get_json_object(col("props"), "$.k").cast("long")
+      else lit(0L)
+    val ev = Tables.events(s, dir).select(col("user_id"),
+      kCol.as("k"), col("event_id"), col("ts"),
+      unix_micros(col("ts")).as("ts_us"), col("event_type"),
+      col("value"))
+    val lo0 = Stage.durableScalar(s"$name-lo", dir)(ev.agg(min("ts_us")))
+    val hi0 = Stage.durableScalar(s"$name-hi", dir)(ev.agg(max("ts_us")))
+    val w = windowOf(lo0, hi0)
+    val step = (hi0 - lo0) / dataChunks + 1
+    val bounds = (Long.MinValue +: Seq.tabulate(dataChunks - 1)(
+      i => lo0 + (i + 1) * step)) :+ Long.MaxValue
+    val chunks = bounds.sliding(2).map { case Seq(lo, hi) =>
+      ev.where(col("ts_us") > lo && col("ts_us") <= hi)
+    }.toSeq
+    val sentinels = sentinelGaps.map { g =>
+      val ts = hi0 + g * w
+      s.range(1).select(lit(-1L).as("user_id"), lit(0L).as("k"),
+        lit(-1L).as("event_id"), timestamp_micros(lit(ts)).as("ts"),
+        lit(ts).as("ts_us"), lit("noop").as("event_type"),
+        lit(0.0).as("value"))
     }
-    val Array(lo0, hi0) = new String(java.nio.file.Files.readAllBytes(
-      fix.resolve("_FEED_OK")), "UTF-8").split(" ").map(_.toLong)
+    val feed = Stage.durableChunkFeed(name, dir)(chunks ++ sentinels)
     val tmp = Stage.tempDir(tmpPrefix).toString
-    Built(fix.resolve("feed").toString, lo0, hi0, windowOf(lo0, hi0),
-      s"$tmp/out", s"$tmp/ckpt")
+    Built(feed, lo0, hi0, w, s"$tmp/out", s"$tmp/ckpt")
   }
 
   /** Run `transform` over the feed as a real micro-batch stream

@@ -17,25 +17,27 @@ import graft.queries.Tables.t
   * stages already use: at 100 TB the encoded corpus is a durable
   * table, and decode-side queries scan it.
   *
-  * `Stage.durableFrame` keys on the testdata fingerprint, so a
-  * regenerated documents.parquet invalidates every staged payload.
+  * The encoders run inside `mapPartitions`, which no plan digest can
+  * see, so each stage is keyed on its input (documents) alone: a
+  * regenerated documents.parquet invalidates every staged payload,
+  * and an edit to an encoder must bump `Stage.layoutVersion`.
   */
 object MediaFixtures {
+  private def encoded(s: SparkSession, dir: String, name: String)
+                     (encode: DataFrame => DataFrame): DataFrame = {
+    val docs = t(s, dir, "documents")
+    Stage.durableFrame(s, name, dir, inputs = Seq(docs))(encode(docs))
+  }
+
   /** Grayscale PNG per doc (see [[Multimodal.fixtureFromDocuments]]). */
   def png(s: SparkSession, dir: String): DataFrame =
-    Stage.durableFrame(s, "media-png", dir) {
-      Multimodal.fixtureFromDocuments(t(s, dir, "documents"))
-    }
+    encoded(s, dir, "media-png")(Multimodal.fixtureFromDocuments)
 
   /** 8 kHz PCM WAV per doc (see [[Multimodal.audioFixtureFromDocuments]]). */
   def wav(s: SparkSession, dir: String): DataFrame =
-    Stage.durableFrame(s, "media-wav", dir) {
-      Multimodal.audioFixtureFromDocuments(t(s, dir, "documents"))
-    }
+    encoded(s, dir, "media-wav")(Multimodal.audioFixtureFromDocuments)
 
   /** Animated GIF per doc (see [[Multimodal.videoFixtureFromDocuments]]). */
   def gif(s: SparkSession, dir: String): DataFrame =
-    Stage.durableFrame(s, "media-gif", dir) {
-      Multimodal.videoFixtureFromDocuments(t(s, dir, "documents"))
-    }
+    encoded(s, dir, "media-gif")(Multimodal.videoFixtureFromDocuments)
 }

@@ -46,6 +46,25 @@ object RuntimeQueries {
     try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
+  /** The view and click sides of events as two single-file feeds, one
+    * durable stage shared by c11's inner and c22's outer interval join.
+    * Returns the (views, clicks) feed dirs.
+    */
+  private def viewClickFeeds(s: SparkSession, dir: String): (String, String) = {
+    val ev = Tables.events(s, dir)
+    def side(eventType: String, p: String) =
+      ev.where(col("event_type") === eventType)
+        .select(col("ts").as(s"${p}_ts"), col("event_id").as(s"${p}_event_id"),
+          col("user_id"))
+    val (views, clicks) = (side("view", "v"), side("click", "c"))
+    val fix = Stage.durable("feed-views-clicks", dir, Seq(views, clicks)) {
+      st =>
+        views.coalesce(1).write.parquet(st.resolve("views").toString)
+        clicks.coalesce(1).write.parquet(st.resolve("clicks").toString)
+    }
+    (fix.resolve("views").toString, fix.resolve("clicks").toString)
+  }
+
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // S2+C5+C6+C7 end to end: snapshot envelopes land in the feed, one
     // checkpointed AvailableNow run delivers them through
@@ -332,17 +351,9 @@ object RuntimeQueries {
     // pairs, so the judged frame equals the batch join definition —
     // state eviction changes WHEN rows leave memory, never the result
     "c11_stream_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
       val tmp = Stage.tempDir("graft-c11-").toString
       val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-      val fix = Stage.durableSplitFeed("feed-c11", dir)(Seq(
-        "views" -> ev.where(col("event_type") === "view")
-          .select(col("ts").as("v_ts"), col("event_id").as("v_event_id"),
-            col("user_id")),
-        "clicks" -> ev.where(col("event_type") === "click")
-          .select(col("ts").as("c_ts"), col("event_id").as("c_event_id"),
-            col("user_id"))))
-      val vDir = s"$fix/views"; val cDir = s"$fix/clicks"
+      val (vDir, cDir) = viewClickFeeds(s, dir)
       val tsT = org.apache.spark.sql.types.TimestampType
       val longT = org.apache.spark.sql.types.LongType
       val vSchema = StructType(Seq(StructField("v_ts", tsT),
@@ -538,17 +549,9 @@ object RuntimeQueries {
     // converted" feed — at 100 TB/day the outer emission IS the
     // product (abandonment), and bounded state is what makes it finite.
     "c22_stream_outer_join" -> ((s, dir) => {
-      val ev = Tables.events(s, dir)
       val tmp = Stage.tempDir("graft-c22-").toString
       val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-      val fix = Stage.durableSplitFeed("feed-c22", dir)(Seq(
-        "views" -> ev.where(col("event_type") === "view")
-          .select(col("ts").as("v_ts"), col("event_id").as("v_event_id"),
-            col("user_id")),
-        "clicks" -> ev.where(col("event_type") === "click")
-          .select(col("ts").as("c_ts"), col("event_id").as("c_event_id"),
-            col("user_id"))))
-      val vDir = s"$fix/views"; val cDir = s"$fix/clicks"
+      val (vDir, cDir) = viewClickFeeds(s, dir)
       val tsT = org.apache.spark.sql.types.TimestampType
       val longT = org.apache.spark.sql.types.LongType
       val vSchema = StructType(Seq(StructField("v_ts", tsT),

@@ -1,15 +1,32 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import java.nio.file.{FileSystemException, Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 
-/** Per-JVM parquet stage cache for frames shared across judged queries
-  * (LSH signatures/pairs, component labels, PageRank edges): the first
-  * caller pays the compute and writes a deterministic temp parquet,
-  * every later caller gets a narrow scan. This is the checkpoint
-  * boundary a real corpus pipeline persists between jobs — durable
-  * storage, never executor memory, so nothing stays pinned in the
-  * block manager between queries (a `persist` here would survive the
-  * query that created it). Dirs are deleted on JVM exit.
+import scala.collection.mutable
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, CommutativeExpression, EqualNullSafe, EqualTo, ExprId, Expression, In, MultiCommutativeOp, NamedExpression, NamedLambdaVariable, UserDefinedExpression}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ObjectConsumer, ObjectProducer}
+import org.apache.spark.sql.catalyst.trees.TreeNode
+import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.sources.DataSourceRegister
+
+/** Staged frames, in two tiers.
+  *
+  * The RUN-SCOPED tier ([[frame]], [[tempDir]]) lives in a temp dir
+  * deleted on JVM exit: run-scoped intermediates and streaming
+  * checkpoints. Durable storage, never executor memory, so nothing
+  * stays pinned in the block manager between queries (a `persist` here
+  * would survive the query that created it).
+  *
+  * The DURABLE tier ([[durable]] and its format wrappers
+  * [[durableFrame]], [[durableScalar]], [[durableChunkFeed]]) lives
+  * under `target/graft-fixtures` and survives across JVMs: a stage is
+  * built once per corpus snapshot and every later job reads the
+  * checkpoint. A durable stage is served only to the derivation that
+  * built it (see [[durable]] for the key and SCALE.md for the rule and
+  * the inventory).
   *
   * Callers whose `build` depends on ANOTHER staged frame must resolve
   * that dependency BEFORE calling [[frame]] (hoist it to a local val):
@@ -32,20 +49,9 @@ object Stage {
   // One shutdown hook sweeps every staged dir (a hook thread per dir
   // would accumulate with the number of staged keys).
   private val cleanupDirs =
-    java.util.Collections.synchronizedList(
-      new java.util.ArrayList[java.nio.file.Path]())
-  Runtime.getRuntime.addShutdownHook(new Thread(() => {
-    import java.nio.file.{Files, Path}
-    import java.util.Comparator
-    cleanupDirs.forEach { d =>
-      if (Files.exists(d)) {
-        val walk = Files.walk(d)
-        try walk.sorted(Comparator.reverseOrder[Path]())
-          .forEach((p: Path) => Files.deleteIfExists(p))
-        finally walk.close()
-      }
-    }
-  }))
+    java.util.Collections.synchronizedList(new java.util.ArrayList[Path]())
+  Runtime.getRuntime.addShutdownHook(new Thread(() =>
+    cleanupDirs.forEach(d => deleteRecursively(d))))
 
   /** Temp dir removed on JVM exit (library embeddings don't leak /tmp).
     *
@@ -55,261 +61,310 @@ object Stage {
     * the local-SSD-state-dir decision a real cluster makes per
     * executor. Default stays the platform tmpdir.
     */
-  def tempDir(prefix: String): java.nio.file.Path = {
+  def tempDir(prefix: String): Path = {
     val d = sys.props.get("graft.tmp.root")
       .orElse(sys.env.get("SPARK_GRAFT_TMP_ROOT")) match {
       case Some(root) =>
-        val base = java.nio.file.Files.createDirectories(
-          java.nio.file.Paths.get(root))
-        java.nio.file.Files.createTempDirectory(base, prefix)
-      case None => java.nio.file.Files.createTempDirectory(prefix)
+        Files.createTempDirectory(Files.createDirectories(Paths.get(root)),
+          prefix)
+      case None => Files.createTempDirectory(prefix)
     }
     cleanupDirs.add(d)
     d
   }
 
-  /** Durable per-sf FIXTURE root under the build's target dir — for
-    * staged table layouts (bucketed tables, partitioned copies) that
-    * model "pay the write once when the tables land". Unlike
-    * [[tempDir]] these survive JVM exit on purpose: /tmp is swept
-    * between harness sessions, and a fixture rebuilt per JVM would
-    * charge every benched run for a one-time layout cost. Callers gate
-    * reuse on the writer's own `_SUCCESS` marker.
-    *
-    * The path bakes in a FINGERPRINT of the source dir's parquet
-    * listing (name, size, mtime): if the testdata is ever regenerated,
-    * every fixture key changes and the stale staged data can never be
-    * served — the `_SUCCESS` gate is then also a freshness gate.
+  /** Version of the durable write bodies. The derivation digest covers
+    * what a stage is computed FROM; it cannot see code that runs only
+    * inside a `write` body or behind an opaque input (the
+    * connected-component sweeps of `cc`/`cc-base`, the media encoders,
+    * a feed's file layout). Bump this on any change to such a body:
+    * every durable key changes and every stage is rebuilt.
     */
-  def fixtureDir(name: String, dir: String): String = {
+  val layoutVersion = 1
+
+  /** The one completion marker, written by [[durable]] after `write`
+    * returns. A directory without it is never served.
+    */
+  private[graft] val Marker = "_STAGED"
+
+  private val fixtureRoot = Paths.get("target", "graft-fixtures").toAbsolutePath
+
+  /** THE durable stage: build once, serve to the same derivation only.
+    *
+    * The directory is `target/graft-fixtures/<key>`, where the key
+    * ([[fixtureKey]]) folds in the name, the sf directory, a
+    * fingerprint of that directory's parquet listing, a JVM-stable
+    * digest of the analyzed plans of `derivation`, and
+    * [[layoutVersion]]. On a miss `write` fills a writer-unique staging
+    * dir, the marker is added, and one atomic rename publishes it: two
+    * JVMs that miss together (Verify and Bench started at once) each
+    * write their own copy and exactly one rename wins. The loser
+    * discards its copy and reads the winner's (builds are
+    * deterministic). File mtimes set inside the staging dir survive the
+    * rename.
+    *
+    * Fails closed: a fingerprint or digest that cannot be computed
+    * throws (naming the dir or the plan node), a `write` that throws
+    * publishes nothing, and a directory without the marker (a killed
+    * writer) is replaced, never read.
+    *
+    * `derivation` must be lazy: it is analyzed on every call, hit or
+    * miss, and never executed here. A stage whose result is computed
+    * eagerly (a `localCheckpoint`, an iterative fixpoint) or inside an
+    * opaque function (`mapPartitions`, a Scala UDF) passes its lazy
+    * INPUTS as `derivation`; the digest rejects such plans outright.
+    */
+  def durable(name: String, dir: String, derivation: Seq[DataFrame])
+             (write: Path => Unit): Path = {
+    val path = fixtureRoot.resolve(fixtureKey(name, dir, derivation))
+    if (!Files.exists(path.resolve(Marker))) {
+      val tmp = aside(path, "tmp")
+      try {
+        write(tmp)
+        Files.createDirectories(tmp)
+        Files.write(tmp.resolve(Marker), Array.emptyByteArray)
+        discardUnmarked(path)
+        try Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
+        catch {
+          case _: FileSystemException if Files.exists(path.resolve(Marker)) => ()
+        }
+      } finally deleteRecursively(tmp)
+    }
+    path
+  }
+
+  /** Durable parquet FRAME: the derived stages a corpus pipeline
+    * checkpoints between jobs (shingles, MinHash signatures, LSH
+    * pairs, component labels, rank spans, encoded media). The
+    * derivation is `build` itself unless `inputs` is given; a `build`
+    * that computes eagerly or opaquely must name its lazy `inputs`
+    * (see [[durable]]) and is then evaluated only on a miss.
+    */
+  def durableFrame(s: SparkSession, name: String, dir: String,
+                   inputs: Seq[DataFrame] = Nil)
+                  (build: => DataFrame): DataFrame = {
+    lazy val built = build
+    val derivation = if (inputs.nonEmpty) inputs else Seq(built)
+    val path = durable(name, dir, derivation) { p =>
+      built.write.mode("overwrite").parquet(p.toString)
+    }
+    s.read.parquet(path.toString)
+  }
+
+  /** Durable LONG sizing scalar (a feed's max doc id, a ts bound): the
+    * 1-row aggregate `scalar` runs once per key and the value is
+    * persisted, so every later call is a one-line file read and no
+    * Spark job. Without this, a sizing aggregate that a feed's chunk
+    * plans embed would run on every invocation, because the plans must
+    * be built to digest the feed. The key digests the whole aggregate,
+    * so editing e.g. max→min re-computes.
+    */
+  def durableScalar(name: String, dir: String)
+                   (scalar: DataFrame): Long = {
+    val p = durable(name, dir, Seq(scalar)) { stage =>
+      // exactly one non-null row, or fail NAMING the fixture — a bare
+      // head() on an empty/null aggregate throws an anonymous
+      // NoSuchElementException/NPE with no hint which scalar broke,
+      // and a >1-row frame would silently use an arbitrary row
+      val rows = scalar.take(2)
+      require(rows.length == 1,
+        s"durableScalar($name): sizing aggregate returned ${rows.length} rows (want exactly 1)")
+      require(!rows(0).isNullAt(0),
+        s"durableScalar($name): sizing aggregate is NULL (empty input?)")
+      Files.createDirectories(stage)
+      Files.write(stage.resolve("value"),
+        rows(0).getLong(0).toString.getBytes("UTF-8"))
+    }
+    new String(Files.readAllBytes(p.resolve("value")), "UTF-8").trim.toLong
+  }
+
+  /** Durable STREAM FEED under `<stage>/feed`: each chunk is written as
+    * one coalesced file with a PINNED ascending mtime, so the file
+    * source's arrival order is part of the staged content and not a
+    * race on write times. Feed construction (a filtered pass and a
+    * single-threaded write per chunk) is paid once per key instead of
+    * on every streaming run. `chunks` is by-name: a hit builds the
+    * (lazy) chunk plans to digest them but never executes them.
+    * Checkpoints and outputs stay per-run in [[tempDir]].
+    */
+  def durableChunkFeed(name: String, dir: String)
+                      (chunks: => Seq[DataFrame]): String = {
+    val cs = chunks
+    durable(name, dir, cs) { stage =>
+      val feed = stage.resolve("feed")
+      val stamped = mutable.Set[String]()
+      cs.zipWithIndex.foreach { case (c, idx) =>
+        c.coalesce(1).write.mode("append").parquet(feed.toString)
+        feed.toFile.listFiles().foreach { f =>
+          val n = f.getName
+          if (!n.startsWith("_") && !n.startsWith(".") && stamped.add(n))
+            require(f.setLastModified(1700000000000L + idx * 600000L),
+              s"mtime pin failed for $f — arrival order would race")
+        }
+      }
+    }.resolve("feed").toString
+  }
+
+  /** The only place a fixture key is formed: `<name>-<sf dir>-
+    * <testdata fingerprint>-<digest of layoutVersion and the
+    * derivation's plans>`. The sf dir stays readable in the name so a
+    * test can sweep its own keys.
+    */
+  private def fixtureKey(name: String, dir: String,
+                         derivation: Seq[DataFrame]): String = {
+    val md = java.security.MessageDigest.getInstance("SHA-256")
+    (s"layout=$layoutVersion" +: derivation.map(df =>
+        planDigest(df.queryExecution.analyzed)))
+      .foreach(p => md.update(s"$p\n".getBytes("UTF-8")))
+    val digest = md.digest().take(8).map("%02x".format(_)).mkString
     val sfKey = dir.replaceAll("[^A-Za-z0-9]", "_")
-    val p = java.nio.file.Paths.get("target", "graft-fixtures",
-      s"$name-$sfKey-${fingerprints.computeIfAbsent(dir, dirFingerprint)}")
-      .toAbsolutePath
-    java.nio.file.Files.createDirectories(p.getParent)
-    p.toString
+    s"$name-$sfKey-${fingerprints.computeIfAbsent(dir, dirFingerprint)}-$digest"
   }
 
   private val fingerprints =
     new java.util.concurrent.ConcurrentHashMap[String, String]()
 
-  private def dirFingerprint(dir: String): String = try {
+  /** Digest of the sf dir's parquet listing (name, size, mtime): a
+    * regenerated testdata set changes every key. Throws, naming the
+    * dir, when the listing fails: a shared fallback value would give
+    * every unreadable dir the same key.
+    */
+  private def dirFingerprint(dir: String): String = {
     import scala.jdk.CollectionConverters._
-    val listing = java.nio.file.Files.list(java.nio.file.Paths.get(dir))
-    val entries =
+    val entries = try {
+      val listing = Files.list(Paths.get(dir))
       try listing.iterator().asScala
         .filter(_.getFileName.toString.endsWith(".parquet"))
         .map { p =>
-          val sz = java.nio.file.Files.size(p)
-          val mt = java.nio.file.Files.getLastModifiedTime(p).toMillis
-          s"${p.getFileName}:$sz:$mt"
+          s"${p.getFileName}:${Files.size(p)}:${Files.getLastModifiedTime(p).toMillis}"
         }.toSeq.sorted.mkString("|")
       finally listing.close()
+    } catch {
+      case e: java.io.IOException =>
+        throw new IllegalStateException(
+          s"cannot fingerprint testdata dir $dir for a durable stage key", e)
+    }
     java.security.MessageDigest.getInstance("MD5")
       .digest(entries.getBytes("UTF-8"))
       .take(4).map("%02x".format(_)).mkString
-  } catch { case _: Throwable => "nofp" }
-
-  /** Durable `_SUCCESS`-gated staged FRAME under [[fixtureDir]]: the
-    * first caller per (name, sf, testdata fingerprint) — across JVMs,
-    * not just within one — builds and writes the parquet; every later
-    * caller pays a narrow scan. This is the persistence tier for
-    * derived stages a real corpus pipeline checkpoints between jobs
-    * (shingle frames, MinHash signatures, LSH candidate pairs,
-    * component labels, rank-span CDFs): at 100 TB these are computed
-    * once per corpus snapshot and every downstream job reads the
-    * checkpoint. [[frame]] remains the per-JVM tier for run-scoped
-    * intermediates.
-    */
-  def durableFrame(s: SparkSession, name: String, dir: String)
-                  (build: => DataFrame): DataFrame = {
-    val path = durableDir(name, dir, "_SUCCESS") { tmp =>
-      build.write.mode("overwrite").parquet(tmp.toString)
-    }
-    s.read.parquet(path.toString)
   }
 
-  /** Durable LONG sizing scalar (a feed's max doc id, a ts bound):
-    * the 1-row aggregate `scalar` executes once per (name × sf ×
-    * testdata fingerprint × derivation digest) and the value is
-    * persisted; every later call is a one-line file read — no Spark
-    * job at all. Without this, a sizing aggregation hoisted into (or
-    * above) a [[durableChunkFeed]] thunk executes on EVERY invocation
-    * even on fixture hits, because the chunk plans that embed the
-    * scalar must be built to compute the feed's plan digest. The
-    * fixture key digests the SCALAR's own analyzed plan (the whole
-    * derivation, aggregate included — not just its input), so editing
-    * e.g. max→min re-computes instead of serving the stale value.
+  /** JVM-stable digest of an analyzed plan: a content hash of its
+    * canonical form. `semanticHash` is not stable across JVMs:
+    *  - a file relation hashes its `FileFormat`, whose hashCode is its
+    *    class's identity hash. Here it is hashed as its format short
+    *    name, sorted root paths, schema and options;
+    *  - a commutative chain (`a + b + c`) canonicalizes to a
+    *    `MultiCommutativeOp` that hashes its operator `Class` by
+    *    identity, and canonicalization orders the operands of
+    *    commutative expressions (and `EqualTo` sides and `In` lists) by
+    *    those hashes. Here such operands are hashed as an unordered
+    *    multiset, flattened across nested nodes of the same operator.
+    * Anything that hashes by identity and cannot be described (an RDD,
+    * a closure, a value without a content hashCode) throws: the stage
+    * must then pass its lazy inputs as the derivation.
     */
-  def durableScalar(name: String, dir: String)
-                   (scalar: DataFrame): Long = {
-    val p = durableDir(s"$name-p${planDigest(Seq(scalar))}", dir,
-      "_SCALAR") { stage =>
-        // Spark writers create their staging dir themselves; a bare
-        // file write doesn't — make it first.
-        java.nio.file.Files.createDirectories(stage)
-        // exactly one non-null row, or fail NAMING the fixture — a bare
-        // head() on an empty/null aggregate throws an anonymous
-        // NoSuchElementException/NPE with no hint which scalar broke,
-        // and a >1-row frame would silently use an arbitrary row
-        val rows = scalar.take(2)
-        require(rows.length == 1,
-          s"durableScalar($name): sizing aggregate returned ${rows.length} rows (want exactly 1)")
-        require(!rows(0).isNullAt(0),
-          s"durableScalar($name): sizing aggregate is NULL (empty input?)")
-        java.nio.file.Files.write(stage.resolve("_SCALAR"),
-          rows(0).getLong(0).toString.getBytes("UTF-8"))
+  private[queries] def planDigest(plan: LogicalPlan): String = {
+    plan.foreachWithSubqueries {
+      case n @ (_: LogicalRDD | _: ExternalRDD[_] | _: ObjectProducer |
+                _: ObjectConsumer) => identityHashed(n.nodeName)
+      case n => n.expressions.foreach(_.foreach {
+        case u: UserDefinedExpression => identityHashed(u.name)
+        case _ => ()
+      })
     }
-    new String(java.nio.file.Files.readAllBytes(p.resolve("_SCALAR")),
-      "UTF-8").trim.toLong
+    stableHash(plan.canonicalized).toHexString
   }
 
-  /** Durable `_SUCCESS`-gated staged DIRECTORY under [[fixtureDir]] —
-    * the general form [[durableFrame]] rides on, for fixtures that are
-    * not a single parquet frame (chunked streaming feeds with pinned
-    * mtimes, media files): `build` populates a writer-unique staging
-    * dir — file mtimes set inside it survive the publish rename — and
-    * the atomic-rename protocol below makes exactly one writer win.
-    * `marker` is the file whose presence gates reuse; builders whose
-    * last step is NOT a Spark parquet write must create it themselves.
-    */
-  def durableDir(name: String, dir: String, marker: String)
-                (build: java.nio.file.Path => Unit): java.nio.file.Path = {
-    val path = java.nio.file.Paths.get(fixtureDir(name, dir))
-    if (!java.nio.file.Files.exists(path.resolve(marker))) {
-      // Build into a writer-unique staging dir and atomically rename
-      // into place: two JVMs that both see a missing marker (e.g.
-      // Verify and Bench started together) each write their own temp
-      // dir, and exactly one rename publishes — interleaved
-      // delete/commit into a SHARED dir could otherwise leave a
-      // marker over mixed part files that every later run then
-      // durably serves. Loser (rename fails because the winner's dir
-      // exists) just discards its temp and reads the published copy.
-      val tmp = path.resolveSibling(
-        s"${path.getFileName}.tmp-${java.lang.ProcessHandle.current().pid()}-${System.nanoTime()}")
-      build(tmp)
-      require(java.nio.file.Files.exists(tmp.resolve(marker)),
-        s"durableDir($name): build completed without creating $marker")
-      // a stale un-markered dir (killed writer of the pre-atomic
-      // era) blocks the rename without ever becoming valid — clear it.
-      // NOT an in-place recursive delete: between the marker check
-      // and the delete a concurrent JVM can publish a valid fixture,
-      // which an in-place delete would then destroy mid-read (TOCTOU).
-      // Instead move the dir ASIDE atomically to a writer-unique trash
-      // name — readers can never see a half-deleted `path` — then
-      // re-check the moved dir: if it turns out to be a published
-      // fixture we raced with, put it back (or drop it if the winner
-      // has already re-published an equivalent copy — builds are
-      // deterministic); only a genuinely stale dir gets deleted.
-      if (java.nio.file.Files.exists(path) &&
-          !java.nio.file.Files.exists(path.resolve(marker))) {
-        val trash = path.resolveSibling(
-          s"${path.getFileName}.trash-${java.lang.ProcessHandle.current().pid()}-${System.nanoTime()}")
-        try {
-          java.nio.file.Files.move(path, trash,
-            java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-          if (java.nio.file.Files.exists(trash.resolve(marker))) {
-            try java.nio.file.Files.move(trash, path,
-              java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-            catch { case _: Throwable => deleteRecursively(trash) }
-          } else deleteRecursively(trash)
-        } catch { case _: Throwable => () }
-      }
-      try java.nio.file.Files.move(tmp, path,
-        java.nio.file.StandardCopyOption.ATOMIC_MOVE)
-      catch {
-        case _: java.nio.file.FileSystemException
-          if java.nio.file.Files.exists(path.resolve(marker)) =>
-          deleteRecursively(tmp)
-      }
-    }
-    path
-  }
+  private def identityHashed(what: String): Nothing =
+    throw new IllegalArgumentException(
+      s"durable stage derivation contains $what, which hashes by identity " +
+        "(an RDD, a closure or an object); pass its lazy inputs as the " +
+        "derivation instead")
 
-  /** Digest of the ANALYZED plans behind a set of frames, folded into
-    * a fixture key: the testdata fingerprint invalidates a fixture
-    * when the SOURCE changes, this invalidates it when the QUERY's
-    * own derivation changes (a cut timestamp, a chunk count, a
-    * projection) — without it, editing a feed's parameters would
-    * silently keep serving the stale staged content. `semanticHash`
-    * runs on the canonicalized plan (normalized expression ids), so
-    * the digest is stable across JVMs for the same derivation and
-    * costs only plan analysis (milliseconds), never execution.
-    */
-  private def planDigest(frames: Seq[DataFrame]): String = {
-    val h = frames.foldLeft(17) { (acc, df) =>
-      acc * 31 + df.queryExecution.analyzed.semanticHash()
+  private def stableHash(v: Any): Int = {
+    import scala.util.hashing.MurmurHash3.{orderedHash, unorderedHash}
+    def node(name: String, parts: Iterator[Any]): Int =
+      orderedHash(Iterator.single(name.##) ++ parts.map(stableHash))
+    def unordered(name: String, operands: Seq[Expression]): Int =
+      orderedHash(Seq(name.##, unorderedHash(operands.map(stableHash))))
+    def operator(e: Expression): Option[Class[_]] = e match {
+      case m: MultiCommutativeOp => Some(m.opCls)
+      case c: CommutativeExpression => Some(c.getClass)
+      case _ => None
     }
-    (h & 0x7fffffff).toHexString
-  }
-
-  /** Durable pre-written STREAM-FEED fixture: the chunk DataFrames are
-    * written once per (name × sf × testdata fingerprint × chunk-plan
-    * digest) as one coalesced file each with PINNED ascending mtimes
-    * (the file source's arrival order — previously implied by
-    * sequential write times, now an explicit property of the staged
-    * content that the publish rename preserves), and every later run
-    * re-reads the published feed. Feed construction was charged to
-    * EVERY streaming query run (a filtered pass + single-threaded
-    * write per chunk — at ×100 it dominated the query itself); it is
-    * a pure function of the source table and the chunk derivations,
-    * both of which the key now covers. `chunks` is by-name: reuse
-    * still builds the (lazy) DataFrames to compute the plan digest,
-    * but never executes them. Checkpoints and outputs stay per-run in
-    * [[tempDir]].
-    */
-  def durableChunkFeed(name: String, dir: String)
-                      (chunks: => Seq[DataFrame]): String = {
-    val cs = chunks
-    durableDir(s"$name-p${planDigest(cs)}", dir, "_FEED_OK") { stage =>
-      val feed = stage.resolve("feed")
-      val fdir = feed.toFile
-      val stamped = scala.collection.mutable.Set[String]()
-      var idx = 0
-      cs.foreach { c =>
-        c.coalesce(1).write.mode("append").parquet(feed.toString)
-        fdir.listFiles().foreach { f =>
-          val n = f.getName
-          if (!n.startsWith("_") && !n.startsWith(".") &&
-              !stamped.contains(n)) {
-            require(f.setLastModified(1700000000000L + idx * 600000L),
-              s"mtime pin failed for $f — arrival order would race")
-            stamped += n
+    def operands(e: Expression, op: Class[_]): Seq[Expression] =
+      (e match {
+        case m: MultiCommutativeOp => m.operands
+        case _ => e.children
+      }).flatMap(c => if (operator(c).contains(op)) operands(c, op) else Seq(c))
+    v match {
+      case null => 0
+      case e: Expression if operator(e).nonEmpty =>
+        val op = operator(e).get
+        unordered(op.getName, operands(e, op))
+      case e: BinaryComparison if e.isInstanceOf[EqualTo] ||
+          e.isInstanceOf[EqualNullSafe] => unordered(e.nodeName, e.children)
+      case i: In => node("In", Iterator(i.value, unordered("list", i.list)))
+      case l: NamedLambdaVariable =>
+        node("lambda", Iterator(l.dataType, l.nullable, l.exprId))
+      case r: LogicalRelation => r.relation match {
+        case fs: HadoopFsRelation =>
+          val format = fs.fileFormat match {
+            case d: DataSourceRegister => d.shortName()
+            case f => f.getClass.getName
           }
-        }
-        idx += 1
+          node("files", Iterator(format,
+            fs.location.rootPaths.map(_.toString).sorted, fs.schema.json,
+            fs.bucketSpec, fs.options.toSeq.sorted, r.output))
+        case other => identityHashed(other.getClass.getName)
       }
-      java.nio.file.Files.write(stage.resolve("_FEED_OK"),
-        Array.emptyByteArray)
-    }.resolve("feed").toString
+      // an attribute's or alias's id sits outside its product fields
+      case n: NamedExpression =>
+        node(n.nodeName, n.productIterator ++ Iterator(n.exprId))
+      case t: TreeNode[_] => node(t.nodeName, t.productIterator)
+      case id: ExprId => id.id.##
+      case c: Class[_] => c.getName.##
+      case e: java.lang.Enum[_] => node(e.getClass.getName, Iterator(e.name))
+      case m: scala.collection.Map[_, _] => unorderedHash(m.map(stableHash))
+      case s: scala.collection.Set[_] => unorderedHash(s.toSeq.map(stableHash))
+      case it: Iterable[_] => orderedHash(it.map(stableHash))
+      case a: Array[_] => orderedHash(a.map(stableHash))
+      case p: Product => node(p.productPrefix, p.productIterator)
+      case x if x.getClass.getMethod("hashCode").getDeclaringClass ==
+          classOf[Object] => identityHashed(x.getClass.getName)
+      case x => x.##
+    }
   }
 
-  /** Durable MULTI-SIDED feed fixture (two-or-more named input dirs —
-    * the stream-stream join shape): each side is written once under
-    * `<fixture>/<sideName>`, keyed like [[durableChunkFeed]] by the
-    * sides' plan digest so parameter edits can never serve a stale
-    * feed. Returns the fixture root; side paths are
-    * `s"$root/<sideName>"`.
+  /** A writer-unique sibling of `path` (staging copy or trash). */
+  private def aside(path: Path, what: String): Path = path.resolveSibling(
+    s"${path.getFileName}.$what-${ProcessHandle.current().pid()}-${System.nanoTime()}")
+
+  /** Clear an unmarked dir at `path` (a killed writer) so the publish
+    * rename can land. Not an in-place delete: a concurrent JVM may
+    * publish between the marker check and the delete, so the dir is
+    * first moved aside atomically, and put back if it turns out to be
+    * marked (or dropped, if the winner has already re-published).
     */
-  def durableSplitFeed(name: String, dir: String)
-                      (sides: => Seq[(String, DataFrame)]): String = {
-    val ss = sides
-    durableDir(s"$name-p${planDigest(ss.map(_._2))}", dir, "_FEED_OK") {
-      stage =>
-        ss.foreach { case (sub, df) =>
-          df.coalesce(1).write.parquet(stage.resolve(sub).toString)
-        }
-        java.nio.file.Files.write(stage.resolve("_FEED_OK"),
-          Array.emptyByteArray)
-    }.toString
-  }
+  private def discardUnmarked(path: Path): Unit =
+    if (Files.exists(path) && !Files.exists(path.resolve(Marker))) {
+      val trash = aside(path, "trash")
+      val moved = try {
+        Files.move(path, trash, StandardCopyOption.ATOMIC_MOVE); true
+      } catch { case _: NoSuchFileException => false }
+      if (moved && Files.exists(trash.resolve(Marker)))
+        try Files.move(trash, path, StandardCopyOption.ATOMIC_MOVE)
+        catch { case _: FileSystemException => () }
+      deleteRecursively(trash)
+    }
 
-  private def deleteRecursively(p: java.nio.file.Path): Unit = {
+  private def deleteRecursively(p: Path): Unit = {
     import scala.jdk.CollectionConverters._
-    if (java.nio.file.Files.exists(p)) {
-      val walk = java.nio.file.Files.walk(p)
-      try walk.sorted(java.util.Comparator.reverseOrder())
-        .iterator().asScala.foreach(java.nio.file.Files.deleteIfExists(_))
+    if (Files.exists(p)) {
+      val walk = Files.walk(p)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .iterator().asScala.foreach(Files.deleteIfExists(_))
       finally walk.close()
     }
   }

@@ -134,23 +134,15 @@ object Surface29Queries {
     // 4 cells ⇒ the scan may touch at most half the corpus layout.
     "e178_ivf_pruned_probe" -> ((s, dir) => {
       val cents = Similarity.syntheticCentroids(SimilarityQueries.ivfN, 64)
-      // the staged layout is a pure function of the centroid set, so
-      // the fixture key digests it (the EventFeed n-chunks lesson:
-      // every parameter the staged bytes depend on must be in the
-      // key, or an edit serves stale data); durableDir supplies the
-      // atomic staging-dir/rename protocol two racing JVMs need
-      val cdig = java.security.MessageDigest.getInstance("MD5")
-        .digest(cents.flatten.mkString(",").getBytes("UTF-8"))
-        .take(4).map("%02x".format(_)).mkString
-      val fix = Stage.durableDir(s"e178-ivf-layout-$cdig", dir,
-          "_LAYOUT_OK") { st =>
-        VectorIndex.build(t(s, dir, "embeddings"), "embedding", cents,
+      // the staged layout is a pure function of the centroid set: the
+      // cell assignment carries the centroids as literals, so the
+      // stage key digests them
+      val emb = t(s, dir, "embeddings")
+      val corpus = Stage.durable("e178-ivf-layout", dir,
+          Seq(VectorIndex.assign(emb, "embedding", cents))) { st =>
+        VectorIndex.build(emb, "embedding", cents,
           st.resolve("embeddings_by_cell").toString)
-        java.nio.file.Files.write(st.resolve("_LAYOUT_OK"),
-          Array.emptyByteArray)
-        ()
-      }
-      val corpus = fix.resolve("embeddings_by_cell").toString
+      }.resolve("embeddings_by_cell").toString
       val (q, qCells) = probeCells(s, dir, cents, 2)
       val pruned = VectorIndex.probe(s, corpus, q, qCells, 10,
         "vec_id", "embedding", extraFilter = col("vec_id") =!= 0)
@@ -188,11 +180,8 @@ object Surface29Queries {
     // contract (same oracle text).
     "e180_components_delta" -> ((s, dir) => {
       val pairs = DedupQueries.candidatePairs(s, dir)
-      val baseLabels = Stage.durableFrame(s, "cc-base", dir) {
-        Dedup.connectedComponents(
-          pairs.where(col("id_a") % 10 =!= 0 && col("id_b") % 10 =!= 0),
-          "id_a", "id_b")
-      }
+      val baseLabels = s.read.parquet(
+        DedupQueries.baseComponentLabels(s, dir).toString)
       val deltaEdges = pairs
         .where(col("id_a") % 10 === 0 || col("id_b") % 10 === 0)
       Dedup.connectedComponentsDelta(baseLabels, deltaEdges,
@@ -219,11 +208,7 @@ object Surface29Queries {
     // verbatim.
     "c47_stream_components" -> ((s, dir) => {
       val pairs = DedupQueries.candidatePairs(s, dir)
-      val basePath = Stage.durableDir("cc-base", dir, "_SUCCESS") { stage =>
-        Dedup.connectedComponents(
-          pairs.where(col("id_a") % 10 =!= 0 && col("id_b") % 10 =!= 0),
-          "id_a", "id_b").write.mode("overwrite").parquet(stage.toString)
-      }
+      val basePath = DedupQueries.baseComponentLabels(s, dir)
       val deltaEdges = pairs
         .where(col("id_a") % 10 === 0 || col("id_b") % 10 === 0)
       val feed = Stage.durableChunkFeed("feed-c47", dir)(Seq(
