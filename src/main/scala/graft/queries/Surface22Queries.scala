@@ -1,7 +1,9 @@
 package graft.queries
 
+import graft.operators.Bpe
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import scala.reflect.runtime.universe.TypeTag
 
 /** Round-13 wave: the tokenizer trains (and applies) for real, the
   * rank-correlation pair completes, the robust/concentration
@@ -11,17 +13,15 @@ import org.apache.spark.sql.functions._
   *
   *  - `e113_bpe_train` — ITERATIVE BPE merge training: N real merge
   *    rounds over the corpus word histogram, each round counting
-  *    adjacent symbol pairs (one hash aggregate over the word-TYPE
-  *    frame, weighted by corpus frequency), collecting the single
-  *    winning pair (the model state — one row), and re-broadcasting
-  *    it into the next round's symbol-merge projection. The
-  *    `trainIvfCentroids` derive-then-apply cycle applied to the
-  *    tokenizer itself (reference analog: the transform loop's
-  *    derive-then-apply discipline, `etl.py:146-158`); extends the
-  *    one-pass `e42_bpe_pairs` candidate scan to an actual trainer.
-  *    At 100 TB the corpus is tokenized ONCE into the durable word
-  *    histogram (the checkpoint a tokenizer-training pipeline
-  *    persists); every merge round then runs on the type frame,
+  *    adjacent symbol pairs weighted by corpus frequency, taking the
+  *    winning pair and merging it into the next round's symbol state
+  *    ([[Bpe]], run in one Spark task). The derive-then-apply cycle
+  *    applied to the tokenizer itself (reference analog: the transform
+  *    loop's derive-then-apply discipline, `etl.py:146-158`); extends
+  *    the one-pass `e42_bpe_pairs` candidate scan to an actual
+  *    trainer. At 100 TB the corpus is tokenized ONCE into the durable
+  *    word histogram (the checkpoint a tokenizer-training pipeline
+  *    persists); the whole merge schedule then runs on the type frame,
   *    whose cardinality is vocabulary-bounded, not corpus-bounded.
   *  - `e115_bpe_apply` — the trained merge table applied back to the
   *    type frame; fertility / segmentation stats (the vocab-sizing
@@ -51,30 +51,16 @@ import org.apache.spark.sql.functions._
 object Surface22Queries {
   import Tables._
 
-  /** Number of BPE merge rounds e113 trains — deep enough (32) that
-    * the merge table is well past the two-character regime (merged
-    * symbols winning later rounds, chains of chains) and that the
-    * trainer's linearized state lineage is actually exercised: each
-    * round is one type-frame aggregate, and the symbol state is
-    * checkpointed every [[bpeCheckpointEvery]] merges so per-round
-    * cost is flat in the round index (see [[bpeMerges]]).
+  /** Number of BPE merge rounds e113 and e164 train — deep enough (32)
+    * that the merge table is well past the two-character regime (merged
+    * symbols winning later rounds, chains of chains).
     */
   val bpeIters = 32
-
-  /** Checkpoint cadence for the trainer's symbol state. Without the
-    * cut, round k's aggregate re-executes replaces 1..k−1 over the
-    * type frame — O(k²) total replace work and a lineage the analyzer
-    * re-walks per round; with it, replay since the last cut is
-    * bounded by the cadence, so training is linear in the merge
-    * count. 16 trades replay (≤16 replaces, all narrow map steps)
-    * against staged-parquet writes.
-    */
-  val bpeCheckpointEvery = 16
 
   /** Batched-BPE schedule parameters (e177): [[bpeBatchPasses]] passes
     * of up to [[bpeBatchM]] merges each, candidates drawn from the
     * per-pass top-[[bpeBatchWindow]] ranked pairs. 8×4 = the same
-    * 32-merge vocab as [[bpeIters]], at 1/4 the job count.
+    * 32-merge vocab as [[bpeIters]].
     */
   val bpeBatchPasses = 8
   val bpeBatchM = 4
@@ -120,26 +106,21 @@ object Surface22Queries {
             col("words_total").cast("double")).as("fertility"))
     }),
 
-    // BATCHED BPE training — kills the one-job-per-merge scale
-    // ceiling of e113: each pass ranks the pair histogram ONCE, then
-    // applies up to bpeBatchM pairwise-SYMBOL-DISJOINT merges from the
-    // top-bpeBatchWindow ranked window in one chained-replace
-    // projection. The schedule is EXACT, not approximate: a pair
-    // (c,d) disjoint from (a,b) has its adjacency count invariant
-    // under applying (a,b) — merging a,b into `ab` can neither create
-    // a new c–d adjacency (the merged symbol still sits between its
-    // neighbors) nor destroy one (no c/d occurrence participates in
-    // an " a  b " window) — so every applied merge's recorded count
-    // is its true count at application time (SELECTION rule, shared
-    // verbatim with the oracle: a window pair survives iff NO
-    // strictly higher-ranked window pair shares a symbol with it;
-    // first bpeBatchM survivors by rank apply, in rank order). Rank 1
-    // always survives, so every pass makes progress. Jobs/merge =
-    // 1/bpeBatchM (one type-frame aggregate + one window-sized
-    // collect per pass) vs e113's 1 — at a production 32k-merge vocab
-    // that is the difference between 8k and 32k sequential Spark
-    // jobs. The merge table matches e113's (merge_idx, left, right,
-    // n) semantics, so the e115 apply chain consumes either.
+    // BATCHED BPE training — e113's merge-table shape from a different
+    // schedule: each pass ranks the pair histogram ONCE, then applies
+    // up to bpeBatchM pairwise-SYMBOL-DISJOINT merges from the
+    // top-bpeBatchWindow ranked window in one chained replace. The
+    // schedule is EXACT, not approximate: a pair (c,d) disjoint from
+    // (a,b) has its adjacency count invariant under applying (a,b) —
+    // merging a,b into `ab` can neither create a new c–d adjacency (the
+    // merged symbol still sits between its neighbors) nor destroy one
+    // (no c/d occurrence participates in an " a  b " window) — so every
+    // applied merge's recorded count is its true count at application
+    // time (SELECTION rule, shared verbatim with the oracle: see
+    // Bpe.trainBatched). Rank 1 always survives, so every pass makes
+    // progress. Training is one Spark task, like e113's. The merge
+    // table matches e113's (merge_idx, left, right, n) semantics, so
+    // the e115 apply chain consumes either.
     "e177_bpe_batched" -> ((s, dir) => {
       val rows = batchedMergesFor(s, dir).map {
         case (i, p, a, b, n) => (i, p, a, b, a + b, n)
@@ -155,9 +136,9 @@ object Surface22Queries {
     // applied to the FULL type frame; the report is e115's
     // segmentation panel plus the sampled histogram's type count (the
     // evidence the training leg really ran on the slice). Cost shape:
-    // every training round aggregates a quarter-size type frame, and
-    // the apply pass is unchanged — at corpus scale the tokenize pass
-    // over 3/4 of the documents is skipped entirely during training.
+    // training reads a quarter-size type frame, and the apply pass is
+    // unchanged — at corpus scale the tokenize pass over 3/4 of the
+    // documents is skipped entirely during training.
     "e164_bpe_sampled" -> ((s, dir) => {
       val ms = sampledMergesFor(s, dir)
       val seg = ms.foldLeft(initialSymbolState(s, dir)) { (st, m) =>
@@ -501,32 +482,6 @@ object Surface22Queries {
             .as("tau_b"))
     }))
 
-  // ---- e113: BPE merge trainer ----
-
-  /** N BPE merge rounds over the corpus word histogram. Returns
-    * (round, left, right, weighted pair count) per round.
-    *
-    * Symbol-state encoding: each word's current segmentation is a
-    * DOUBLE-SPACE-joined string padded with two spaces at each end
-    * ("␣␣a␣␣b␣␣…"), so applying merge (a,b) is ONE engine-native
-    * `replace(s, "␣a␣␣b␣", "␣ab␣")`: the pattern anchors each symbol
-    * with one space per side (no token-suffix false matches) while
-    * consuming only the INNER half of every double separator, so
-    * left-to-right non-overlapping replace — the semantics of both
-    * Spark's and the oracle's `replace` — is exactly BPE's greedy
-    * merge scan, chains included ("a a a" → "aa a", "a b a b" →
-    * "ab ab"). Tokens are lowercase alphanumerics
-    * (TextAnalysis.tokens), so the pattern literals need no escaping.
-    *
-    * Each round: one hash aggregate over the type frame (adjacent
-    * pairs exploded, weighted by word frequency), TakeOrdered(1) with
-    * the full (count desc, left, right) tie-break, a one-row collect
-    * (the model), and a narrow projection applying the merge — the
-    * broadcast-train cycle, with state that is a single winning pair
-    * instead of a centroid matrix. The word histogram itself is
-    * durably staged per (sf × fingerprint): at 100 TB the corpus is
-    * tokenized once; training touches only word TYPES.
-    */
   /** `transformWithState` requires the RocksDB state-store provider;
     * scope the conf flip to the streaming run (c23's discipline).
     */
@@ -556,15 +511,15 @@ object Surface22Queries {
   private def benfordP(d: Int): Double = math.log10(1.0 + 1.0 / d)
 
   /** The trained merge table, TRAINED ONCE per testdata dir per JVM
-    * and shared by `e113_bpe_train` and `e115_bpe_apply` (each
-    * training round is a type-frame aggregate + collect — the shared-
+    * and shared by `e113_bpe_train` and `e115_bpe_apply` (the shared-
     * model discipline of `Surface20Queries.trainedCentroids`).
     */
   private val trainedMerges = new java.util.concurrent.ConcurrentHashMap[
     String, Seq[(Long, String, String, Long)]]()
   private def mergesFor(s: SparkSession, dir: String)
       : Seq[(Long, String, String, Long)] =
-    trainedMerges.computeIfAbsent(dir, _ => bpeMerges(s, dir, bpeIters))
+    trainedMerges.computeIfAbsent(dir,
+      _ => bpeMerges(initialSymbolState(s, dir), bpeIters))
 
   /** e164's merge table: the same trainer run on the md5-sampled
     * quarter subcorpus (the production pattern — at 100 TB you train
@@ -574,7 +529,7 @@ object Surface22Queries {
   private def sampledMergesFor(s: SparkSession, dir: String)
       : Seq[(Long, String, String, Long)] =
     trainedMerges.computeIfAbsent(dir + "#s4",
-      _ => bpeMerges(s, dir, bpeIters, sampled = true))
+      _ => bpeMerges(initialSymbolState(s, dir, sampled = true), bpeIters))
 
   /** e177's batched merge table — (global merge_idx, pass, left,
     * right, pair count) — trained once per dir like [[mergesFor]].
@@ -587,7 +542,7 @@ object Surface22Queries {
   private def batchedMergesFor(s: SparkSession, dir: String)
       : Seq[(Long, Long, String, String, Long)] =
     trainedBatchedMerges.computeIfAbsent(dir,
-      _ => bpeMergesBatched(initialSymbolState(s, dir), dir,
+      _ => bpeMergesBatched(initialSymbolState(s, dir),
         bpeBatchPasses, bpeBatchM, bpeBatchWindow))
 
   /** Deterministic 1-in-4 document sample: exact integer from the md5
@@ -621,106 +576,29 @@ object Surface22Queries {
       col("cnt"))
   }
 
-  private def bpeMerges(s: SparkSession, dir: String, iters: Int,
-      sampled: Boolean = false): Seq[(Long, String, String, Long)] = {
-    var state = initialSymbolState(s, dir, sampled)
-    val out = Seq.newBuilder[(Long, String, String, Long)]
-    for (k <- 1 to iters) {
-      val top = state
-        .select(col("cnt"), split(trim(col("s")), "  ").as("tk"))
-        .select(col("cnt"), explode(arrays_zip(
-          slice(col("tk"), lit(1), size(col("tk")) - 1).as("a"),
-          slice(col("tk"), lit(2), size(col("tk")) - 1).as("b"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("a"), col("b"))
-        .limit(1).collect()(0)
-      val (a, b, n) = (top.getString(0), top.getString(1), top.getLong(2))
-      out += ((k.toLong, a, b, n))
-      state = state.withColumn("s",
-        replace(col("s"), lit(s" $a  $b "), lit(s" $a$b ")))
-      // linearize the state lineage: cut it to staged parquet every
-      // bpeCheckpointEvery merges (per-JVM stage — the durable
-      // artifact is the merge TABLE in trainedMerges; replaying ≤16
-      // narrow replaces per JVM is cheaper than another fixture
-      // family). The key folds in the testdata dir so two dirs never
-      // share a cut.
-      if (k % bpeCheckpointEvery == 0 && k < iters) {
-        val cut = state
-        val sk = if (sampled) s"bpe-state-s4-$dir-$k"
-          else s"bpe-state-$dir-$k"
-        state = Stage.frame(s, sk, "graft-bpe-")(cut)
-      }
-    }
-    out.result()
-  }
-
-  /** Batched-BPE trainer (e177): per pass, ONE type-frame pair
-    * aggregate + ONE `window`-row TakeOrdered collect (the model
-    * state), then a driver-side disjointness selection over the
-    * collected window and a single chained-replace projection
-    * applying the whole batch. See the e177 query comment for why the
-    * schedule is exact (disjoint pairs' counts are invariant under
-    * each other's application) and for the selection rule the oracle
-    * replays verbatim.
-    *
-    * `state0` is the char-split symbol state over the word histogram
-    * ([[initialSymbolState]] in the judged path; specs feed a toy
-    * frame); `key` scopes the lineage-cut stage names.
-    *
-    * Returns (global merge_idx, pass, left, right, pair count) in
-    * application order.
+  /** Merge tables over a char-split symbol state ([[initialSymbolState]]
+    * in the judged path; specs feed a toy frame): e113/e164's sequential
+    * [[Bpe.train]] and e177's [[Bpe.trainBatched]].
     */
-  private[graft] def bpeMergesBatched(state0: DataFrame, key: String,
-      passes: Int, m: Int, window: Int)
-      : Seq[(Long, Long, String, String, Long)] = {
-    val s = state0.sparkSession
-    var state = state0
-    val out = Seq.newBuilder[(Long, Long, String, String, Long)]
-    var idx = 0L
-    var sinceCut = 0
-    var exhausted = false
-    for (p <- 1 to passes if !exhausted) {
-      val win = state
-        .select(col("cnt"), split(trim(col("s")), "  ").as("tk"))
-        .select(col("cnt"), explode(arrays_zip(
-          slice(col("tk"), lit(1), size(col("tk")) - 1).as("a"),
-          slice(col("tk"), lit(2), size(col("tk")) - 1).as("b"))).as("p"))
-        .groupBy(col("p.a").as("a"), col("p.b").as("b"))
-        .agg(sum(col("cnt")).as("n"))
-        .orderBy(col("n").desc, col("a"), col("b"))
-        .limit(window).collect()
-        .map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-      if (win.isEmpty) exhausted = true
-      else {
-        // a window pair survives iff NO strictly higher-ranked window
-        // pair shares a symbol (conflict is vs ALL higher-ranked
-        // pairs, not only kept ones — the rule a NOT EXISTS self-join
-        // states identically in SQL); rank 1 always survives
-        val chosen = win.zipWithIndex.filter { case ((a, b, _), i) =>
-          !win.take(i).exists { case (xa, xb, _) =>
-            xa == a || xa == b || xb == a || xb == b }
-        }.map(_._1).take(m)
-        for ((a, b, n) <- chosen) {
-          idx += 1; out += ((idx, p.toLong, a, b, n))
-        }
-        state = state.withColumn("s",
-          chosen.foldLeft(col("s")) { case (c, (a, b, _)) =>
-            replace(c, lit(s" $a  $b "), lit(s" $a$b ")) })
-        // same lineage discipline as [[bpeMerges]]: cut the replace
-        // chain to staged parquet every ~bpeCheckpointEvery APPLIED
-        // merges (counting applied, not scheduled — a pass can select
-        // fewer than m, and an m that doesn't divide the cadence must
-        // still cut)
-        sinceCut += chosen.size
-        if (sinceCut >= bpeCheckpointEvery && p < passes) {
-          state = Stage.frame(s,
-            s"bpe-batch-state-$key-$p", "graft-bpe-")(state)
-          sinceCut = 0
-        }
-      }
-    }
-    out.result()
+  private[graft] def bpeMerges(state: DataFrame, iters: Int)
+      : Seq[(Long, String, String, Long)] =
+    inOneTask(state)(Bpe.train(_, iters))
+  private[graft] def bpeMergesBatched(state: DataFrame, passes: Int,
+      m: Int, window: Int): Seq[(Long, Long, String, String, Long)] =
+    inOneTask(state)(Bpe.trainBatched(_, passes, m, window))
+
+  /** Runs a merge schedule over the (s, cnt) symbol state in ONE task
+    * and collects only the merge rows. The type frame is
+    * vocabulary-bounded at any corpus size, so one task is the right
+    * shape; `coalesce(1)`, not `repartition(1)`, keeps training one
+    * stage with no exchange.
+    */
+  private def inOneTask[T <: Product : TypeTag](state: DataFrame)(
+      schedule: Seq[(String, Long)] => Seq[T]): Seq[T] = {
+    val s = state.sparkSession
+    import s.implicits._
+    state.select("s", "cnt").as[(String, Long)].coalesce(1)
+      .mapPartitions(it => schedule(it.toSeq).iterator).collect().toSeq
   }
 
   // ---- oracles ----
@@ -730,8 +608,8 @@ object Surface22Queries {
 
   /** One oracle-side BPE round: pair counts from the previous state,
     * the winning pair by the same (n desc, a, b) order, and the
-    * replace-applied next state — a SQL transcription of one
-    * [[bpeMerges]] iteration.
+    * replace-applied next state — a SQL transcription of one round of
+    * [[Bpe.train]].
     */
   private def bpeIterCte(i: Int, st: String = "st", top: String = "top",
       pc: String = "pc"): String =

@@ -8,30 +8,43 @@ import org.apache.spark.sql.functions._
 class Surface22Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 
-  test("e113: merge 1 equals a driver-side brute-force recount") {
-    val rows = SparkEntry.queries("e113_bpe_train")(spark, dir)
-      .orderBy("merge_idx").collect()
-    assert(rows.length == graft.queries.Surface22Queries.bpeIters)
-    // brute-force: word histogram, adjacent char pairs weighted by
-    // corpus frequency, argmax with the (n desc, a, b) tie-break
-    val words = graft.queries.Tables.t(spark, dir, "documents")
+  /** Corpus word histogram (words of length >= 2), driver side. */
+  private def wordHist: Seq[(String, Long)] =
+    graft.queries.Tables.t(spark, dir, "documents")
       .select(explode(
         graft.operators.TextAnalysis.tokens(col("text"))).as("w"))
       .where(length(col("w")) >= 2)
       .groupBy("w").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1))
-    val pairs = scala.collection.mutable.Map[(String, String), Long]()
-    words.foreach { case (w, c) =>
-      w.sliding(2).foreach { p =>
-        val k = (p.substring(0, 1), p.substring(1, 2))
-        pairs(k) = pairs.getOrElse(k, 0L) + c
+      .map(r => r.getString(0) -> r.getLong(1)).toSeq
+
+  /** Greedy left-to-right BPE merge of (a, b) over a symbol list. */
+  private def applyMerge(syms: List[String], a: String, b: String)
+      : List[String] = syms match {
+    case x :: y :: rest if x == a && y == b =>
+      (a + b) :: applyMerge(rest, a, b)
+    case x :: rest => x :: applyMerge(rest, a, b)
+    case Nil => Nil
+  }
+
+  test("e113: full merge table equals a driver-side sequential trainer") {
+    val rows = SparkEntry.queries("e113_bpe_train")(spark, dir)
+      .orderBy("merge_idx").collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(4)))
+    assert(rows.length == graft.queries.Surface22Queries.bpeIters)
+    // every round: recount adjacent pairs weighted by corpus frequency,
+    // argmax with the (n desc, a, b) tie-break, greedy apply
+    var words = wordHist.map { case (w, c) => (w.map(_.toString).toList, c) }
+    val expected = (1 to rows.length).map { k =>
+      val pairs = scala.collection.mutable.Map[(String, String), Long]()
+      words.foreach { case (syms, c) =>
+        syms.zip(syms.drop(1)).foreach { p =>
+          pairs(p) = pairs.getOrElse(p, 0L) + c }
       }
+      val ((a, b), n) = pairs.toSeq.minBy { case ((a, b), n) => (-n, a, b) }
+      words = words.map { case (syms, c) => (applyMerge(syms, a, b), c) }
+      (k.toLong, a, b, n)
     }
-    val best = pairs.toSeq.minBy { case ((a, b), n) => (-n, a, b) }
-    val m1 = rows.head
-    assert((m1.getString(1), m1.getString(2)) == best._1 &&
-      m1.getLong(4) == best._2,
-      s"merge 1 ${m1.mkString(",")} != driver-side $best")
+    assert(rows.toSeq == expected)
   }
 
   test("e113: merged = left||right and pair counts never increase " +
@@ -76,21 +89,8 @@ class Surface22Spec extends SparkSpec {
     val merges = SparkEntry.queries("e113_bpe_train")(spark, dir)
       .orderBy("merge_idx").collect()
       .map(m => (m.getString(1), m.getString(2)))
-    val words = graft.queries.Tables.t(spark, dir, "documents")
-      .select(explode(
-        graft.operators.TextAnalysis.tokens(col("text"))).as("w"))
-      .where(length(col("w")) >= 2)
-      .groupBy("w").count().collect()
-      .map(x => x.getString(0) -> x.getLong(1))
-    def applyMerge(syms: List[String], a: String, b: String)
-        : List[String] = syms match {
-      case x :: y :: rest if x == a && y == b =>
-        (a + b) :: applyMerge(rest, a, b)
-      case x :: rest => x :: applyMerge(rest, a, b)
-      case Nil => Nil
-    }
     var types = 0L; var wtot = 0L; var stot = 0L; var single = 0L
-    words.foreach { case (w, c) =>
+    wordHist.foreach { case (w, c) =>
       var syms = w.map(_.toString).toList
       merges.foreach { case (a, b) => syms = applyMerge(syms, a, b) }
       types += 1; wtot += c; stot += c * syms.length
@@ -110,7 +110,7 @@ class Surface22Spec extends SparkSpec {
       ("xyxy", 2L), ("aaaa", 2L), ("bcda", 1L), ("xaby", 1L))
     val hist = toy.map { case (w, c) => (enc(w), c) }.toDF("s", "cnt")
     val merges = graft.queries.Surface22Queries.bpeMergesBatched(
-      hist, "spec-toy", passes = 3, m = 3, window = 8)
+      hist, passes = 3, m = 3, window = 8)
     assert(merges.nonEmpty && merges.map(_._1) == (1L to merges.size))
     // (a) pairs applied in one pass never share a symbol (a SELF-pair
     // like (a,a) has the one-element symbol set {a} — disjointness is
@@ -126,13 +126,6 @@ class Surface22Spec extends SparkSpec {
     // equal the adjacent-pair recount on the state just before THIS
     // merge applies — the disjointness invariance the batching
     // argument rests on
-    def applyMerge(syms: List[String], a: String, b: String)
-        : List[String] = syms match {
-      case x :: y :: rest if x == a && y == b =>
-        (a + b) :: applyMerge(rest, a, b)
-      case x :: rest => x :: applyMerge(rest, a, b)
-      case Nil => Nil
-    }
     var words = toy.map { case (w, c) => (w.map(_.toString).toList, c) }
     merges.foreach { case (idx, _, a, b, n) =>
       val recount = words.map { case (tks, c) =>
