@@ -62,6 +62,14 @@ object Bench {
     }.mkString("\"", "", "\"")
   private[graft] def dict(m: Iterable[(String, Double)]): String =
     m.map { case (k, v) => jstr(k) + ":" + ms(v) }.mkString("{", ",", "}")
+  private def strDict(m: Iterable[(String, String)]): String =
+    m.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+
+  /** A failure's cause as `Class: message`, the message capped at 500
+    * chars (the form of Verify's `_failed.json` and Bench's detail).
+    */
+  private[graft] def cause(e: Throwable): String =
+    s"${e.getClass.getSimpleName}: ${Option(e.getMessage).getOrElse("").take(500)}"
 
   /** Assemble the ONE stdout JSON line, truncation-proof.
     *
@@ -144,7 +152,7 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = Session.envCpus
     // streaming micro-batch queries are checkpoint-fsync-bound at toy
     // scale; put feeds/checkpoints/state stores (Stage.tempDir) on
     // tmpfs, as a real cluster's executors use local SSD state dirs.
@@ -157,23 +165,13 @@ object Bench {
           java.nio.file.Files.isWritable(shm))
         sys.props("graft.tmp.root") = shm.resolve("graft-bench").toString
     }
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Graft.excludedOptimizerRules)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb flips the DEFAULT-provider
-    // streaming queries (c2x family) onto RocksDB for the A/B floor
-    // experiments in SCALE.md; =hdfs leaves everything on the in-heap
-    // default (withRocksDb consults the same env). The driver never
-    // sets it, so judged benches always measure the shipped providers.
-    if (sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("rocksdb"))
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    graft.functions.GraftFunctions.register(spark)
+    val spark = Session.local(cpus)
+    // causes of failures outside the timed queries (warmup, probes),
+    // keyed `warmup:<name>` / `probe:<name>`; they go to
+    // bench_detail.json with the timed queries' causes
+    val untimedFailures = scala.collection.mutable.LinkedHashMap[String, String]()
+    def untimed(key: String)(body: => Unit): Unit =
+      try body catch { case e: Throwable => untimedFailures(key) = cause(e) }
     // untimed warmup: JIT/codegen + parquet reader init + first-touch
     // I/O on a FULL scan of every testdata table, so no measured query
     // is charged for JVM startup or cold page cache — which query pays
@@ -182,13 +180,11 @@ object Bench {
     // per-executor code paths with one canary query.)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { tbl =>
-      try spark.read.parquet(s"$sfDir/$tbl.parquet")
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      untimed(s"warmup:$tbl")(spark.read.parquet(s"$sfDir/$tbl.parquet")
+        .write.format("noop").mode("overwrite").save())
     }
-    try graft.queries.Tables.events(spark, sfDir)
-      .write.format("noop").mode("overwrite").save()
-    catch { case _: Throwable => () }
+    untimed("warmup:events")(graft.queries.Tables.events(spark, sfDir)
+      .write.format("noop").mode("overwrite").save())
     // and one aggregation/shuffle per engine path (codegen'd hash agg,
     // sort, exchange machinery), plus one canary per STREAMING engine
     // path: the micro-batch machinery (offset/commit logs, state-store
@@ -200,9 +196,8 @@ object Bench {
     // per-query numbers then measure the operator, not JVM startup.
     Seq("p1_project", "e4_fingerprint", "e2_norms", "q1_agg",
       "c9_stream_window", "c23_stream_tws").foreach { w =>
-      try SparkEntry.queries(w)(spark, sfDir)
-        .write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      untimed(s"warmup:$w")(SparkEntry.queries(w)(spark, sfDir)
+        .write.format("noop").mode("overwrite").save())
     }
     // SPARK_GRAFT_ONLY=a,b,c restricts the run (scale/regression
     // studies on a subset); the driver never sets it, so the judged
@@ -213,13 +208,14 @@ object Bench {
       case Some(names) => SparkEntry.queries.view.filterKeys(names).toMap
       case None => SparkEntry.queries
     }
-    val failed = scala.collection.mutable.ListBuffer[String]()
+    // failed query -> its cause
+    val failed = scala.collection.mutable.LinkedHashMap[String, String]()
     def timed(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
       // noop write materializes every output column (a count() would let
       // Catalyst prune the query down to a row-count scan)
       try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => failed += name }
+      catch { case e: Throwable => failed(name) = cause(e) }
       // operators persist stage boundaries (dedup candidates, shingle
       // frames); drop them so caches never accumulate across queries
       spark.catalog.clearCache()
@@ -232,8 +228,8 @@ object Bench {
     val probes = scala.collection.mutable.ListBuffer[Double]()
     def probe(): Unit = probeFn.foreach { fn =>
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case _: Throwable => () }
+      untimed("probe:q1_agg")(
+        fn(spark, sfDir).write.format("noop").mode("overwrite").save())
       probes += (System.nanoTime() - t0) / 1e9
     }
     probe()
@@ -277,7 +273,10 @@ object Bench {
         // to ZERO lines — the second half of the r12 no-op
         "\"([A-Za-z0-9_]+)\"\\s*:\\s*([0-9][0-9.]*)".r.findAllMatchIn(txt)
           .map(m => m.group(1) -> m.group(2).toDouble).toMap
-      } catch { case _: Throwable => Map.empty[String, Double] }
+      } catch { case e: Throwable =>
+        System.err.println(s"[bench] envelope $p not read: ${cause(e)}")
+        Map.empty[String, Double]
+      }
     }.getOrElse(Map.empty)
     // (name, first, rerun, ref, adjudicated?)
     val outliers = scala.collection.mutable.ListBuffer[(String, Double, Double, Double, Boolean)]()
@@ -308,20 +307,11 @@ object Bench {
     // ref.isEmpty => the envelope pass could not run; the number may be
     // fine, but nothing adjudicated it — disclose, don't vouch.
     val suspect = probeSpread > 3.0 || unadjudicated > 0 || ref.isEmpty
-    // disclose the ACTIVE state-store provider (and any env override):
-    // SPARK_GRAFT_STATE_PROVIDER silently flips what the c2x streaming
-    // family measures / what the RocksDB twins exercise — a stray env
-    // var in a judged run must be visible in the recorded artifact,
-    // not only in which code path happened to execute
-    val providerEnv = sys.env.get("SPARK_GRAFT_STATE_PROVIDER")
-    providerEnv.foreach(v => System.err.println(
-      s"WARNING: SPARK_GRAFT_STATE_PROVIDER=$v overrides the shipped " +
-        "state-store providers - this is an A/B-experiment run, not a " +
-        "judged configuration"))
+    // the session's state-store provider; Stage.drain runs each
+    // transformWithState stream on RocksDB whatever this says
     val providerJson = jstr(
       spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        .map(_.split("\\.").last).getOrElse("default") +
-        providerEnv.map(v => s" (env=$v)").getOrElse(""))
+        .map(_.split("\\.").last).getOrElse("default"))
     val probeJson = s""""state_provider":$providerJson,"probes":{"n":${probes.size},"min":${ms(if (probes.isEmpty) 0 else probes.min)},"max":${ms(if (probes.isEmpty) 0 else probes.max)},"spread":${ms(probeSpread)}}"""
     // full, uncapped outlier disclosure goes to bench_detail.json only
     val fullOutlierJson = outliers.map { case (n, f, r2, rf, adj) =>
@@ -332,18 +322,19 @@ object Bench {
     // masquerade as a sub-second success
     val ok = results.filterNot { case (k, _) => failed.contains(k) }
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
-    val fs = failed.map(jstr).mkString("[", ",", "]")
-    val cpusN = try cpus.trim.toInt catch { case _: Throwable => 0 }
+    val fs = failed.keys.map(jstr).mkString("[", ",", "]")
     val line = headlineJson(total, ok.size, sfDir,
-      ok.toSeq.sortBy(-_._2), failed.toSeq,
-      probeJson, outliers.toSeq, ref.size, suspect, cpusN)
+      ok.toSeq.sortBy(-_._2), failed.keys.toSeq,
+      probeJson, outliers.toSeq, ref.size, suspect, cpus)
     try {
       val p = java.nio.file.Paths.get("target", "bench_detail.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p,
-        s"""{"total":${ms(total)},"n":${ok.size},"cpus":$cpusN,$probeJson,"ref_loaded":${ref.size},"outliers":$fullOutlierJson,"suspect":$suspect,"queries":${dict(ok.toSeq.sortBy(_._1))},"failed":$fs,"sf":${jstr(sfDir)}}"""
+        s"""{"total":${ms(total)},"n":${ok.size},"cpus":$cpus,$probeJson,"ref_loaded":${ref.size},"outliers":$fullOutlierJson,"suspect":$suspect,"queries":${dict(ok.toSeq.sortBy(_._1))},"failed":$fs,"failure_causes":${strDict(failed)},"untimed_failures":${strDict(untimedFailures)},"sf":${jstr(sfDir)}}"""
           .getBytes("UTF-8"))
-    } catch { case _: Throwable => () }
+    } catch { case e: Throwable =>
+      System.err.println(s"[bench] bench_detail.json not written: ${cause(e)}")
+    }
     // silence any executor/shutdown logging that could land AFTER the
     // JSON line and push its start out of the consumer's tail window
     spark.sparkContext.setLogLevel("ERROR")

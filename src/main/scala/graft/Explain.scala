@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: prints the formatted physical plan of judged queries
   * (defaults to the headline set) so scan pruning, pushed filters,
   * broadcast choices and exchange counts can be reviewed per round.
@@ -11,16 +9,8 @@ import org.apache.spark.sql.SparkSession
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Graft.excludedOptimizerRules)
-      .getOrCreate()
+    val spark = Session.local(Session.envCpus)
     spark.sparkContext.setLogLevel("ERROR")
-    graft.functions.GraftFunctions.register(spark)
     val names = if (args.nonEmpty) {
       if (args.sameElements(Array("all"))) SparkEntry.queries.keys.toSeq.sorted
       else args.toSeq

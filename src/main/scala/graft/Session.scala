@@ -1,0 +1,29 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+
+/** The one local SparkSession factory of the driver mains (Bench,
+  * Verify, Explain) and the test suites.
+  */
+object Session {
+  /** `SPARK_GRAFT_CPUS`, default 4: the core count the mains run on. */
+  def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
+
+  /** A `local[cpus]` session with `cpus` shuffle partitions, UTC session
+    * time, no UI, the engine's excluded optimizer rules and its native
+    * functions registered, so every query plans the same way from the
+    * first one on.
+    */
+  def local(cpus: Int): SparkSession = {
+    val s = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .config("spark.sql.optimizer.excludedRules", Graft.excludedOptimizerRules)
+      .getOrCreate()
+    s.sparkContext.setLogLevel("WARN")
+    functions.GraftFunctions.register(s)
+    s
+  }
+}

@@ -17,47 +17,37 @@ object SparkEntry {
     queries("q1_agg")(spark, dir)
   }
 
+  /** Every judged query object, listed once. */
+  val querySets: Seq[QuerySet] = Seq(
+    TransformQueries, CdcQueries, RelationalQueries, JoinQueries,
+    SqlSurfaceQueries, Surface2Queries, Surface3Queries, Surface4Queries,
+    StatsQueries, TextQueries, DedupQueries, SimilarityQueries,
+    WindowQueries, MiscQueries, RuntimeQueries, Surface5Queries,
+    Surface6Queries, Surface7Queries, Surface8Queries, Surface9Queries,
+    Surface10Queries, Surface11Queries, Surface12Queries, Surface13Queries,
+    Surface14Queries, Surface15Queries, Surface16Queries, Surface17Queries,
+    Surface18Queries, Surface19Queries, Surface20Queries, Surface21Queries,
+    Surface22Queries, Surface23Queries, Surface24Queries, Surface25Queries,
+    Surface26Queries, Surface27Queries, Surface28Queries, Surface29Queries)
+
   /** One entry per implemented operator from SURVEY.md §2. */
-  def queries: Map[String, (SparkSession, String) => DataFrame] =
-    TransformQueries.all ++ CdcQueries.all ++ RelationalQueries.all ++
-      JoinQueries.all ++ SqlSurfaceQueries.all ++ Surface2Queries.all ++
-      Surface3Queries.all ++ Surface4Queries.all ++
-      StatsQueries.all ++ TextQueries.all ++ DedupQueries.all ++
-      SimilarityQueries.all ++ WindowQueries.all ++ MiscQueries.all ++
-      RuntimeQueries.all ++ Surface5Queries.all ++ Surface6Queries.all ++
-      Surface7Queries.all ++ Surface8Queries.all ++ Surface9Queries.all ++
-      Surface10Queries.all ++ Surface11Queries.all ++ Surface12Queries.all ++
-      Surface13Queries.all ++ Surface14Queries.all ++ Surface15Queries.all ++
-      Surface16Queries.all ++ Surface17Queries.all ++
-      Surface18Queries.all ++ Surface19Queries.all ++ Surface20Queries.all ++
-      Surface21Queries.all ++ Surface22Queries.all ++
-      Surface23Queries.all ++ Surface24Queries.all ++ Surface25Queries.all ++
-      Surface26Queries.all ++ Surface27Queries.all ++
-      Surface28Queries.all ++ Surface29Queries.all
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    merged("query", querySets.map(_.all))
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omit for non-SQL-expressible ops.
     */
-  def oracleSql: Map[String, String] =
-    TransformQueries.oracles ++ CdcQueries.oracles ++
-      RelationalQueries.oracles ++ JoinQueries.oracles ++
-      SqlSurfaceQueries.oracles ++ Surface2Queries.oracles ++
-      Surface3Queries.oracles ++ Surface4Queries.oracles ++
-      StatsQueries.oracles ++
-      TextQueries.oracles ++ DedupQueries.oracles ++
-      SimilarityQueries.oracles ++ WindowQueries.oracles ++
-      MiscQueries.oracles ++ RuntimeQueries.oracles ++
-      Surface5Queries.oracles ++ Surface6Queries.oracles ++
-      Surface7Queries.oracles ++ Surface8Queries.oracles ++
-      Surface9Queries.oracles ++ Surface10Queries.oracles ++
-      Surface11Queries.oracles ++ Surface12Queries.oracles ++
-      Surface13Queries.oracles ++ Surface14Queries.oracles ++
-      Surface15Queries.oracles ++ Surface16Queries.oracles ++
-      Surface17Queries.oracles ++ Surface18Queries.oracles ++
-      Surface19Queries.oracles ++ Surface20Queries.oracles ++
-      Surface21Queries.oracles ++ Surface22Queries.oracles ++
-      Surface23Queries.oracles ++ Surface24Queries.oracles ++
-      Surface25Queries.oracles ++ Surface26Queries.oracles ++
-      Surface27Queries.oracles ++ Surface28Queries.oracles ++
-      Surface29Queries.oracles
+  lazy val oracleSql: Map[String, String] =
+    merged("oracle", querySets.map(_.oracles))
+
+  /** The union of `maps`; a name defined in two of them throws instead
+    * of letting the later map shadow the earlier one.
+    */
+  private[graft] def merged[V](what: String, maps: Seq[Map[String, V]]): Map[String, V] = {
+    val twice = maps.flatMap(_.keys).groupBy(identity)
+      .collect { case (k, ks) if ks.size > 1 => k }
+    require(twice.isEmpty,
+      s"$what names defined in two query objects: ${twice.toSeq.sorted.mkString(", ")}")
+    maps.foldLeft(Map.empty[String, V])(_ ++ _)
+  }
 }

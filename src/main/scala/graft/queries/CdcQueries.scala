@@ -14,7 +14,7 @@ import graft.sinks.Sinks
   * DuckDB oracle can state the end-to-end result directly over the base
   * tables.
   */
-object CdcQueries {
+object CdcQueries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

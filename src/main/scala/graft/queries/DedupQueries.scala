@@ -10,7 +10,7 @@ import graft.operators.{Corpus, Dedup, TextAnalysis}
   * through [[graft.operators.Dedup]] with a DuckDB oracle replicating
   * the same md5-derived hashing (engine-portable by construction).
   */
-object DedupQueries {
+object DedupQueries extends QuerySet {
   import Tables._
 
   private val minhashK = 8
@@ -386,23 +386,11 @@ object DedupQueries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("band",
           org.apache.spark.sql.types.StringType)))
-      val prev = s.conf.get("spark.sql.shuffle.partitions", "32")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val in = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(feed)
-          .as[graft.streaming.BandAdmission.BandRow]
-        graft.streaming.BandAdmission.flagStream(in)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-              graft.streaming.BandAdmission.BandFlag], _: Long) =>
-            batch.write.mode("append").parquet(out); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-          .start().awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val in = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(feed)
+        .as[graft.streaming.BandAdmission.BandRow]
+      Stage.drain(graft.streaming.BandAdmission.flagStream(in), ckpt)(
+        Stage.appendTo(out))
       s.read.parquet(out).groupBy("doc_id")
         .agg(count(lit(1)).as("n_bands"),
           max(col("dup")).as("is_neardup"))
@@ -491,25 +479,13 @@ object DedupQueries {
           org.apache.spark.sql.types.StringType),
         org.apache.spark.sql.types.StructField("ts",
           org.apache.spark.sql.types.TimestampType)))
-      val prev = s.conf.get("spark.sql.shuffle.partitions", "32")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val in = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(feed)
-          .withWatermark("ts", "0 seconds")
-          .as[graft.streaming.BandAdmission.BandRowT]
-        graft.streaming.BandAdmission
-          .flagStreamTtl(in, h, drainAfterMs = (mx + 1) * 1000L)
-          .writeStream
-          .foreachBatch { (batch: org.apache.spark.sql.Dataset[
-              graft.streaming.BandAdmission.BandFlag], _: Long) =>
-            batch.write.mode("append").parquet(out); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-          .start().awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val in = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(feed)
+        .withWatermark("ts", "0 seconds")
+        .as[graft.streaming.BandAdmission.BandRowT]
+      Stage.drain(graft.streaming.BandAdmission
+        .flagStreamTtl(in, h, drainAfterMs = (mx + 1) * 1000L), ckpt)(
+        Stage.appendTo(out))
       s.read.parquet(out).groupBy("doc_id")
         .agg(count(lit(1)).as("n_bands"),
           max(col("dup")).as("is_neardup"))

@@ -96,31 +96,17 @@ object EventFeed {
   }
 
   /** Run `transform` over the feed as a real micro-batch stream
-    * (one file per trigger, AvailableNow) and return the appended
+    * (one file per trigger, [[Stage.drain]]) and return the appended
     * output as a batch frame.
     */
   def runStream[T](s: SparkSession, b: Built,
       transform: org.apache.spark.sql.Dataset[Attribution.EvW] =>
         org.apache.spark.sql.Dataset[T]): DataFrame = {
     import s.implicits._
-    val prev = s.conf.get("spark.sql.shuffle.partitions", "32")
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try {
-      val in = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1").parquet(b.feed)
-        .withWatermark("ts", "0 seconds")
-        .as[Attribution.EvW]
-      transform(in)
-        .writeStream
-        .foreachBatch {
-          (batch: org.apache.spark.sql.Dataset[T], _: Long) =>
-            batch.toDF().write.mode("append").parquet(b.out); ()
-        }
-        .option("checkpointLocation", b.ckpt)
-        .outputMode("append")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-        .start().awaitTermination()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+    Stage.drain(transform(s.readStream.schema(schema)
+      .option("maxFilesPerTrigger", "1").parquet(b.feed)
+      .withWatermark("ts", "0 seconds")
+      .as[Attribution.EvW]), b.ckpt)(Stage.appendTo(b.out))
     s.read.parquet(b.out)
   }
 

@@ -10,7 +10,7 @@ import graft.operators.{AsofJoin, Skew}
   * SURVEY.md §7.4), scalar-subquery shape, skew-salted aggregation, and
   * the as-of join operator.
   */
-object JoinQueries {
+object JoinQueries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

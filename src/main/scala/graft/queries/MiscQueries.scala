@@ -16,7 +16,7 @@ import graft.operators.Multimodal
   * computes the exact counts and expects TRUE — a full hash-checked
   * verdict on the approx path instead of a rows-only count.
   */
-object MiscQueries {
+object MiscQueries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -17,7 +17,7 @@ import org.apache.spark.sql.functions._
   * independent of partitioning/summation order — a correctness property,
   * not just a test convenience.
   */
-object RelationalQueries {
+object RelationalQueries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -21,30 +21,13 @@ import graft.streaming.Pipeline
   * `Trigger.AvailableNow` instead of the 60 s ProcessingTime trigger —
   * same engine, bounded run).
   */
-object RuntimeQueries {
+object RuntimeQueries extends QuerySet {
   import Tables._
 
   /** The (value, topic) schema a Kafka source presents downstream. */
   private val feedSchema = StructType(Seq(
     StructField("value", StringType),
     StructField("topic", StringType)))
-
-  /** Run a STATEFUL streaming leg with the shuffle-partition count sized
-    * to the feed's volume: every stateful operator opens one state store
-    * per shuffle partition per micro-batch (a stream-stream join opens
-    * four), and each store pays checkpoint file I/O per batch. The
-    * per-deployment knob is exactly `spark.sql.shuffle.partitions` at
-    * stream start — thousands on a real cluster, 8 for these ~10⁵-row
-    * judged feeds. Delivery semantics and results are partition-count
-    * invariant (that invariance IS what the oracle hash checks); only
-    * the fixed per-store overhead changes. The conf is restored after
-    * the bounded run so batch queries in the same session are untouched.
-    */
-  private[queries] def withStatePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions", "32")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 
   /** The view and click sides of events as two single-file feeds, one
     * durable stage shared by c11's inner and c22's outer interval join.
@@ -104,20 +87,10 @@ object RuntimeQueries {
           .withColumn("topic", lit(topic)),
         Debezium.wrap(updates, lit("u"), "customer", lit(1L))
           .withColumn("topic", lit(topic))))
-      val chunkFiles = new java.io.File(staged).listFiles()
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .sortBy(_.lastModified)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(inDir))
-      def land(i: Int): Unit = {
-        val src = chunkFiles(i)
-        val dst = java.nio.file.Paths.get(inDir, src.getName)
-        java.nio.file.Files.copy(src.toPath, dst)
-        require(dst.toFile.setLastModified(src.lastModified),
-          s"mtime pin failed for $dst — arrival order would race")
-      }
-      land(0) // leg 1: initial snapshot — Debezium snapshot.mode=initial
+      val feed = new Stage.Landing(staged, inDir)
+      feed.land(0) // leg 1: initial snapshot — Debezium snapshot.mode=initial
       runOnce()
-      land(1) // leg 2: updates; the checkpoint restart sees only them
+      feed.land(1) // leg 2: updates; the checkpoint restart sees only them
       runOnce()
 
       // delivered-once audit from parquet FOOTERS (c20 discipline):
@@ -125,8 +98,8 @@ object RuntimeQueries {
       // three counts are already materialized in the layouts
       val deliveredOnce =
         Tables.parquetRowCountAt(s, s"$outDir/customer") ==
-          Tables.parquetRowCountAt(s, chunkFiles(0).getPath) +
-          Tables.parquetRowCountAt(s, chunkFiles(1).getPath)
+          Tables.parquetRowCountAt(s, feed.chunks(0).getPath) +
+          Tables.parquetRowCountAt(s, feed.chunks(1).getPath)
       Sinks.sinkState(s, s"$outDir/customer",
         keys = Seq("c_custkey"), orderCols = Seq("ts_ms"))
         .select(cols.map(col) :+ lit(deliveredOnce).as("delivered_once"): _*)
@@ -155,13 +128,8 @@ object RuntimeQueries {
         StructField("event_id", org.apache.spark.sql.types.LongType)))
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(feed)
-      withStatePartitions(s, 8) {
-        Pipeline.windowedCounts(stream, "ts", "1 hour", "1 hour")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
+      Stage.drain(Pipeline.windowedCounts(stream, "ts", "1 hour", "1 hour"),
+        ckpt)(_.format("parquet").option("path", out))
       s.read.parquet(out)
     }),
 
@@ -220,13 +188,8 @@ object RuntimeQueries {
         StructField("event_id", org.apache.spark.sql.types.LongType)))
       val stream = s.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1").parquet(feed)
-      withStatePartitions(s, 8) {
-        Pipeline.windowedCounts(stream, "ts", "1 hour", "1 hour")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
+      Stage.drain(Pipeline.windowedCounts(stream, "ts", "1 hour", "1 hour"),
+        ckpt)(_.format("parquet").option("path", out))
       s.read.parquet(out)
     }),
 
@@ -253,16 +216,11 @@ object RuntimeQueries {
       val schema = StructType(Seq(
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("event_id", org.apache.spark.sql.types.LongType)))
-      def runEngine(): Unit = withStatePartitions(s, 8) {
-        Pipeline.windowedCounts(
+      def runEngine(): Unit = Stage.drain(Pipeline.windowedCounts(
           s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
             .parquet(feed),
-          "ts", "1 hour", "1 hour")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
+          "ts", "1 hour", "1 hour"), ckpt)(
+        _.format("parquet").option("path", out))
       // the three chunk files are a pure function of the events table
       // and the cuts, so they are built ONCE on the durable-feed tier
       // every other streaming feed already uses (digest-keyed, pinned
@@ -277,21 +235,10 @@ object RuntimeQueries {
         ev.where(col("ts") < cut1),
         ev.where(col("ts") >= cut1 && col("ts") < cut2),
         ev.where(col("ts") >= cut2)))
-      val chunkFiles = new java.io.File(staged).listFiles()
-        .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-        .sortBy(_.lastModified)
-      java.nio.file.Files.createDirectories(java.nio.file.Paths.get(feed))
-      def land(i: Int): Unit = {
-        val src = chunkFiles(i)
-        val dst = java.nio.file.Paths.get(feed, src.getName)
-        java.nio.file.Files.copy(src.toPath, dst)
-        // arrival order = staged pinned mtimes, preserved on the copy
-        require(dst.toFile.setLastModified(src.lastModified),
-          s"mtime pin failed for $dst — arrival order would race")
-      }
-      land(0)
+      val landing = new Stage.Landing(staged, feed)
+      landing.land(0)
       runEngine() // run 1: finalizes windows ≤ max(file1) − 1 h, stops
-      land(1); land(2)
+      landing.land(1); landing.land(2)
       runEngine() // run 2: same checkpoint — consumes only new files
       s.read.parquet(out)
     }),
@@ -322,16 +269,11 @@ object RuntimeQueries {
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("event_id", org.apache.spark.sql.types.LongType),
         StructField("user_id", org.apache.spark.sql.types.LongType)))
-      withStatePartitions(s, 8) {
-        s.readStream.schema(schema)
+      Stage.drain(s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(feed)
           .withWatermark("ts", "1 hour")
-          .dropDuplicatesWithinWatermark("event_id")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
+          .dropDuplicatesWithinWatermark("event_id"), ckpt)(
+        _.format("parquet").option("path", out))
       val sunk = s.read.parquet(out)
       // audit counts from parquet FOOTERS (c20 discipline): the sink
       // and the events table both already materialize their row counts
@@ -360,17 +302,12 @@ object RuntimeQueries {
         StructField("v_event_id", longT), StructField("user_id", longT)))
       val cSchema = StructType(Seq(StructField("c_ts", tsT),
         StructField("c_event_id", longT), StructField("user_id", longT)))
-      withStatePartitions(s, 8) {
-        Pipeline.intervalJoin(
+      Stage.drain(Pipeline.intervalJoin(
           s.readStream.schema(vSchema).parquet(vDir), "v_ts",
           s.readStream.schema(cSchema).parquet(cDir), "c_ts",
           key = "user_id", watermark = "1 hour", within = "30 minutes")
-          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
+          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts"),
+        ckpt)(_.format("parquet").option("path", out))
       s.read.parquet(out)
     }),
 
@@ -394,14 +331,10 @@ object RuntimeQueries {
       val schema = StructType(Seq(StructField("ts", tsT),
         StructField("event_id", longT), StructField("user_id", longT),
         StructField("event_type", StringType)))
-      s.readStream.schema(schema).parquet(feed)
+      Stage.drain(s.readStream.schema(schema).parquet(feed)
         .join(broadcast(dim), col("user_id") === col("c_custkey"))
         .select("ts", "event_id", "user_id", "event_type", "c_name",
-          "c_mktsegment")
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .outputMode("append").trigger(Trigger.AvailableNow).start()
-        .awaitTermination()
+          "c_mktsegment"), ckpt)(_.format("parquet").option("path", out))
       s.read.parquet(out)
     }),
 
@@ -434,19 +367,9 @@ object RuntimeQueries {
         StructField("epochMs", longT)))
       val trades = s.readStream.schema(schema).parquet(feed)
         .as[graft.streaming.OhlcState.Trade]
-      withStatePartitions(s, 8) {
-        graft.streaming.OhlcState
-          .ohlcStream(trades, barMs = 3600L * 1000, idleTimeout = None)
-          .writeStream
-          .foreachBatch {
-            (batch: org.apache.spark.sql.Dataset[
-               graft.streaming.OhlcState.OhlcBar], _: Long) =>
-              batch.write.mode("append").parquet(out); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .outputMode("update").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
+      Stage.drain(graft.streaming.OhlcState
+          .ohlcStream(trades, barMs = 3600L * 1000, idleTimeout = None),
+        ckpt, "update")(Stage.appendTo(out))
       s.read.parquet(out)
         .select(col("symbol"), col("barStartMs"), col("open"), col("high"),
           col("low"), col("close"), col("volume").cast("long").as("volume_k"),
@@ -471,16 +394,13 @@ object RuntimeQueries {
       val schema = StructType(Seq(StructField("event_id", longT),
         StructField("event_type", StringType)))
       def run(ckpt: String): Unit =
-        s.readStream.schema(schema).parquet(feed)
-          .writeStream
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
+        Stage.drain(s.readStream.schema(schema).parquet(feed), ckpt)(
+          _.foreachBatch { (batch: DataFrame, epoch: Long) =>
             batch.write.mode("overwrite").parquet(s"$rawSink/epoch=$epoch")
             batch.groupBy("event_type").agg(count(lit(1)).as("n"))
               .write.mode("overwrite").parquet(s"$aggSink/epoch=$epoch")
             ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow).start().awaitTermination()
+          })
       run(s"$tmp/ckpt1")
       run(s"$tmp/ckpt2") // fresh checkpoint = full redelivery, same epochs
       val raw = s.read.parquet(rawSink)
@@ -520,20 +440,14 @@ object RuntimeQueries {
       val schema = StructType(Seq(
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("event_id", org.apache.spark.sql.types.LongType)))
-      withStatePartitions(s, 8) {
-        Pipeline.windowedCounts(
+      Stage.drain(Pipeline.windowedCounts(
           s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
             .parquet(feed),
-          "ts", "1 hour", "1 hour")
-          .writeStream.outputMode("update")
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            Sinks.appendParquet(
-              batch.withColumn("epoch", lit(epoch)), out)
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow).start().awaitTermination()
-      }
+          "ts", "1 hour", "1 hour"), ckpt, "update")(
+        _.foreachBatch { (batch: DataFrame, epoch: Long) =>
+          Sinks.appendParquet(batch.withColumn("epoch", lit(epoch)), out)
+          ()
+        })
       Sinks.sinkState(s, out, keys = Seq("win_start"),
         orderCols = Seq("epoch")).drop("epoch")
     }),
@@ -558,18 +472,13 @@ object RuntimeQueries {
         StructField("v_event_id", longT), StructField("user_id", longT)))
       val cSchema = StructType(Seq(StructField("c_ts", tsT),
         StructField("c_event_id", longT), StructField("user_id", longT)))
-      withStatePartitions(s, 8) {
-        Pipeline.intervalJoin(
+      Stage.drain(Pipeline.intervalJoin(
           s.readStream.schema(vSchema).parquet(vDir), "v_ts",
           s.readStream.schema(cSchema).parquet(cDir), "c_ts",
           key = "user_id", watermark = "1 hour", within = "30 minutes",
           joinType = "left_outer")
-          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts")
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
+          .select("user_id", "v_event_id", "v_ts", "c_event_id", "c_ts"),
+        ckpt)(_.format("parquet").option("path", out))
       s.read.parquet(out)
     }),
 
@@ -596,24 +505,10 @@ object RuntimeQueries {
       val dblT = org.apache.spark.sql.types.DoubleType
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("seq", longT), StructField("value", dblT)))
-      val prevProvider =
-        s.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      s.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try withStatePartitions(s, 8) {
-        graft.streaming.StatefulOps.orderedDeltaStream(
+      Stage.drain(graft.streaming.StatefulOps.orderedDeltaStream(
           s.readStream.schema(schema).parquet(feed)
-            .as[graft.streaming.StatefulOps.SeqValue])
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      } finally prevProvider match {
-        case Some(p) =>
-          s.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None =>
-          s.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+            .as[graft.streaming.StatefulOps.SeqValue]), ckpt)(
+        _.format("parquet").option("path", out))
       s.read.parquet(out)
         .select("key", "seq", "prev", "has_prev", "value", "n_seen")
     }),
@@ -640,20 +535,15 @@ object RuntimeQueries {
       val schema = StructType(Seq(
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("user_id", org.apache.spark.sql.types.LongType)))
-      withStatePartitions(s, 8) {
-        s.readStream.schema(schema)
+      Stage.drain(s.readStream.schema(schema)
           .option("maxFilesPerTrigger", "1").parquet(feed)
           .withWatermark("ts", "1 hour")
           .groupBy(col("user_id"), session_window(col("ts"), "30 minutes"))
           .agg(count(lit(1)).as("n"))
           .select(col("user_id"),
             col("session_window.start").as("session_start"),
-            col("session_window.end").as("session_end"), col("n"))
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
+            col("session_window.end").as("session_end"), col("n")),
+        ckpt)(_.format("parquet").option("path", out))
       s.read.parquet(out)
     }))
 

@@ -14,7 +14,7 @@ import graft.operators.Similarity
   * declared without SQL oracle since cross-engine float summation order
   * differs. `e2_lsh_topk` is the bucketed ANN scale path.
   */
-object SimilarityQueries {
+object SimilarityQueries extends QuerySet {
   import Tables._
 
   /** IVF centroid count (small on purpose: the oracle SQL embeds

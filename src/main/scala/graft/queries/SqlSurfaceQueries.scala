@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * engine's scalar library and the `spark.sql` entry path against the
   * oracle.
   */
-object SqlSurfaceQueries {
+object SqlSurfaceQueries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

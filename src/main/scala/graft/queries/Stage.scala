@@ -4,15 +4,16 @@ import java.nio.file.{FileSystemException, Files, NoSuchFileException, Path, Pat
 
 import scala.collection.mutable
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, CommutativeExpression, EqualNullSafe, EqualTo, ExprId, Expression, In, MultiCommutativeOp, NamedExpression, NamedLambdaVariable, UserDefinedExpression}
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ObjectConsumer, ObjectProducer}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ObjectConsumer, ObjectProducer, TransformWithState}
 import org.apache.spark.sql.catalyst.trees.TreeNode
 import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.sources.DataSourceRegister
+import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
-/** Staged frames, in two tiers.
+/** Staged frames, in two tiers, and the bounded run of a judged stream.
   *
   * The RUN-SCOPED tier ([[frame]], [[tempDir]]) lives in a temp dir
   * deleted on JVM exit: run-scoped intermediates and streaming
@@ -27,6 +28,9 @@ import org.apache.spark.sql.sources.DataSourceRegister
   * checkpoint. A durable stage is served only to the derivation that
   * built it (see [[durable]] for the key and SCALE.md for the rule and
   * the inventory).
+  *
+  * [[drain]] runs every judged stream over such feeds, one policy for
+  * trigger, state partitions and state-store provider.
   *
   * Callers whose `build` depends on ANOTHER staged frame must resolve
   * that dependency BEFORE calling [[frame]] (hoist it to a local val):
@@ -204,6 +208,71 @@ object Stage {
       }
     }.resolve("feed").toString
   }
+
+  /** A staged [[durableChunkFeed]] landed chunk by chunk into `into`,
+    * for a judged restart: `chunks` are the staged files in their
+    * pinned arrival order, and `land(i)` copies chunk `i` keeping its
+    * pinned mtime, so the file source sees the staged order.
+    */
+  final class Landing(feed: String, into: String) {
+    val chunks: IndexedSeq[java.io.File] = new java.io.File(feed).listFiles()
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .sortBy(_.lastModified).toIndexedSeq
+    Files.createDirectories(Paths.get(into))
+
+    def land(i: Int): Unit = {
+      val src = chunks(i)
+      val dst = Paths.get(into, src.getName)
+      Files.copy(src.toPath, dst)
+      require(dst.toFile.setLastModified(src.lastModified),
+        s"mtime pin failed for $dst — arrival order would race")
+    }
+  }
+
+  private val StatePartitions = "spark.sql.shuffle.partitions"
+  private val StateProvider = "spark.sql.streaming.stateStore.providerClass"
+  private val RocksDb =
+    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
+
+  /** THE bounded run of a judged stream: start `stream` with checkpoint
+    * `ckpt`, output `mode` and the `Trigger.AvailableNow` trigger
+    * (the streaming engine run as a batch job over what has landed),
+    * and wait for it. The caller's `sink` shapes the writer (a file
+    * sink, a `foreachBatch`, `noop`); everything else is decided here:
+    *  - 8 shuffle partitions, which is the state-store count of every
+    *    stateful operator (each store pays checkpoint I/O per batch;
+    *    results are partition-count invariant);
+    *  - the RocksDB state-store provider exactly when the plan holds a
+    *    `transformWithState` operator (which requires it), otherwise
+    *    the session default;
+    *  - both confs restored afterwards, also when the run fails.
+    * The stream reads the confs when it starts, and a foreachBatch body
+    * sees them through `batch.sparkSession`.
+    */
+  def drain[T](stream: Dataset[T], ckpt: String, mode: String = "append")
+              (sink: DataStreamWriter[T] => DataStreamWriter[T]): Unit = {
+    val s = stream.sparkSession
+    val tws = stream.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState])
+    def put(confs: Seq[(String, Option[String])]): Unit = confs.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+    val run = Seq(StatePartitions -> Some("8"),
+      StateProvider -> Option.when(tws)(RocksDb))
+    val set = s.conf.getAll
+    val prev = run.map { case (k, _) => k -> set.get(k) }
+    put(run)
+    try sink(stream.writeStream.option("checkpointLocation", ckpt)
+        .outputMode(mode).trigger(Trigger.AvailableNow))
+      .start().awaitTermination()
+    finally put(prev)
+  }
+
+  /** The common [[drain]] sink: each micro-batch appends parquet to `out`. */
+  def appendTo[T](out: String): DataStreamWriter[T] => DataStreamWriter[T] =
+    _.foreachBatch { (batch: Dataset[T], _: Long) =>
+      batch.toDF().write.mode("append").parquet(out); ()
+    }
 
   /** The only place a fixture key is formed: `<name>-<sf dir>-
     * <testdata fingerprint>-<digest of layoutVersion and the

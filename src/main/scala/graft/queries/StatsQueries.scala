@@ -8,7 +8,7 @@ import org.apache.spark.sql.functions._
   * distributed engine can reproduce these bit-for-bit), exact
   * rank-based median, pivot and unpivot.
   */
-object StatsQueries {
+object StatsQueries extends QuerySet {
   import Tables._
 
   /** Staged rank-span (CDF) frame of `lineitem.l_extendedprice` per

@@ -19,7 +19,7 @@ import org.apache.spark.sql.functions._
   * layout machinery demonstrably changes the plan and demonstrably
   * does not change the answer.
   */
-object Surface10Queries {
+object Surface10Queries extends QuerySet {
   import Tables._
 
   /** `events` partitioned into `event_type=…` directories, a durable

@@ -9,7 +9,7 @@ import org.apache.spark.sql.functions._
   * and the point-in-time dimension join every feature/label pipeline
   * needs for temporal correctness.
   */
-object Surface11Queries {
+object Surface11Queries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -17,7 +17,7 @@ import graft.operators.{HeavyHitters, TextAnalysis}
   * SUM the oracle computes is CAST back to BIGINT (DuckDB promotes to
   * HUGEINT, which the driver would hash as float).
   */
-object Surface12Queries {
+object Surface12Queries extends QuerySet {
   import Tables._
 
   /** Random-projection sign matrix dimensions: 64-dim input → 8 output. */

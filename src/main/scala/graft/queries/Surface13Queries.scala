@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.{Corpus, Similarity}
 
@@ -17,7 +16,7 @@ import graft.operators.{Corpus, Similarity}
   * re-derives, every oracle-side integer SUM cast back to BIGINT
   * (DuckDB promotes to HUGEINT, which the driver hashes as float).
   */
-object Surface13Queries {
+object Surface13Queries extends QuerySet {
   import Tables._
 
   /** SemDeDup within-cluster cosine threshold. The synthetic corpus has
@@ -185,11 +184,9 @@ object Surface13Queries {
         StructField("event_id", LongType), StructField("user_id", LongType),
         StructField("event_type", StringType),
         StructField("value_m", LongType)))
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow).start().awaitTermination()
+      Stage.drain(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(feed), ckpt)(
+        _.format("parquet").option("path", out))
       val nBatches = new java.io.File(s"$ckpt/offsets").listFiles()
         .count(f => f.getName.forall(_.isDigit))
       s.read.parquet(out)

@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 import graft.operators.Similarity
 
@@ -17,7 +16,7 @@ import graft.operators.Similarity
   * point for doubles the oracle re-derives, every oracle-side integer
   * SUM/COUNT cast back to BIGINT.
   */
-object Surface14Queries {
+object Surface14Queries extends QuerySet {
   import Tables._
 
   /** PQ geometry: 4 subspaces × 16 dims over the 64-dim embeddings,
@@ -44,16 +43,6 @@ object Surface14Queries {
       .getField("i").cast("long")
   private def pqBestCol(vec: Column, m: Int): Column =
     greatest((0 until pqK).map(j => pqSubCosCol(vec, m, j)): _*)
-
-  /** Shared micro-batch shuffle sizing for the runtime queries (32
-    * state-store dirs per stateful op is waste at test scale; a real
-    * cluster sizes this to executor count).
-    */
-  private def withShufflePartitions[A](s: SparkSession, n: Int)(body: => A): A = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", n.toString)
-    try body finally s.conf.set("spark.sql.shuffle.partitions", prev)
-  }
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(
     // NOT IN (subquery) under three-valued logic — the null-aware anti
@@ -183,18 +172,14 @@ object Surface14Queries {
       val schema = StructType(Seq(
         StructField("event_id", LongType),
         StructField("event_type", StringType)))
-      withShufflePartitions(s, 8) {
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(feed)
-          .groupBy(col("event_type")).agg(count(lit(1)).as("n"))
-          .writeStream.outputMode("complete")
-          .foreachBatch { (batch: DataFrame, epoch: Long) =>
-            batch.write.mode("overwrite").parquet(out)
-            ()
-          }
-          .option("checkpointLocation", ckpt)
-          .trigger(Trigger.AvailableNow).start().awaitTermination()
-      }
+      Stage.drain(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(feed)
+          .groupBy(col("event_type")).agg(count(lit(1)).as("n")),
+        ckpt, "complete")(
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
+          batch.write.mode("overwrite").parquet(out)
+          ()
+        })
       val nBatches = new java.io.File(s"$ckpt/offsets").listFiles()
         .count(f => f.getName.forall(_.isDigit))
       s.read.parquet(out)
@@ -227,18 +212,13 @@ object Surface14Queries {
       val schema = StructType(Seq(
         StructField("ts", org.apache.spark.sql.types.TimestampType),
         StructField("event_id", LongType)))
-      withShufflePartitions(s, 8) {
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(feed)
+      Stage.drain(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(feed)
           .withWatermark("ts", "1 hour")
           .dropDuplicatesWithinWatermark("event_id")
           .groupBy(window(col("ts"), "1 hour")).agg(count(lit(1)).as("n"))
-          .select(col("window.start").as("win_start"), col("n"))
-          .writeStream.format("parquet").option("path", out)
-          .option("checkpointLocation", ckpt)
-          .outputMode("append").trigger(Trigger.AvailableNow).start()
-          .awaitTermination()
-      }
+          .select(col("window.start").as("win_start"), col("n")),
+        ckpt)(_.format("parquet").option("path", out))
       val nStateOps = new java.io.File(s"$ckpt/state").listFiles()
         .count(_.isDirectory)
       s.read.parquet(out)

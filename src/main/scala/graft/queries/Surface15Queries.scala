@@ -16,7 +16,7 @@ import graft.operators.{Quantiles, TextAnalysis}
   * oracle under ANY partitioning and retry schedule, so every
   * per-edge contribution is an exact BIGINT).
   */
-object Surface15Queries {
+object Surface15Queries extends QuerySet {
   import Tables._
 
   /** Count-min geometry: d independent hash rows × w buckets. Tiny on

@@ -20,7 +20,7 @@ import org.apache.spark.sql.functions._
   * IEEE ops otherwise appear only in per-row scalar tails identical
   * on both engines.
   */
-object Surface16Queries {
+object Surface16Queries extends QuerySet {
   import Tables._
 
   private def emb(s: SparkSession, dir: String): DataFrame =

@@ -31,7 +31,7 @@ import org.apache.spark.sql.functions._
   * joins at all; both entries extend the engine along SURVEY §2.6's
   * LLM-pipeline axis (decontamination semi-joins, near-dup joins).
   */
-object Surface17Queries {
+object Surface17Queries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -64,7 +64,7 @@ import org.apache.spark.sql.functions._
   * retrieval, regression, sketch, or order-statistics surface; all
   * five extend SURVEY §2.5–2.6's analytics axis.
   */
-object Surface18Queries {
+object Surface18Queries extends QuerySet {
   import Tables._
 
   /** (query_id, term) pairs for e96 — a literal broadcast table. */

@@ -49,7 +49,7 @@ import org.apache.spark.sql.functions._
   * attribution nor corpus reporting; both rows extend SURVEY §2.6's
   * analytics/curation axis.
   */
-object Surface19Queries {
+object Surface19Queries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -34,7 +34,7 @@ import org.apache.spark.sql.functions._
   *    training bit-reproducible, and the oracle re-derives the same
   *    centroids in SQL.
   */
-object Surface20Queries {
+object Surface20Queries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

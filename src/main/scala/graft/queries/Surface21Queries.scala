@@ -44,7 +44,7 @@ import org.apache.spark.sql.functions._
   *    types (k = 100/1k/10k), the tokenizer-vocab sizing curve, over
   *    the scale-safe global row number.
   */
-object Surface21Queries {
+object Surface21Queries extends QuerySet {
   import Tables._
 
   private val evTypes = Seq("click", "error", "purchase", "signup", "view")

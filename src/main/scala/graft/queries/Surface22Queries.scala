@@ -48,7 +48,7 @@ import scala.reflect.runtime.universe.TypeTag
   *    ListState (c37, bounded last-3 log), MapState (c38 = the
   *    q110/c34 semantic — three implementations, one oracle).
   */
-object Surface22Queries {
+object Surface22Queries extends QuerySet {
   import Tables._
 
   /** Number of BPE merge rounds e113 and e164 train — deep enough (32)
@@ -244,13 +244,11 @@ object Surface22Queries {
       val b = EventFeed.build(s, dir, "graft-c33-", perCampaign = true,
         windowOf = (lo, hi) => 2 * ((hi - lo) / 3 + 1) + 1,
         sentinelGaps = Seq(10L, 20L))
-      val res = withRocksDb(s) {
-        EventFeed.runStream(s, b,
-          (in: org.apache.spark.sql.Dataset[
-              graft.streaming.Attribution.EvW]) =>
-            graft.streaming.Attribution.attributeWindowedTws(
-              in, b.windowUs, b.hiUs / 1000L))
-      }
+      val res = EventFeed.runStream(s, b,
+        (in: org.apache.spark.sql.Dataset[
+            graft.streaming.Attribution.EvW]) =>
+          graft.streaming.Attribution.attributeWindowedTws(
+            in, b.windowUs, b.hiUs / 1000L))
       res.groupBy(col("touch_type"))
         .agg(count(lit(1)).as("conversions"),
           Tables.dsum(col("value"), 2).as("attributed_value"))
@@ -267,12 +265,10 @@ object Surface22Queries {
     "c37_stream_last3" -> ((s, dir) => {
       val b = EventFeed.build(s, dir, "graft-c34-", perCampaign = false,
         windowOf = (_, _) => 0L, sentinelGaps = Seq.empty)
-      val res = withRocksDb(s) {
-        EventFeed.runStream(s, b,
-          (in: org.apache.spark.sql.Dataset[
-              graft.streaming.Attribution.EvW]) =>
-            graft.streaming.Attribution.last3Stream(in))
-      }
+      val res = EventFeed.runStream(s, b,
+        (in: org.apache.spark.sql.Dataset[
+            graft.streaming.Attribution.EvW]) =>
+          graft.streaming.Attribution.last3Stream(in))
       res.groupBy(col("touch_type"))
         .agg((sum(col("w")).cast("double") / lit(1000000.0))
             .as("conversions"),
@@ -290,12 +286,10 @@ object Surface22Queries {
     "c38_stream_multitouch_map" -> ((s, dir) => {
       val b = EventFeed.build(s, dir, "graft-c34-", perCampaign = false,
         windowOf = (_, _) => 0L, sentinelGaps = Seq.empty)
-      val res = withRocksDb(s) {
-        EventFeed.runStream(s, b,
-          (in: org.apache.spark.sql.Dataset[
-              graft.streaming.Attribution.EvW]) =>
-            graft.streaming.Attribution.multiTouchMapStream(in))
-      }
+      val res = EventFeed.runStream(s, b,
+        (in: org.apache.spark.sql.Dataset[
+            graft.streaming.Attribution.EvW]) =>
+          graft.streaming.Attribution.multiTouchMapStream(in))
       res.groupBy(col("touch_type"))
         .agg((sum(col("w")).cast("double") / lit(1000000.0))
             .as("conversions"),
@@ -481,26 +475,6 @@ object Surface22Queries {
               sqrt((col("n0p") - col("n2p")).cast("double") / lit(2.0))))
             .as("tau_b"))
     }))
-
-  /** `transformWithState` requires the RocksDB state-store provider;
-    * scope the conf flip to the streaming run (c23's discipline).
-    */
-  private[queries] def withRocksDb[T](s: SparkSession)(body: => T): T = {
-    val key = "spark.sql.streaming.stateStore.providerClass"
-    val prev = s.conf.getOption(key)
-    // SPARK_GRAFT_STATE_PROVIDER=hdfs is the A/B-experiment override
-    // (SCALE.md's streaming-floor studies): leave the session default
-    // so the RocksDB-pinned twins measure on the in-heap provider.
-    // Judged runs never set it — the twins keep RocksDB deliberately
-    // (exercising the durable provider IS part of their coverage).
-    if (!sys.env.get("SPARK_GRAFT_STATE_PROVIDER").contains("hdfs"))
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try body
-    finally prev match {
-      case Some(p) => s.conf.set(key, p)
-      case None => s.conf.unset(key)
-    }
-  }
 
   /** Benford's expected first-digit probability log10(1 + 1/d),
     * evaluated ONCE at query-build time on the driver; the identical

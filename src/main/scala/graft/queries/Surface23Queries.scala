@@ -51,7 +51,7 @@ import graft.operators.{Multimodal, Quantiles, Rank, TextAnalysis}
   *    twin discipline of c36/c38. State = one open interval per live
   *    key; closed intervals ship downstream immediately.
   */
-object Surface23Queries {
+object Surface23Queries extends QuerySet {
   import Tables._
 
   /** Pooled (value → per-group counts) histogram of
@@ -532,24 +532,12 @@ object Surface23Queries {
           org.apache.spark.sql.types.TimestampType)))
       val tmp = Stage.tempDir("graft-c39-").toString
       val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
-      val prev = s.conf.get("spark.sql.shuffle.partitions", "32")
-      s.conf.set("spark.sql.shuffle.partitions", "8")
-      try {
-        val in = s.readStream.schema(schema)
-          .option("maxFilesPerTrigger", "1").parquet(feed)
-          .withWatermark("ts", "0 seconds")
-          .as[graft.streaming.Scd2.Change]
-        graft.streaming.Scd2.history(in, drainFireMs = 5000L)
-          .writeStream
-          .foreachBatch {
-            (b: org.apache.spark.sql.Dataset[graft.streaming.Scd2.Version],
-             _: Long) => b.toDF().write.mode("append").parquet(out); ()
-          }
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-          .start().awaitTermination()
-      } finally s.conf.set("spark.sql.shuffle.partitions", prev)
+      val in = s.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1").parquet(feed)
+        .withWatermark("ts", "0 seconds")
+        .as[graft.streaming.Scd2.Change]
+      Stage.drain(graft.streaming.Scd2.history(in, drainFireMs = 5000L),
+        ckpt)(Stage.appendTo(out))
       s.read.parquet(out)
         .select(col("c_custkey"), col("c_acctbal"),
           col("effective_from"), col("effective_to"), col("is_current"))

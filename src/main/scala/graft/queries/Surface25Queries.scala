@@ -3,7 +3,6 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{StringType, StructField, StructType}
 
 import graft.operators.{Quantiles, Similarity, TextAnalysis}
@@ -81,7 +80,7 @@ import graft.streaming.StatefulOps
   *    final image is max(cnt) per key — exactly-once totals with no
   *    update-mode sink, and state bounded by the key domain.
   */
-object Surface25Queries {
+object Surface25Queries extends QuerySet {
   import Tables._
 
   private def d(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -531,21 +530,10 @@ object Surface25Queries {
       val tmp = Stage.tempDir("graft-c41-").toString
       val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("key", StringType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        Surface22Queries.withRocksDb(s) {
-          StatefulOps.keyCountStream(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(feed).as[String])
-            .writeStream
-            .foreachBatch {
-              (batch: Dataset[StatefulOps.KeyCount], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(Trigger.AvailableNow).start()
-            .awaitTermination()
-        }
-      }
+      Stage.drain(StatefulOps.keyCountStream(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(feed).as[String]), ckpt, "update")(
+        Stage.appendTo(out))
       val fin = s.read.parquet(out)
         .groupBy("key").agg(max(col("cnt")).as("cnt"))
       fin.crossJoin(broadcast(fin.agg(sum(col("cnt")).as("n_total"))))

@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{Quantiles, Rank, TextAnalysis}
@@ -157,7 +156,7 @@ import graft.streaming.StatefulOps
   *    relevance against diversity). Three unrolled steps over ≤10-row
   *    frames, all tiny and constant at any corpus scale.
   */
-object Surface26Queries {
+object Surface26Queries extends QuerySet {
   import Tables._
 
   private def d(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -524,21 +523,10 @@ object Surface26Queries {
       val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("w", LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        Surface22Queries.withRocksDb(s) {
-          StatefulOps.keySumStream(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(feed).as[StatefulOps.KeyWeight])
-            .writeStream
-            .foreachBatch {
-              (batch: Dataset[StatefulOps.KeySum], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(Trigger.AvailableNow).start()
-            .awaitTermination()
-        }
-      }
+      Stage.drain(StatefulOps.keySumStream(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(feed).as[StatefulOps.KeyWeight]), ckpt, "update")(
+        Stage.appendTo(out))
       mixReport(s.read.parquet(out)
         .groupBy("key").agg(max(col("total")).as("n_tok"))
         .select(col("key").as("source"), col("n_tok")))

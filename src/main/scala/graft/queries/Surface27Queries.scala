@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{DoubleType, LongType, StringType, StructField, StructType}
 
 import graft.operators.TextAnalysis
@@ -111,7 +110,7 @@ import graft.streaming.StatefulOps
   *    oracle-expressible with the same double arithmetic. ONE narrow
   *    corpus pass; reports element/saturation census and MSE.
   */
-object Surface27Queries {
+object Surface27Queries extends QuerySet {
   import Tables._
 
   private def d(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
@@ -224,21 +223,10 @@ object Surface27Queries {
       val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("w", LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        Surface22Queries.withRocksDb(s) {
-          StatefulOps.keySumStream(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(feed).as[StatefulOps.KeyWeight])
-            .writeStream
-            .foreachBatch {
-              (batch: Dataset[StatefulOps.KeySum], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(Trigger.AvailableNow).start()
-            .awaitTermination()
-        }
-      }
+      Stage.drain(StatefulOps.keySumStream(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(feed).as[StatefulOps.KeyWeight]), ckpt, "update")(
+        Stage.appendTo(out))
       Surface26Queries.guardrailPanel(s.read.parquet(out)
         .groupBy("key").agg(max(col("total")).as("x"))
         .select((col("key").cast("long") % 2).as("grp"), col("x")))
@@ -335,21 +323,10 @@ object Surface27Queries {
       val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("w", LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        Surface22Queries.withRocksDb(s) {
-          StatefulOps.keySumStream(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(feed).as[StatefulOps.KeyWeight])
-            .writeStream
-            .foreachBatch {
-              (batch: Dataset[StatefulOps.KeySum], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(Trigger.AvailableNow).start()
-            .awaitTermination()
-        }
-      }
+      Stage.drain(StatefulOps.keySumStream(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(feed).as[StatefulOps.KeyWeight]), ckpt, "update")(
+        Stage.appendTo(out))
       val merged = s.read.parquet(out)
         .groupBy("key").agg(max(col("total")).as("cell"))
         .select(split(col("key"), "\\|").getItem(0).cast("int").as("j"),

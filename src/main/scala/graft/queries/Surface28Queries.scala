@@ -2,7 +2,6 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.{Dedup, Similarity}
@@ -51,7 +50,7 @@ import graft.streaming.StatefulOps
   *  cross-job driver-built form — so this wave adds the PlanAuditSpec
   *  gate on q92's plan instead of a third sibling query.
   */
-object Surface28Queries {
+object Surface28Queries extends QuerySet {
   import Tables._
 
   /** SemDeDup near-dup threshold: at the synthetic corpus's cosine
@@ -196,10 +195,9 @@ object Surface28Queries {
         StructField("embedding", org.apache.spark.sql.types.ArrayType(
           org.apache.spark.sql.types.FloatType))))
       val cents = Similarity.syntheticCentroids(SimilarityQueries.ivfN, 64)
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      Stage.drain(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(feed), ckpt, "update")(
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           Dedup.semDedupDelta(batch, corpus, "vec_id", "embedding",
               cents, semThreshold,
               selfDot = v => vd(v, v),
@@ -207,10 +205,7 @@ object Surface28Queries {
                 vd(a, b) / (sqrt(na) * sqrt(nb)))
             .write.mode("append").parquet(out)
           ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("update").trigger(Trigger.AvailableNow).start()
-        .awaitTermination()
+        })
       s.read.parquet(out).distinct()
     }),
 
@@ -241,21 +236,10 @@ object Surface28Queries {
       val out = s"$tmp/out"; val ckpt = s"$tmp/ckpt"
       val schema = StructType(Seq(StructField("key", StringType),
         StructField("w", LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        Surface22Queries.withRocksDb(s) {
-          StatefulOps.keySumStream(
-            s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-              .parquet(feed).as[StatefulOps.KeyWeight])
-            .writeStream
-            .foreachBatch {
-              (batch: Dataset[StatefulOps.KeySum], _: Long) =>
-                batch.write.mode("append").parquet(out); ()
-            }
-            .option("checkpointLocation", ckpt)
-            .outputMode("update").trigger(Trigger.AvailableNow).start()
-            .awaitTermination()
-        }
-      }
+      Stage.drain(StatefulOps.keySumStream(
+          s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
+            .parquet(feed).as[StatefulOps.KeyWeight]), ckpt, "update")(
+        Stage.appendTo(out))
       val perUser = s.read.parquet(out)
         .groupBy("key").agg(max(col("total")).as("t"))
         .select(split(col("key"), "\\|").getItem(0).cast("long")

@@ -81,7 +81,7 @@ import graft.operators.{Dedup, Similarity, VectorIndex}
   *    and reads exactly nprobe FILES. Same e33 oracle: maintenance
   *    changes file count and read cost, never what a probe returns.
   */
-object Surface29Queries {
+object Surface29Queries extends QuerySet {
   import Tables._
 
   /** e179's near-dup threshold — e174's value (the corpus cosine
@@ -234,10 +234,9 @@ object Surface29Queries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("id_b",
           org.apache.spark.sql.types.LongType)))
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, id: Long) =>
+      Stage.drain(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(feed), ckpt, "update")(
+        _.foreachBatch { (batch: DataFrame, id: Long) =>
           // version paths derive from the BATCH ID, never a mutable
           // pointer: a retried batch k re-reads v{k} and overwrites
           // v{k+1} — the read path is never the write path, so
@@ -249,11 +248,7 @@ object Surface29Queries {
           next.write.mode("overwrite").parquet(s"$tmp/labels-v${id + 1}")
           last = math.max(last, id + 1)
           ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-        .start().awaitTermination()
+        })
       s.read.parquet(s"$tmp/labels-v$last")
         .select(col("id").as("doc_id"), col("component"))
     }),
@@ -291,17 +286,12 @@ object Surface29Queries {
         org.apache.spark.sql.types.StructField("embedding",
           org.apache.spark.sql.types.ArrayType(
             org.apache.spark.sql.types.FloatType))))
-      s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(feed)
-        .writeStream
-        .foreachBatch { (batch: DataFrame, _: Long) =>
+      Stage.drain(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(feed), ckpt, "update")(
+        _.foreachBatch { (batch: DataFrame, _: Long) =>
           VectorIndex.append(batch, "embedding", cents, layout)
           ()
-        }
-        .option("checkpointLocation", ckpt)
-        .outputMode("update")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-        .start().awaitTermination()
+        })
       val (q, qCells) = probeCells(s, dir, cents, 2)
       val probed = VectorIndex.probe(s, layout, q, qCells, 10,
         "vec_id", "embedding", dedupKey = true,
@@ -404,17 +394,11 @@ object Surface29Queries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("event_id",
           org.apache.spark.sql.types.LongType)))
-      RuntimeQueries.withStatePartitions(s, 8) {
-        s.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-          .parquet(feed)
+      Stage.drain(s.readStream.schema(schema)
+          .option("maxFilesPerTrigger", "1").parquet(feed)
           .groupBy("event_type")
-          .agg(count(lit(1)).as("cnt"), sum(col("vm")).as("value_m"))
-          .writeStream.format("noop")
-          .option("checkpointLocation", ckpt)
-          .outputMode("update")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-          .start().awaitTermination()
-      }
+          .agg(count(lit(1)).as("cnt"), sum(col("vm")).as("value_m")),
+        ckpt, "update")(_.format("noop"))
       s.read.format("statestore").load(ckpt)
         .select(col("key.event_type").as("event_type"),
           col("value.count").as("cnt"),
@@ -453,25 +437,12 @@ object Surface29Queries {
           org.apache.spark.sql.types.LongType),
         org.apache.spark.sql.types.StructField("value",
           org.apache.spark.sql.types.DoubleType)))
-      val key = "spark.sql.streaming.stateStore.providerClass"
-      val prevProvider = s.conf.getOption(key)
-      // transformWithState REQUIRES RocksDB (multiple column
-      // families) — set unconditionally, restore after
-      s.conf.set(key, "org.apache.spark.sql.execution.streaming." +
-        "state.RocksDBStateStoreProvider")
-      try RuntimeQueries.withStatePartitions(s, 8) {
-        graft.streaming.StatefulOps.orderedDeltaStream(
+      // transformWithState: Stage.drain runs it on RocksDB (multiple
+      // column families), the store the statestore reader reads back
+      Stage.drain(graft.streaming.StatefulOps.orderedDeltaStream(
           s.readStream.schema(schema).parquet(feed)
-            .as[graft.streaming.StatefulOps.SeqValue])
-          .writeStream.format("noop")
-          .option("checkpointLocation", ckpt)
-          .outputMode("append")
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow)
-          .start().awaitTermination()
-      } finally prevProvider match {
-        case Some(p) => s.conf.set(key, p)
-        case None    => s.conf.unset(key)
-      }
+            .as[graft.streaming.StatefulOps.SeqValue]), ckpt)(
+        _.format("noop"))
       s.read.format("statestore").option("stateVarName", "last")
         .load(ckpt)
         .select(col("key.value").as("key"),

@@ -15,7 +15,7 @@ import org.apache.spark.sql.functions._
   * is a single exchange on the join key; subqueries compile to
   * semi/anti joins with the exact-decimal scalar mean broadcast.
   */
-object Surface2Queries {
+object Surface2Queries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -11,7 +11,7 @@ import graft.operators.TextAnalysis
   * corpus bigram/LM-scoring pair. All outputs are scalar primitives and
   * every query carries a full DuckDB value oracle.
   */
-object Surface3Queries {
+object Surface3Queries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

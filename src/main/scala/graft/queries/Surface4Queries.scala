@@ -13,7 +13,7 @@ import graft.operators.TextAnalysis
   * pooling, ANN recall). All outputs are scalar primitives with full
   * DuckDB value oracles.
   */
-object Surface4Queries {
+object Surface4Queries extends QuerySet {
   import Tables._
 
   private val allMarkers = TextAnalysis.langMarkers.flatMap(_._2)

@@ -14,7 +14,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * comparisons are exact-integer (quantities in cents), so the judged
   * result is identical on any engine at any parallelism.
   */
-object Surface5Queries {
+object Surface5Queries extends QuerySet {
   import Tables._
 
   private def views(s: SparkSession, dir: String, names: String*): Unit =

@@ -25,7 +25,7 @@ import org.apache.spark.sql.functions._
   * user_id, so a 100 TB event log stays one co-partitioned exchange
   * family.
   */
-object Surface6Queries {
+object Surface6Queries extends QuerySet {
   import Tables._
 
   private def views(s: SparkSession, dir: String, names: String*): Unit =

@@ -14,7 +14,7 @@ import graft.operators.Rank
   * division of exact integers — so the judged frame is bit-identical
   * on any engine at any parallelism.
   */
-object Surface7Queries {
+object Surface7Queries extends QuerySet {
   import Tables._
 
   private val tokensSql =

@@ -16,7 +16,7 @@ import org.apache.spark.sql.functions._
   *    enumeration over canonically-ordered edges (id_a < id_b), the
   *    standard two-join shape that never materializes all pairs.
   */
-object Surface8Queries {
+object Surface8Queries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -23,7 +23,7 @@ import org.apache.spark.sql.functions._
   * cast back to double, so results are partition-invariant and match
   * DuckDB bit-for-bit.
   */
-object Surface9Queries {
+object Surface9Queries extends QuerySet {
   import Tables._
 
   private val rev4 = col("l_extendedprice") * (lit(1) - col("l_discount"))

@@ -8,7 +8,7 @@ import graft.operators.TextAnalysis
   * over the `documents` table, all through [[graft.operators.TextAnalysis]]
   * expressions with full DuckDB oracles.
   */
-object TextQueries {
+object TextQueries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -15,7 +15,7 @@ import graft.transforms.Transforms
   * through Spark's shortest-repr string cast, which is exact, so oracle
   * values are the original column values.
   */
-object TransformQueries {
+object TransformQueries extends QuerySet {
   import Tables._
 
   private val priceSchema = StructType(Seq(
@@ -156,24 +156,15 @@ object TransformQueries {
           "/ticker"
         val schema = StructType(Seq(StructField("symbol", StringType),
           StructField("price", StringType)))
-        for (_ <- 1 to 4) {
-          val q = s.readStream.format("graft.sources.PollSourceProvider")
+        for (_ <- 1 to 4)
+          Stage.drain(s.readStream.format("graft.sources.PollSourceProvider")
             .option("url", url).option("params", "symbol=BTCUSDT")
             .option("spool", s"$base/spool").load()
             .select(col("poll"),
               from_json(col("value"), schema).as("r"))
             .select(col("poll"), col("r.symbol").as("symbol"),
-              col("r.price").cast(DoubleType).as("price"))
-            .writeStream
-            .foreachBatch {
-              (b: org.apache.spark.sql.DataFrame, _: Long) =>
-                b.write.mode("append").parquet(s"$base/out"); ()
-            }
-            .option("checkpointLocation", s"$base/ckpt")
-            .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-            .start()
-          q.awaitTermination()
-        }
+              col("r.price").cast(DoubleType).as("price")),
+            s"$base/ckpt")(Stage.appendTo(s"$base/out"))
         s.read.parquet(s"$base/out")
       } finally server.stop(0)
     }),

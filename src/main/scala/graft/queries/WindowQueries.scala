@@ -14,7 +14,7 @@ import org.apache.spark.sql.functions._
   * partitions — at 100 TB the partition key (user_id) bounds state,
   * matching `withWatermark` + `session_window` in the streaming form.
   */
-object WindowQueries {
+object WindowQueries extends QuerySet {
   import Tables._
 
   val all: Map[String, (SparkSession, String) => DataFrame] = Map(

@@ -5,18 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local session for all suites (sbt forks one test JVM). */
 object SparkTestSession {
-  lazy val session: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[2]")
-      .config("spark.sql.shuffle.partitions", "2")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.optimizer.excludedRules",
-        graft.Graft.excludedOptimizerRules)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val session: SparkSession = Session.local(2)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
