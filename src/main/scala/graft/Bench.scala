@@ -37,12 +37,11 @@ import org.apache.spark.sql.SparkSession
   *     a staged fixture the envelope charges for (q87/e15-style), so
   *     the rerun is not a valid re-measurement — the first timing is
   *     kept and the entry is marked unadjudicated.
-  *  3. `suspect:true` whenever the probes spread >3×, an
-  *     unadjudicated outlier remains, OR the envelope failed to load
-  *     (`ref_loaded:0`) — i.e. whenever the printed total may still
-  *     not reflect the engine. `ref_loaded` discloses how many
-  *     envelope lines the run actually compared against, so a skipped
-  *     pass is visible instead of indistinguishable from a clean one.
+  *  3. `suspect:true` whenever the printed total may still not
+  *     reflect the engine (see [[suspect]]). `ref_loaded` discloses
+  *     how many envelope lines the run actually compared against, so a
+  *     skipped pass is visible instead of indistinguishable from a
+  *     clean one.
   */
 object Bench {
   private val probeEvery = 20
@@ -111,6 +110,20 @@ object Bench {
     */
   private[graft] val pinnedDetail = Seq("q1_agg", "q3_join", "e79_band_sweep")
 
+  /** Max/min of the probes that ran; 1 when there is nothing to compare. */
+  private[graft] def probeSpread(probes: Seq[Double]): Double =
+    if (probes.nonEmpty && probes.min > 0) probes.max / probes.min else 1.0
+
+  /** The `suspect` flag: true when the successful probes spread >3×, a
+    * probe or a timed query failed, no query passed (`n == 0`), an
+    * unadjudicated outlier remains, or the envelope failed to load
+    * (`refLoaded == 0`).
+    */
+  private[graft] def suspect(spread: Double, probesFailed: Int, failed: Int, n: Int,
+                             unadjudicated: Int, refLoaded: Int): Boolean =
+    spread > 3.0 || probesFailed > 0 || failed > 0 || n == 0 ||
+      unadjudicated > 0 || refLoaded == 0
+
   private[graft] def headlineJson(
       total: Double, n: Int, sfDir: String,
       slowestFirst: Seq[(String, Double)], failed: Seq[String],
@@ -170,8 +183,9 @@ object Bench {
     // keyed `warmup:<name>` / `probe:<name>`; they go to
     // bench_detail.json with the timed queries' causes
     val untimedFailures = scala.collection.mutable.LinkedHashMap[String, String]()
-    def untimed(key: String)(body: => Unit): Unit =
-      try body catch { case e: Throwable => untimedFailures(key) = cause(e) }
+    def untimed(key: String)(body: => Unit): Boolean =
+      try { body; true }
+      catch { case e: Throwable => untimedFailures(key) = cause(e); false }
     // untimed warmup: JIT/codegen + parquet reader init + first-touch
     // I/O on a FULL scan of every testdata table, so no measured query
     // is charged for JVM startup or cold page cache — which query pays
@@ -223,14 +237,17 @@ object Bench {
     }
     // interleaved contention probe: a pure, already-warm query; never
     // one that stages a fixture on first touch (those re-run 50×+
-    // faster by design and would always cry wolf)
+    // faster by design and would always cry wolf). A failed probe is
+    // counted, not timed: its time says nothing about contention.
     val probeFn = SparkEntry.queries.get("q1_agg")
     val probes = scala.collection.mutable.ListBuffer[Double]()
+    var probesFailed = 0
     def probe(): Unit = probeFn.foreach { fn =>
       val t0 = System.nanoTime()
-      untimed("probe:q1_agg")(
-        fn(spark, sfDir).write.format("noop").mode("overwrite").save())
-      probes += (System.nanoTime() - t0) / 1e9
+      if (untimed("probe:q1_agg")(
+          fn(spark, sfDir).write.format("noop").mode("overwrite").save()))
+        probes += (System.nanoTime() - t0) / 1e9
+      else probesFailed += 1
     }
     probe()
     val ordered = selected.toSeq
@@ -240,8 +257,7 @@ object Bench {
       if ((i + 1) % probeEvery == 0) probe()
     }
     probe()
-    val probeSpread =
-      if (probes.nonEmpty && probes.min > 0) probes.max / probes.min else 1.0
+    val spread = probeSpread(probes.toSeq)
     // reference-envelope outlier pass (committed clean per-query map).
     // The file is ALWAYS expected — r12's judged run executed from a
     // different working directory, the old relative-only lookup missed
@@ -303,16 +319,12 @@ object Bench {
           }
       }
     }
-    val unadjudicated = outliers.count(!_._5)
-    // ref.isEmpty => the envelope pass could not run; the number may be
-    // fine, but nothing adjudicated it — disclose, don't vouch.
-    val suspect = probeSpread > 3.0 || unadjudicated > 0 || ref.isEmpty
     // the session's state-store provider; Stage.drain runs each
     // transformWithState stream on RocksDB whatever this says
     val providerJson = jstr(
       spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
         .map(_.split("\\.").last).getOrElse("default"))
-    val probeJson = s""""state_provider":$providerJson,"probes":{"n":${probes.size},"min":${ms(if (probes.isEmpty) 0 else probes.min)},"max":${ms(if (probes.isEmpty) 0 else probes.max)},"spread":${ms(probeSpread)}}"""
+    val probeJson = s""""state_provider":$providerJson,"probes":{"n":${probes.size},"min":${ms(if (probes.isEmpty) 0 else probes.min)},"max":${ms(if (probes.isEmpty) 0 else probes.max)},"spread":${ms(spread)}}"""
     // full, uncapped outlier disclosure goes to bench_detail.json only
     val fullOutlierJson = outliers.map { case (n, f, r2, rf, adj) =>
       s"""{"name":${jstr(n)},"first":${ms(f)},"rerun":${ms(r2)},"ref":${ms(rf)},"adjudicated":$adj}"""
@@ -322,15 +334,19 @@ object Bench {
     // masquerade as a sub-second success
     val ok = results.filterNot { case (k, _) => failed.contains(k) }
     val total = if (ok.nonEmpty) ok.values.sum else 0.0
+    // ref.isEmpty => the envelope pass could not run; the number may be
+    // fine, but nothing adjudicated it — disclose, don't vouch.
+    val isSuspect = suspect(spread, probesFailed, failed.size, ok.size,
+      outliers.count(!_._5), ref.size)
     val fs = failed.keys.map(jstr).mkString("[", ",", "]")
     val line = headlineJson(total, ok.size, sfDir,
       ok.toSeq.sortBy(-_._2), failed.keys.toSeq,
-      probeJson, outliers.toSeq, ref.size, suspect, cpus)
+      probeJson, outliers.toSeq, ref.size, isSuspect, cpus)
     try {
       val p = java.nio.file.Paths.get("target", "bench_detail.json")
       java.nio.file.Files.createDirectories(p.getParent)
       java.nio.file.Files.write(p,
-        s"""{"total":${ms(total)},"n":${ok.size},"cpus":$cpus,$probeJson,"ref_loaded":${ref.size},"outliers":$fullOutlierJson,"suspect":$suspect,"queries":${dict(ok.toSeq.sortBy(_._1))},"failed":$fs,"failure_causes":${strDict(failed)},"untimed_failures":${strDict(untimedFailures)},"sf":${jstr(sfDir)}}"""
+        s"""{"total":${ms(total)},"n":${ok.size},"cpus":$cpus,$probeJson,"ref_loaded":${ref.size},"outliers":$fullOutlierJson,"suspect":$isSuspect,"queries":${dict(ok.toSeq.sortBy(_._1))},"failed":$fs,"failure_causes":${strDict(failed)},"untimed_failures":${strDict(untimedFailures)},"sf":${jstr(sfDir)}}"""
           .getBytes("UTF-8"))
     } catch { case e: Throwable =>
       System.err.println(s"[bench] bench_detail.json not written: ${cause(e)}")

@@ -26,4 +26,19 @@ object Session {
     functions.GraftFunctions.register(s)
     s
   }
+
+  /** Run `body` with the confs `kv` set on `s`, then put back what was
+    * there before, also when `body` throws: a previous value is
+    * restored and a key that was unset is unset again.
+    */
+  def withConf[T](s: SparkSession)(kv: (String, String)*)(body: => T): T = {
+    val before = s.conf.getAll
+    val prev = kv.map { case (k, _) => k -> before.get(k) }
+    kv.foreach { case (k, v) => s.conf.set(k, v) }
+    try body
+    finally prev.foreach {
+      case (k, Some(v)) => s.conf.set(k, v)
+      case (k, None) => s.conf.unset(k)
+    }
+  }
 }

@@ -64,24 +64,32 @@ object Debezium {
           "missing_after")
         .otherwise("clean"))
 
+  /** The envelopes of `raw` whose `op` is one of `ops`, as the top-level
+    * envelope columns (`before`, `after`, `op`, `ts_ms`, `source`). The
+    * op filter runs inside the one generator that emits the parsed
+    * envelope, so `from_json` is evaluated once per record: a `where`
+    * on the parsed struct is pushed below the projection and parses
+    * every envelope a second time.
+    */
+  private def envelopes(raw: DataFrame, row: StructType, valueCol: String,
+                        ops: Seq[String]): DataFrame =
+    raw.select(inline(filter(
+      array(from_json(col(valueCol).cast(StringType), envelopeSchema(row))),
+      e => e("op").isin(ops: _*))))
+
   /** C2: `ExtractNewRecordState` semantics — parse the envelope, keep
     * create/read/update events, flatten to the `after` row image.
     */
   def unwrap(raw: DataFrame, row: StructType, valueCol: String = "value"): DataFrame =
-    raw
-      .select(from_json(col(valueCol).cast(StringType), envelopeSchema(row)).as("e"))
-      .where(col("e.op").isin(upsertOps: _*))
-      .select(col("e.after.*"))
+    envelopes(raw, row, valueCol, upsertOps).select(col("after.*"))
 
   /** C2 variant keeping envelope metadata (`ts_ms`, `op`) alongside the
     * row image — the input the keyed upsert sink needs to pick a
     * last-wins survivor on redelivery (SURVEY.md §2.4 C6).
     */
   def unwrapWithMeta(raw: DataFrame, row: StructType, valueCol: String = "value"): DataFrame =
-    raw
-      .select(from_json(col(valueCol).cast(StringType), envelopeSchema(row)).as("e"))
-      .where(col("e.op").isin(upsertOps: _*))
-      .select(col("e.after.*"), col("e.ts_ms"), col("e.op"))
+    envelopes(raw, row, valueCol, upsertOps)
+      .select(col("after.*"), col("ts_ms"), col("op"))
 
   /** C1 fixture side for deletes: Debezium delete events carry the old
     * row in `before` with `after` null.
@@ -101,12 +109,10 @@ object Debezium {
     */
   def unwrapWithDeletes(raw: DataFrame, row: StructType,
                         valueCol: String = "value"): DataFrame =
-    raw
-      .select(from_json(col(valueCol).cast(StringType), envelopeSchema(row)).as("e"))
-      .where(col("e.op").isin((upsertOps :+ "d"): _*))
-      .select(when(col("e.op") === "d", col("e.before"))
-        .otherwise(col("e.after")).as("r"),
-        col("e.ts_ms"), col("e.op"))
+    envelopes(raw, row, valueCol, upsertOps :+ "d")
+      .select(when(col("op") === "d", col("before"))
+        .otherwise(col("after")).as("r"),
+        col("ts_ms"), col("op"))
       .select(col("r.*"), col("ts_ms"), col("op"))
 
   /** Topic naming: `<serverName>.public.<table>`

@@ -304,7 +304,7 @@ object Dedup {
     // symmetric adjacency is coalesced to the same width so the
     // per-hop scans match the shuffle.
     val spark = edges.sparkSession
-    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions", "32")
+    val sessionParts = spark.conf.get("spark.sql.shuffle.partitions")
     // materialize the edge frame ONCE up front: the symmetric union
     // below references it twice and the sizing count a third time —
     // un-checkpointed, each reference would re-run the whole candidate
@@ -316,8 +316,8 @@ object Dedup {
       .union(edgesM.select(col(b).as("src"), col(a).as("dst")))
       .coalesce(graphParts)
       .persist()
-    spark.conf.set("spark.sql.shuffle.partitions", graphParts.toString)
-    try {
+    graft.Session.withConf(spark)(
+        "spark.sql.shuffle.partitions" -> graphParts.toString) {
     // Each sweep references the previous labels frame several times
     // (neighbor join, least(), change count), so chaining plain lazy
     // plans doubles the plan tree per sweep — 2^sweeps nodes by sweep 30.
@@ -368,7 +368,7 @@ object Dedup {
       connectedComponentsContraction(edgesM, a, b)
     else
       labels.select(col("id"), col("label").as("component"))
-    } finally spark.conf.set("spark.sql.shuffle.partitions", sessionParts)
+    }
   }
 
   /** Alternating large-star/small-star contraction (the public

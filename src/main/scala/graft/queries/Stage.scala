@@ -15,11 +15,11 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
 
 /** Staged frames, in two tiers, and the bounded run of a judged stream.
   *
-  * The RUN-SCOPED tier ([[frame]], [[tempDir]]) lives in a temp dir
-  * deleted on JVM exit: run-scoped intermediates and streaming
-  * checkpoints. Durable storage, never executor memory, so nothing
-  * stays pinned in the block manager between queries (a `persist` here
-  * would survive the query that created it).
+  * The RUN-SCOPED tier ([[tempDir]]) is a temp dir deleted on JVM
+  * exit: run-scoped intermediates, sinks and streaming checkpoints.
+  * Durable storage, never executor memory, so nothing stays pinned in
+  * the block manager between queries (a `persist` here would survive
+  * the query that created it).
   *
   * The DURABLE tier ([[durable]] and its format wrappers
   * [[durableFrame]], [[durableScalar]], [[durableChunkFeed]]) lives
@@ -31,25 +31,8 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   *
   * [[drain]] runs every judged stream over such feeds, one policy for
   * trigger, state partitions and state-store provider.
-  *
-  * Callers whose `build` depends on ANOTHER staged frame must resolve
-  * that dependency BEFORE calling [[frame]] (hoist it to a local val):
-  * nested `computeIfAbsent` on the shared map is a recursive update.
   */
 object Stage {
-  private val paths =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-
-  def frame(s: SparkSession, key: String, prefix: String)
-           (build: => DataFrame): DataFrame = {
-    val path = paths.computeIfAbsent(key, _ => {
-      val p = tempDir(prefix).toString + "/data"
-      build.write.mode("overwrite").parquet(p)
-      p
-    })
-    s.read.parquet(path)
-  }
-
   // One shutdown hook sweeps every staged dir (a hook thread per dir
   // would accumulate with the number of staged keys).
   private val cleanupDirs =
@@ -251,21 +234,13 @@ object Stage {
     */
   def drain[T](stream: Dataset[T], ckpt: String, mode: String = "append")
               (sink: DataStreamWriter[T] => DataStreamWriter[T]): Unit = {
-    val s = stream.sparkSession
     val tws = stream.queryExecution.analyzed.exists(_.isInstanceOf[TransformWithState])
-    def put(confs: Seq[(String, Option[String])]): Unit = confs.foreach {
-      case (k, Some(v)) => s.conf.set(k, v)
-      case (k, None) => s.conf.unset(k)
+    val run = (StatePartitions -> "8") +: Option.when(tws)(StateProvider -> RocksDb).toSeq
+    graft.Session.withConf(stream.sparkSession)(run: _*) {
+      sink(stream.writeStream.option("checkpointLocation", ckpt)
+          .outputMode(mode).trigger(Trigger.AvailableNow))
+        .start().awaitTermination()
     }
-    val run = Seq(StatePartitions -> Some("8"),
-      StateProvider -> Option.when(tws)(RocksDb))
-    val set = s.conf.getAll
-    val prev = run.map { case (k, _) => k -> set.get(k) }
-    put(run)
-    try sink(stream.writeStream.option("checkpointLocation", ckpt)
-        .outputMode(mode).trigger(Trigger.AvailableNow))
-      .start().awaitTermination()
-    finally put(prev)
   }
 
   /** The common [[drain]] sink: each micro-batch appends parquet to `out`. */

@@ -79,10 +79,7 @@ object Surface10Queries extends QuerySet {
         t(s, dir, "orders")
           .select("o_orderkey", "o_custkey", "o_totalprice"))
       val tmp = Stage.tempDir("graft-q86-run-").toString
-      val prevThreshold =
-        s.conf.get("spark.sql.autoBroadcastJoinThreshold", "10485760")
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+      graft.Session.withConf(s)("spark.sql.autoBroadcastJoinThreshold" -> "-1") {
         val joined = s.table(s"q86_orders_$sfKey")
           .join(s.table(s"q86_lines_$sfKey"),
             col("o_orderkey") === col("l_orderkey"))
@@ -92,8 +89,6 @@ object Surface10Queries extends QuerySet {
         require(!plan.contains("Exchange"),
           s"bucketed join must not shuffle:\n$plan")
         joined.write.mode("overwrite").parquet(s"$tmp/result")
-      } finally {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
       }
       s.read.parquet(s"$tmp/result")
     }),

@@ -75,17 +75,11 @@ object Surface11Queries extends QuerySet {
     // oracle — pruning must be semantically invisible.
     "q92_runtime_filter" -> ((s, dir) => {
       val tmp = Stage.tempDir("graft-q92-").toString
-      val prev = Seq(
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.optimizer.runtime.bloomFilter.enabled",
-        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold")
-        .map(k => k -> s.conf.getOption(k)).toMap
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        s.conf.set(
-          "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold",
-          "0")
+      graft.Session.withConf(s)(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+        "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" ->
+          "0") {
         val ord = t(s, dir, "orders")
           .where(col("o_orderdate") >= lit("1996-03-01").cast("timestamp") &&
             col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
@@ -100,9 +94,6 @@ object Surface11Queries extends QuerySet {
         require(plan.contains("might_contain"),
           s"runtime bloom filter must be injected:\n$plan")
         joined.write.mode("overwrite").parquet(s"$tmp/result")
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
       }
       s.read.parquet(s"$tmp/result")
     }),
@@ -123,20 +114,12 @@ object Surface11Queries extends QuerySet {
     // make the 90%-key partition skewed at any sf.
     "q105_skew_join" -> ((s, dir) => {
       val tmp = Stage.tempDir("graft-q105-").toString
-      val prev = Seq(
-        "spark.sql.autoBroadcastJoinThreshold",
-        "spark.sql.adaptive.skewJoin.enabled",
-        "spark.sql.adaptive.skewJoin.skewedPartitionFactor",
-        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes",
-        "spark.sql.adaptive.advisoryPartitionSizeInBytes")
-        .map(k => k -> s.conf.getOption(k)).toMap
-      try {
-        s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-        s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "1.0")
-        s.conf.set(
-          "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "1KB")
-        s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1KB")
+      graft.Session.withConf(s)(
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1",
+        "spark.sql.adaptive.skewJoin.enabled" -> "true",
+        "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "1.0",
+        "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "1KB",
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "1KB") {
         // hot key: ~90% of lineitem rows join to order key 1 (present
         // at every sf); the rest keep their real key. The repartition
         // synthesizes upstream MAP parallelism: AQE splits a skewed
@@ -197,9 +180,6 @@ object Surface11Queries extends QuerySet {
           }
         require(gatedPlan.contains("skew=true"),
           s"AQE must split the skewed join partition:\n$gatedPlan")
-      } finally prev.foreach {
-        case (k, Some(v)) => s.conf.set(k, v)
-        case (k, None)    => s.conf.unset(k)
       }
       s.read.parquet(s"$tmp/result")
     }),

@@ -1,6 +1,6 @@
 package graft.sinks
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -79,18 +79,11 @@ object Sinks {
     * restores it. Judged by `e182_backfill_overwrite`.
     */
   def overwritePartitions(df: DataFrame, path: String,
-                          partitionCols: Seq[String]): Unit = {
-    val s = df.sparkSession
-    val key = "spark.sql.sources.partitionOverwriteMode"
-    val prev = s.conf.getOption(key)
-    s.conf.set(key, "dynamic")
-    try df.write.mode("overwrite")
-      .partitionBy(partitionCols: _*).parquet(path)
-    finally prev match {
-      case Some(v) => s.conf.set(key, v)
-      case None    => s.conf.unset(key)
+                          partitionCols: Seq[String]): Unit =
+    graft.Session.withConf(df.sparkSession)(
+        "spark.sql.sources.partitionOverwriteMode" -> "dynamic") {
+      df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
     }
-  }
 
   /** K1, live form: JDBC append with the reference sink's knobs mapped —
     * `batchsize` = the 32-record micro-batches, `numPartitions` bounds
@@ -111,21 +104,15 @@ object Sinks {
       .option("queryTimeout", queryTimeoutSec)
       .jdbc(url, table, props)
 
-  /** C6: foreachBatch writer for streaming — dedup-by-key within the batch
-    * (redelivered records collapse), then append. With checkpointing this
-    * gives at-least-once delivery to an idempotent keyed sink, the
-    * reference's end-to-end contract (SURVEY.md §2.4 C6).
-    */
-  def idempotentBatchWriter(keys: Seq[String], orderCols: Seq[String], path: String)
-      : (Dataset[Row], Long) => Unit = { (batch, _) =>
-    appendParquet(upsertLastWins(batch.toDF(), keys, orderCols), path)
-  }
-
   /** Read-side upsert view of an appended sink log: last-wins per key
     * across all appended batches — the parquet analog of Cassandra's
     * SSTable-append + read-path merge, which is exactly how the
-    * reference's sink turns at-least-once redelivery into upserts. Run
-    * periodically as compaction at scale.
+    * reference's sink turns at-least-once redelivery into upserts (C6:
+    * `Pipeline.run` appends every delivered record; this is the one
+    * place last-wins is applied). On a streaming file-sink directory
+    * the read goes through its `_spark_metadata` log, so only committed
+    * batches are seen, each once. Run periodically as compaction at
+    * scale.
     */
   def sinkState(spark: org.apache.spark.sql.SparkSession, path: String,
                 keys: Seq[String], orderCols: Seq[String]): DataFrame =

@@ -114,6 +114,25 @@ class BenchFramingSpec extends AnyFunSuite {
     assert(m2.get("queries").has("q1_agg"))
   }
 
+  test("suspect: a run whose queries and probes all failed is never clean") {
+    // the shape of an empty SPARK_GRAFT_SF_DIR with
+    // SPARK_GRAFT_ONLY=q1_agg,c9_stream_window: both timed queries fail,
+    // every probe fails and so none is timed, nothing passes
+    assert(Bench.probeSpread(Nil) === 1.0)
+    assert(Bench.suspect(Bench.probeSpread(Nil), probesFailed = 2, failed = 2, n = 0,
+      unadjudicated = 0, refLoaded = 391))
+    def alone(spread: Double = 1.2, probesFailed: Int = 0, failed: Int = 0,
+              n: Int = 10, unadjudicated: Int = 0, refLoaded: Int = 391) =
+      Bench.suspect(spread, probesFailed, failed, n, unadjudicated, refLoaded)
+    assert(!alone(), "a clean run is not suspect")
+    assert(alone(probesFailed = 1))
+    assert(alone(failed = 1))
+    assert(alone(n = 0))
+    assert(alone(spread = Bench.probeSpread(Seq(0.1, 0.35))))
+    assert(alone(unadjudicated = 1))
+    assert(alone(refLoaded = 0))
+  }
+
   test("clean run (zero outliers, short run) keeps the courtesy top-25 map") {
     val l = Bench.headlineJson(250.9, 317, "/root/testdata/sf0.1",
       queries, Nil, probeJson, Nil, refLoaded = 317, suspect = false)

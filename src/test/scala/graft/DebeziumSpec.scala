@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.catalyst.expressions.JsonToStructs
 import org.apache.spark.sql.functions._
 import graft.cdc.Debezium
 import graft.schemas.Catalog
@@ -32,6 +33,31 @@ class DebeziumSpec extends SparkSpec {
     val schema = org.apache.spark.sql.types.StructType(lpSchema.take(3))
     val out = Debezium.unwrapWithMeta(env, schema).collect()
     assert(out.toSeq === Seq(Row(1, "A", 1.0, 42L, "c")))
+  }
+
+  test("every unwrap form and Pipeline.tableStream parse each envelope once (C2)") {
+    def parses(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan.collect { case n =>
+        n.expressions.map(_.collect { case j: JsonToStructs => j }.size).sum
+      }.sum
+    val schema = org.apache.spark.sql.types.StructType(lpSchema.take(3))
+    // a file source: over a local relation the optimizer would evaluate
+    // the whole plan itself and no parse would be left to count
+    val feed = java.nio.file.Files.createTempDirectory("graft-parse").toString + "/env"
+    Debezium.wrap(Seq((1, "A", 1.0)).toDF("id", "symbol", "price"),
+      lit("c"), "latest_prices", lit(1L))
+      .withColumn("topic", lit(Debezium.topicFor("latest_prices")))
+      .write.json(feed)
+    val env = spark.read.schema("value STRING, topic STRING").json(feed)
+    val route = graft.streaming.Pipeline.TableRoute("latest_prices", schema,
+      schema.fieldNames.map(f => f -> f).toSeq, Seq("id"), Seq("ts_ms"))
+    Seq("unwrap" -> Debezium.unwrap(env, schema),
+      "unwrapWithMeta" -> Debezium.unwrapWithMeta(env, schema),
+      "unwrapWithDeletes" -> Debezium.unwrapWithDeletes(env, schema),
+      "tableStream" -> graft.streaming.Pipeline.tableStream(env, route))
+      .foreach { case (name, df) =>
+        assert(parses(df) === 1, s"$name:\n${df.queryExecution.optimizedPlan}")
+      }
   }
 
   test("topic naming and table extraction are inverse (C3)") {

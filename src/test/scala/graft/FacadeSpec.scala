@@ -1,10 +1,8 @@
 package graft
 
-import org.apache.spark.sql.functions._
-import graft.queries.Stage
 
-/** Library-facade contract: the session policy helper and the shared
-  * stage cache an embedder relies on.
+/** Library-facade contract: the session policy helper and the native
+  * functions an embedder relies on.
   */
 class FacadeSpec extends SparkSpec {
   import spark.implicits._
@@ -33,18 +31,6 @@ class FacadeSpec extends SparkSpec {
       case None =>
         spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
-  }
-
-  test("Stage.frame computes once per key and re-reads thereafter") {
-    var builds = 0
-    def build = { builds += 1; Seq((1L, "a"), (2L, "b")).toDF("id", "v") }
-    val key = s"facade-spec:${System.nanoTime()}"
-    val first = Stage.frame(spark, key, "graft-spec-")(build)
-    assert(first.count() === 2)
-    val second = Stage.frame(spark, key, "graft-spec-")(build)
-    assert(second.as[(Long, String)].collect().sorted ===
-      Array((1L, "a"), (2L, "b")))
-    assert(builds === 1, "second call must be a parquet re-read")
   }
 
   test("registerFunctions exposes native vec_dot to SQL") {

@@ -12,7 +12,8 @@ class RegistrySpec extends AnyFunSuite {
     assert(sets.distinct.size === sets.size, "an object is listed twice")
     assert(sets.map(_.all.size).sum === SparkEntry.queries.size)
     assert(sets.map(_.oracles.size).sum === SparkEntry.oracleSql.size)
-    assert(SparkEntry.oracleSql.keySet.subsetOf(SparkEntry.queries.keySet))
+    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet,
+      "every judged query has exactly one oracle and every oracle a query")
   }
 
   test("registry: a name defined in two objects throws instead of shadowing") {

@@ -28,8 +28,8 @@ class SinksSpec extends SparkSpec {
     val dir = Files.createTempDirectory("graft-sink").toString + "/t"
     val batch = data.toDF("id", "ts", "v")
     // the same batch delivered twice (at-least-once redelivery)
-    Sinks.idempotentBatchWriter(Seq("id"), Seq("ts"), dir)(batch, 0L)
-    Sinks.idempotentBatchWriter(Seq("id"), Seq("ts"), dir)(batch, 1L)
+    Sinks.appendParquet(batch, dir)
+    Sinks.appendParquet(batch, dir)
     val state = Sinks.sinkState(spark, dir, Seq("id"), Seq("ts"))
       .orderBy("id").collect()
     assert(state.toSeq === Seq(Row(1, 20L, "new"), Row(2, 5L, "only")))
