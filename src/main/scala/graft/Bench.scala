@@ -171,8 +171,7 @@ object Bench {
     // tmpfs, as a real cluster's executors use local SSD state dirs.
     // Correctness runs (Verify) keep the platform default — the
     // results are path-independent either way.
-    if (!sys.props.contains("graft.tmp.root") &&
-        !sys.env.contains("SPARK_GRAFT_TMP_ROOT")) {
+    if (!sys.props.contains("graft.tmp.root")) {
       val shm = java.nio.file.Paths.get("/dev/shm")
       if (java.nio.file.Files.isDirectory(shm) &&
           java.nio.file.Files.isWritable(shm))
@@ -319,11 +318,11 @@ object Bench {
           }
       }
     }
-    // the session's state-store provider; Stage.drain runs each
-    // transformWithState stream on RocksDB whatever this says
-    val providerJson = jstr(
-      spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-        .map(_.split("\\.").last).getOrElse("default"))
+    // the session's effective state-store provider (Spark's default
+    // when unset); Stage.drain runs each transformWithState stream on
+    // RocksDB whatever this says
+    val providerJson = jstr(spark.conf
+      .get("spark.sql.streaming.stateStore.providerClass").split("\\.").last)
     val probeJson = s""""state_provider":$providerJson,"probes":{"n":${probes.size},"min":${ms(if (probes.isEmpty) 0 else probes.min)},"max":${ms(if (probes.isEmpty) 0 else probes.max)},"spread":${ms(spread)}}"""
     // full, uncapped outlier disclosure goes to bench_detail.json only
     val fullOutlierJson = outliers.map { case (n, f, r2, rf, adj) =>

@@ -76,9 +76,9 @@ object Graft {
   val vectorIndex: graft.operators.VectorIndex.type =
     graft.operators.VectorIndex
 
-  /** Register the engine's native SQL functions (`vec_dot`) on a live
-    * session; alternatively set
-    * `spark.sql.extensions=graft.functions.GraftExtensions`.
+  /** Register the engine's native SQL functions (`vec_dot`,
+    * `vec_sign_ham`, `simhash_fold`, `bloom_might_contain`) and the
+    * fold-to-kernel rewrite on a live session.
     */
   def registerFunctions(spark: SparkSession): Unit =
     graft.functions.GraftFunctions.register(spark)

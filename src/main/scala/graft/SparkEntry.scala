@@ -17,37 +17,41 @@ object SparkEntry {
     queries("q1_agg")(spark, dir)
   }
 
-  /** Every judged query object, listed once. */
-  val querySets: Seq[QuerySet] = Seq(
-    TransformQueries, CdcQueries, RelationalQueries, JoinQueries,
-    SqlSurfaceQueries, Surface2Queries, Surface3Queries, Surface4Queries,
-    StatsQueries, TextQueries, DedupQueries, SimilarityQueries,
-    WindowQueries, MiscQueries, RuntimeQueries, Surface5Queries,
-    Surface6Queries, Surface7Queries, Surface8Queries, Surface9Queries,
-    Surface10Queries, Surface11Queries, Surface12Queries, Surface13Queries,
-    Surface14Queries, Surface15Queries, Surface16Queries, Surface17Queries,
-    Surface18Queries, Surface19Queries, Surface20Queries, Surface21Queries,
-    Surface22Queries, Surface23Queries, Surface24Queries, Surface25Queries,
-    Surface26Queries, Surface27Queries, Surface28Queries, Surface29Queries)
+  /** Every judged query family, listed once. */
+  val families: Seq[Family] = Seq(
+    TransformQueries, CdcQueries, StreamingQueries, RelationalQueries,
+    TpchQueries, StatisticsQueries, InferenceQueries, TextQueries,
+    TokenizerQueries, DedupQueries, SimilarityQueries, MultimodalQueries,
+    CorpusQueries, SketchQueries, GraphQueries)
 
-  /** One entry per implemented operator from SURVEY.md §2. */
+  /** Every judged query, each name once. */
+  lazy val judged: Seq[Judged] = distinct(families.flatMap(_.judged))
+
+  /** One entry per implemented operator from SURVEY.md §2. Each plan
+    * registers the native functions on its session before it builds,
+    * so a plan analyzes the same on any session.
+    */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    merged("query", querySets.map(_.all))
+    judged.map { j =>
+      j.name -> { (s: SparkSession, dir: String) =>
+        functions.GraftFunctions.register(s)
+        j.plan(s, dir)
+      }
+    }.toMap
 
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
-    * the same parquet tables. Omit for non-SQL-expressible ops.
+    * the same parquet tables.
     */
   lazy val oracleSql: Map[String, String] =
-    merged("oracle", querySets.map(_.oracles))
+    judged.map(j => j.name -> j.oracle).toMap
 
-  /** The union of `maps`; a name defined in two of them throws instead
-    * of letting the later map shadow the earlier one.
+  /** `js` unchanged; a name defined twice throws instead of letting the
+    * later entry shadow the earlier one.
     */
-  private[graft] def merged[V](what: String, maps: Seq[Map[String, V]]): Map[String, V] = {
-    val twice = maps.flatMap(_.keys).groupBy(identity)
-      .collect { case (k, ks) if ks.size > 1 => k }
+  private[graft] def distinct(js: Seq[Judged]): Seq[Judged] = {
+    val twice = js.groupBy(_.name).collect { case (n, g) if g.size > 1 => n }
     require(twice.isEmpty,
-      s"$what names defined in two query objects: ${twice.toSeq.sorted.mkString(", ")}")
-    maps.foldLeft(Map.empty[String, V])(_ ++ _)
+      s"judged query names defined twice: ${twice.toSeq.sorted.mkString(", ")}")
+    js
   }
 }

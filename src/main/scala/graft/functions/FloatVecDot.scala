@@ -1,7 +1,6 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
@@ -24,9 +23,7 @@ import org.apache.spark.sql.types._
   * substitute this kernel for the declarative form unconditionally and
   * results stay bit-equal.
   *
-  * Registered as SQL function `vec_dot` via [[GraftExtensions]]
-  * (`spark.sql.extensions=graft.functions.GraftExtensions`) or
-  * post-hoc with [[GraftFunctions.register]].
+  * Registered as SQL function `vec_dot` by [[GraftFunctions.register]].
   */
 case class FloatVecDot(left: Expression, right: Expression)
     extends BinaryExpression {
@@ -98,14 +95,13 @@ object GraftFunctions {
     * contract [[RewriteVecFolds]] relies on). External callers that
     * leaned on prefix-dot behavior must align lengths first.
     */
-  private[functions] def vecDotInfo = new ExpressionInfo(
+  private val info = new ExpressionInfo(
     classOf[FloatVecDot].getName, null, "vec_dot",
     "_FUNC_(a, b) - Double dot product of two array<float> columns, " +
       "accumulated left-to-right. Returns NULL when the array lengths " +
       "differ or any element is NULL. (Changed in r16: previously " +
       "computed a min-length prefix dot over ragged inputs.)",
     "")
-  private val info = vecDotInfo
   private val shInfo = new ExpressionInfo(
     classOf[SimHashFold].getName, "simhash_fold")
   private val bmcInfo = new ExpressionInfo(
@@ -120,11 +116,11 @@ object GraftFunctions {
     * BINARY literal, LONG key); the filter must be built over the same
     * long key (`BloomFilter.putLong` / `mightContainLong` pair).
     */
-  private[functions] def bloomBuilder(exprs: Seq[Expression]): Expression =
+  private def bloomBuilder(exprs: Seq[Expression]): Expression =
     org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
       exprs.head, exprs(1))
 
-  private[functions] def simhashBuilder(exprs: Seq[Expression]): Expression =
+  private def simhashBuilder(exprs: Seq[Expression]): Expression =
     SimHashFold(exprs.head, exprs(1) match {
       case Literal(b: Int, IntegerType) => b
       case other => throw new IllegalArgumentException(
@@ -132,7 +128,7 @@ object GraftFunctions {
     })
 
   /** vec_sign_ham's public contract (NaN clause per r16 advice). */
-  private[functions] def vecSignHamInfo = new ExpressionInfo(
+  private val vshInfo = new ExpressionInfo(
     classOf[FloatVecSignHamming].getName, null, "vec_sign_ham",
     "_FUNC_(a, b) - Hamming distance between the sign bits of two " +
       "array<float> columns over the common prefix; positions where " +
@@ -140,9 +136,11 @@ object GraftFunctions {
       "non-negative (matches SQL engines whose ordering places NaN " +
       "above all values).",
     "")
-  private val vshInfo = vecSignHamInfo
 
-  /** Post-hoc registration on an existing session. */
+  /** Registers the native functions and the fold rewrite on a live
+    * session. Idempotent: a second call re-binds the same builders and
+    * adds no second rule.
+    */
   def register(spark: SparkSession): Unit = {
     spark.sessionState.functionRegistry.registerFunction(
       FunctionIdentifier("vec_dot"), info,
@@ -156,47 +154,12 @@ object GraftFunctions {
       FunctionIdentifier("bloom_might_contain"), bmcInfo, bloomBuilder _)
     // the fold→kernel optimizer rewrite ([[RewriteVecFolds]]); the
     // experimental batch is the supported post-hoc injection point.
-    // SPARK_GRAFT_NO_FOLD_REWRITE is the operational kill switch (and
-    // the A/B lever the scale study uses). Synchronized: two threads
-    // racing the first registration on a shared session must not
-    // append the rule twice.
-    if (foldRewriteEnabled) GraftFunctions.synchronized {
+    // Synchronized: two threads racing the first registration on a
+    // shared session must not append the rule twice.
+    GraftFunctions.synchronized {
       if (!spark.experimental.extraOptimizations.contains(RewriteVecFolds))
         spark.experimental.extraOptimizations =
           spark.experimental.extraOptimizations :+ RewriteVecFolds
     }
-  }
-
-  /** One definition of the kill switch, honored by BOTH injection
-    * paths (post-hoc [[register]] and the [[GraftExtensions]]
-    * session-build route).
-    */
-  private[functions] def foldRewriteEnabled: Boolean =
-    !sys.env.contains("SPARK_GRAFT_NO_FOLD_REWRITE")
-}
-
-/** `spark.sql.extensions` entry point injecting the engine's native
-  * functions at session build time.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-  override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction((
-      FunctionIdentifier("vec_dot"), GraftFunctions.vecDotInfo,
-      (exprs: Seq[Expression]) => FloatVecDot(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("vec_sign_ham"), GraftFunctions.vecSignHamInfo,
-      (exprs: Seq[Expression]) =>
-        FloatVecSignHamming(exprs.head, exprs(1))))
-    ext.injectFunction((
-      FunctionIdentifier("simhash_fold"),
-      new ExpressionInfo(classOf[SimHashFold].getName, "simhash_fold"),
-      GraftFunctions.simhashBuilder))
-    ext.injectFunction((
-      FunctionIdentifier("bloom_might_contain"),
-      new ExpressionInfo(classOf[org.apache.spark.sql.catalyst.expressions
-        .BloomFilterMightContain].getName, "bloom_might_contain"),
-      GraftFunctions.bloomBuilder))
-    if (GraftFunctions.foldRewriteEnabled)
-      ext.injectOptimizerRule(_ => RewriteVecFolds)
   }
 }

@@ -30,8 +30,8 @@ import org.apache.spark.sql.types._
   * computed as `isNaN(v) || v >= 0` to keep the two engines
   * bit-agreed even on NaN-bearing embeddings.
   *
-  * Registered as SQL function `vec_sign_ham` via [[GraftExtensions]]
-  * or post-hoc with [[GraftFunctions.register]].
+  * Registered as SQL function `vec_sign_ham` by
+  * [[GraftFunctions.register]].
   */
 case class FloatVecSignHamming(left: Expression, right: Expression)
     extends BinaryExpression {

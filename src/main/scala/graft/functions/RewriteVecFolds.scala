@@ -12,8 +12,8 @@ import org.apache.spark.sql.types.{ArrayType, DoubleType, FloatType}
   *               0.0, (acc, v) => acc + v) }}}
   *
   * into the native [[FloatVecDot]] codegen kernel — the (c)-tier
-  * extension path (a `Rule[LogicalPlan]` injected via
-  * [[GraftExtensions]]): users keep writing the portable declarative
+  * extension path (a `Rule[LogicalPlan]` injected by
+  * [[GraftFunctions.register]]): users keep writing the portable declarative
   * form and the engine substitutes the allocation-free generated loop
   * (identical left-to-right double summation, so results are
   * bit-equal).

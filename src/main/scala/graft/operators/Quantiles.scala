@@ -34,10 +34,11 @@ import org.apache.spark.sql.functions._
   */
 object Quantiles {
 
-  /** Exact integral floor-division on long Columns: SQL `div` (never
-    * routed through double, so a rank like (n-1)*999 div 1000 stays
-    * exact past 2^53 where `floor(a / b.toDouble)` would round).
-    * Ranks are nonnegative, so truncating `div` equals floor division.
+  /** Exact integral division on long Columns: SQL `div`, truncating
+    * toward zero and never routed through double, so a rank like
+    * (n-1)*999 div 1000 or a 10^18 limb stays exact past 2^53 where
+    * `floor(a / b.toDouble)` would round. On nonnegative ranks this is
+    * floor division. The one integral `div` of the engine.
     */
   def ldiv(a: Column, b: Long): Column =
     call_function("div", a, lit(b))

@@ -33,8 +33,7 @@ object Similarity {
     * (same left-to-right summation) but with no per-row intermediate
     * array allocation; the hot-loop form for large fan-out scoring.
     * Requires the function registered on the session
-    * ([[graft.functions.GraftFunctions.register]] /
-    * `spark.sql.extensions=graft.functions.GraftExtensions`).
+    * ([[graft.functions.GraftFunctions.register]]).
     */
   def cosineNative(a: Column, b: Column): Column = {
     val d = call_function("vec_dot", a, b)

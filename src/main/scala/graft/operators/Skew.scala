@@ -41,15 +41,11 @@ object Skew {
     val limb = 1000000L
     def u(c: Column, scale: Int): Column =
       floor(c * lit(math.pow(10, scale)) + lit(0.5)).cast(LongType)
-    // SQL `div`: exact integral division at any magnitude (double
-    // division is only exact below 2^53)
-    def ldiv(a: Column, b: Long): Column =
-      call_function("div", a, lit(b))
     def limbs(c: Column, scale: Int, name: String): Seq[Column] = {
       val uu = u(c, scale)
       Seq(sum(uu % limb).as(s"__p_${name}_lo"),
-        sum(ldiv(uu, limb) % limb).as(s"__p_${name}_mid"),
-        sum(ldiv(uu, limb * limb)).as(s"__p_${name}_hi"))
+        sum(Quantiles.ldiv(uu, limb) % limb).as(s"__p_${name}_mid"),
+        sum(Quantiles.ldiv(uu, limb * limb)).as(s"__p_${name}_hi"))
     }
     def recombine(name: String, scale: Int): Column =
       ((sum(col(s"__p_${name}_hi")).cast(DecimalType(38, 0)) * lit(limb * limb) +

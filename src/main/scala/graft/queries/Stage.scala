@@ -42,15 +42,14 @@ object Stage {
 
   /** Temp dir removed on JVM exit (library embeddings don't leak /tmp).
     *
-    * Root is overridable via `-Dgraft.tmp.root` / `SPARK_GRAFT_TMP_ROOT`:
+    * Root is overridable via `-Dgraft.tmp.root`:
     * streaming feeds/checkpoints/state stores all land here, and at toy
     * scale they are fsync-bound, so Bench points the root at tmpfs —
     * the local-SSD-state-dir decision a real cluster makes per
     * executor. Default stays the platform tmpdir.
     */
   def tempDir(prefix: String): Path = {
-    val d = sys.props.get("graft.tmp.root")
-      .orElse(sys.env.get("SPARK_GRAFT_TMP_ROOT")) match {
+    val d = sys.props.get("graft.tmp.root") match {
       case Some(root) =>
         Files.createTempDirectory(Files.createDirectories(Paths.get(root)),
           prefix)

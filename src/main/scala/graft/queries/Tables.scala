@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.operators.Quantiles.ldiv
+
 /** Testdata table loaders + cross-engine determinism helpers.
   *
   * Every judged query must hash-match a DuckDB oracle on the same parquet
@@ -122,10 +124,7 @@ object Tables {
     val limb = 1000000L
     val u = floor(c * lit(math.pow(10, scale)) + lit(0.5)).cast(LongType)
     // truncated-toward-zero div/mod identity u = hi·10¹² + mid·10⁶ + lo
-    // holds for either sign; SQL `div` is exact integral division at
-    // any magnitude (a double division would only be exact below 2^53)
-    def ldiv(a: Column, b: Long): Column =
-      call_function("div", a, lit(b))
+    // holds for either sign
     val lo = sum(u % limb)
     val mid = sum(ldiv(u, limb) % limb)
     val hi = sum(ldiv(u, limb * limb))
@@ -152,10 +151,8 @@ object Tables {
     */
   def lsum(c: Column): Column = {
     val limb = 1000000L
-    // integral `div` (never double division, which is only exact below
-    // 2^53 — limb inputs from [[lprodSum]] legitimately reach ~10^18)
-    def ldiv(a: Column, b: Long): Column =
-      call_function("div", a, lit(b))
+    // integral `div`: limb inputs from [[lprodSum]] legitimately reach
+    // ~10^18, past where a double division is exact
     (sum(ldiv(c, limb * limb)).cast(DecimalType(38, 0)) *
       lit(limb * limb) +
       sum(ldiv(c, limb) % limb).cast(DecimalType(38, 0)) *
@@ -177,7 +174,7 @@ object Tables {
     */
   def lprodSum(x: Column, y: Column): Column = {
     val limb = 1000000L
-    val a = call_function("div", x, lit(limb))
+    val a = ldiv(x, limb)
     val b = x % limb
     (lsum(a * y) * lit(limb) + lsum(b * y))
   }
@@ -200,9 +197,8 @@ object Tables {
     */
   def lprodSum3(w: Column, x: Column, y: Column): Column = {
     val limb = 1000000L
-    def d(c: Column) = call_function("div", c, lit(limb))
-    val a1 = d(x); val b1 = x % limb
-    val a2 = d(y); val b2 = y % limb
+    val a1 = ldiv(x, limb); val b1 = x % limb
+    val a2 = ldiv(y, limb); val b2 = y % limb
     (lprodSum(a1 * a2, w) * lit(limb * limb) +
       lprodSum(a1 * b2 + a2 * b1, w) * lit(limb) +
       lprodSum(b1 * b2, w))
@@ -243,4 +239,22 @@ object Tables {
       try r.getRecordCount finally r.close()
     }.sum
   }
+
+  /** DuckDB token list of `text`: lowercased, split on runs of
+    * non-alphanumerics, empty tokens dropped.
+    */
+  private[queries] val tokensSql =
+    "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
+
+  /** Registers each named table as a temp view, for plans written in
+    * SQL.
+    */
+  private[queries] def views(s: SparkSession, dir: String, names: String*): Unit =
+    names.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
+
+  /** `c` as double. */
+  private[queries] def d(c: Column): Column = c.cast("double")
+
+  /** Oracle-side [[d]]: SQL text casting `x` to DOUBLE. */
+  private[queries] def castD(x: String) = s"CAST($x AS DOUBLE)"
 }

@@ -1,7 +1,7 @@
 package graft
 
 import graft.operators.Bpe
-import graft.queries.Surface22Queries
+import graft.queries.TokenizerQueries
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 /** The BPE training kernel: tie-break order, greedy replace, early stop,
@@ -43,9 +43,9 @@ class BpeSpec extends SparkSpec {
   test("training stops when no pair is left") {
     import spark.implicits._
     val hist = types(("ab", 3L), ("cd", 2L)).toDF("s", "cnt")
-    assert(Surface22Queries.bpeMerges(hist, 5) ==
+    assert(TokenizerQueries.bpeMerges(hist, 5) ==
       Seq((1L, "a", "b", 3L), (2L, "c", "d", 2L)))
-    assert(Surface22Queries.bpeMergesBatched(hist, 5, 1, 1).size == 2)
+    assert(TokenizerQueries.bpeMergesBatched(hist, 5, 1, 1).size == 2)
   }
 
   test("training is one Spark job whatever the merge count") {
@@ -66,7 +66,7 @@ class BpeSpec extends SparkSpec {
     }
     def jobsFor(iters: Int): Int = {
       assert(tagged(s"train-$iters")(
-        Surface22Queries.bpeMerges(hist, iters)).size == iters)
+        TokenizerQueries.bpeMerges(hist, iters)).size == iters)
       // listener events arrive in order: once the sentinel job's start
       // is seen, every job start before it has been delivered
       tagged(s"sentinel-$iters")(sc.parallelize(Seq(1), 1).count())

@@ -16,20 +16,13 @@ class FacadeSpec extends SparkSpec {
   }
 
   test("Graft.tune preserves an embedder's pre-existing exclusions") {
-    val prev = spark.conf.getOption("spark.sql.optimizer.excludedRules")
-    try {
-      spark.conf.set("spark.sql.optimizer.excludedRules",
-        "org.example.SomeAppRule")
+    Session.withConf(spark)(
+        "spark.sql.optimizer.excludedRules" -> "org.example.SomeAppRule") {
       Graft.tune(spark)
       val v = spark.conf.get("spark.sql.optimizer.excludedRules")
       assert(v.contains("org.example.SomeAppRule"),
         "tune must append, never overwrite, an application's exclusions")
       assert(v.contains("InferFiltersFromGenerate"))
-    } finally prev match {
-      case Some(p) =>
-        spark.conf.set("spark.sql.optimizer.excludedRules", p)
-      case None =>
-        spark.conf.unset("spark.sql.optimizer.excludedRules")
     }
   }
 

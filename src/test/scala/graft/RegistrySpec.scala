@@ -1,26 +1,41 @@
 package graft
 
-import org.scalatest.funsuite.AnyFunSuite
+import graft.functions.SimHashFold
+import graft.queries.{Family, Judged}
 
-/** [[SparkEntry]]'s registry: every query object listed once, and the
-  * two driver maps derived from that one list.
+/** [[SparkEntry]]'s registry: every family listed once, every judged
+  * query a plan and its oracle in one entry, and the two driver maps
+  * derived from that one list.
   */
-class RegistrySpec extends AnyFunSuite {
-  test("registry: per-object query and oracle counts sum to the merged maps") {
-    val sets = SparkEntry.querySets
-    assert(sets.size === 40)
-    assert(sets.distinct.size === sets.size, "an object is listed twice")
-    assert(sets.map(_.all.size).sum === SparkEntry.queries.size)
-    assert(sets.map(_.oracles.size).sum === SparkEntry.oracleSql.size)
-    assert(SparkEntry.queries.keySet === SparkEntry.oracleSql.keySet,
-      "every judged query has exactly one oracle and every oracle a query")
+class RegistrySpec extends SparkSpec {
+  private def entry(name: String) = Judged(name, (s, _) => s.emptyDataFrame, "SELECT 1")
+
+  test("registry: a name defined in two families throws and names it") {
+    val a = new Family { val judged = Seq(entry("q1"), entry("q2")) }
+    val b = new Family { val judged = Seq(entry("q3"), entry("q2")) }
+    val e = intercept[IllegalArgumentException](
+      SparkEntry.distinct(Seq(a, b).flatMap(_.judged)))
+    assert(e.getMessage.contains("q2") && !e.getMessage.contains("q1"))
+    assert(SparkEntry.distinct(a.judged).map(_.name) === Seq("q1", "q2"))
   }
 
-  test("registry: a name defined in two objects throws instead of shadowing") {
-    val e = intercept[IllegalArgumentException](SparkEntry.merged("query",
-      Seq(Map("q1" -> 1, "q2" -> 2), Map("q3" -> 3), Map("q2" -> 4))))
-    assert(e.getMessage.contains("q2") && !e.getMessage.contains("q1"))
-    assert(SparkEntry.merged("query", Seq(Map("a" -> 1), Map("b" -> 2))) ===
-      Map("a" -> 1, "b" -> 2))
+  test("registry: both driver maps hold exactly the registry's names, 391 in all") {
+    val fams = SparkEntry.families
+    assert(fams.distinct.size === fams.size, "a family is listed twice")
+    val names = fams.flatMap(_.judged.map(_.name))
+    assert(fams.map(_.judged.size).sum === 391)
+    assert(names.toSet.size === 391)
+    assert(SparkEntry.queries.keySet === names.toSet)
+    assert(SparkEntry.oracleSql.keySet === names.toSet)
+    assert(SparkEntry.oracleSql.collect { case (n, sql) if sql == null || sql.trim.isEmpty => n }
+      .isEmpty, "an oracle read a helper before it was initialized")
+  }
+
+  test("registry: a plan registers the native functions on a fresh session") {
+    val fresh = spark.newSession()
+    assert(!fresh.catalog.functionExists("simhash_fold"))
+    val df = SparkEntry.queries("e1_simhash")(fresh, "/root/testdata/sf0.001")
+    val plan = df.queryExecution.analyzed
+    assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[SimHashFold]))))
   }
 }

@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.spark.sql.functions._
-import graft.queries.Surface17Queries
 
 /** Round-10 additions: explicit cross-job Bloom semi-join and
   * prefix-filtered exact Jaccard join.
@@ -33,7 +32,7 @@ class Surface17Spec extends SparkSpec {
 
   test("q106 equals the plain exact semi-join (bloom is pruning-only)") {
     import graft.queries.Tables.{t, dsum}
-    val got = Surface17Queries.all("q106_bloom_semi")(spark, sfDir)
+    val got = SparkEntry.queries("q106_bloom_semi")(spark, sfDir)
       .orderBy("l_returnflag").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
     val ord = t(spark, sfDir, "orders")
@@ -85,7 +84,7 @@ class Surface17Spec extends SparkSpec {
       .where(col("n_common") * 3 >= col("n_a") + col("n_b"))
       .select("id_a", "id_b", "n_common", "n_a", "n_b")
       .collect().map(_.toSeq).toSet
-    val got = Surface17Queries.all("e87_prefix_join")(spark, sfDir)
+    val got = SparkEntry.queries("e87_prefix_join")(spark, sfDir)
       .collect().map(_.toSeq).toSet
     assert(got.nonEmpty && got == want)
   }

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Invariants for the round-11 second wave (Surface18Queries) beyond
+/** Invariants for the round-11 second wave beyond
   * the value oracle: ranking shape for BM25, algebraic ranges for the
   * regression/ACF diagnostics, and the weighted-median defining
   * property. All at sf0.001 (the oracle sweep covers values at three

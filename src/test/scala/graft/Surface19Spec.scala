@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Invariants for the round-11 third wave (Surface19Queries). */
+/** Invariants for the round-11 third wave. */
 class Surface19Spec extends SparkSpec {
   private val dir = "/root/testdata/sf0.001"
 

@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 
 import graft.streaming.Attribution
 
-/** Invariants for the round-12 wave (Surface20Queries + the new
+/** Invariants for the round-12 wave (the new
   * operators behind it).
   */
 class Surface20Spec extends SparkSpec {

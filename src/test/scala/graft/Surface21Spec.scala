@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Invariants for the round-12 statistics wave (Surface21Queries).
+/** Invariants for the round-12 statistics wave.
   * Values are additionally cross-checked against independent
   * numpy/pandas implementations at sf0.01 (MW U/z, Spearman rho,
   * chi-square all agree to 8 decimals — see the round-12 notes).

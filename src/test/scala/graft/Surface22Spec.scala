@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Invariants for the round-13 wave (Surface22Queries): the BPE merge
+/** Invariants for the round-13 wave: the BPE merge
   * trainer and Kendall's tau-b.
   */
 class Surface22Spec extends SparkSpec {
@@ -30,7 +30,7 @@ class Surface22Spec extends SparkSpec {
     val rows = SparkEntry.queries("e113_bpe_train")(spark, dir)
       .orderBy("merge_idx").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(4)))
-    assert(rows.length == graft.queries.Surface22Queries.bpeIters)
+    assert(rows.length == graft.queries.TokenizerQueries.bpeIters)
     // every round: recount adjacent pairs weighted by corpus frequency,
     // argmax with the (n desc, a, b) tie-break, greedy apply
     var words = wordHist.map { case (w, c) => (w.map(_.toString).toList, c) }
@@ -109,7 +109,7 @@ class Surface22Spec extends SparkSpec {
     val toy = Seq(("abab", 5L), ("abcd", 4L), ("cdcd", 3L),
       ("xyxy", 2L), ("aaaa", 2L), ("bcda", 1L), ("xaby", 1L))
     val hist = toy.map { case (w, c) => (enc(w), c) }.toDF("s", "cnt")
-    val merges = graft.queries.Surface22Queries.bpeMergesBatched(
+    val merges = graft.queries.TokenizerQueries.bpeMergesBatched(
       hist, passes = 3, m = 3, window = 8)
     assert(merges.nonEmpty && merges.map(_._1) == (1L to merges.size))
     // (a) pairs applied in one pass never share a symbol (a SELF-pair
@@ -153,9 +153,9 @@ class Surface22Spec extends SparkSpec {
     }
     // jobs/merge: 8 passes produced every merge in the table
     assert(batched.map(_.getLong(1)).max <=
-      graft.queries.Surface22Queries.bpeBatchPasses)
+      graft.queries.TokenizerQueries.bpeBatchPasses)
     assert(batched.length >
-      graft.queries.Surface22Queries.bpeBatchPasses,
+      graft.queries.TokenizerQueries.bpeBatchPasses,
       "batching produced no more merges than passes - schedule broken")
   }
 

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Invariants for the round-14 wave (Surface23Queries): Kruskal–Wallis,
+/** Invariants for the round-14 wave: Kruskal–Wallis,
   * Brown–Forsythe, CUSUM, lexical richness, t-closeness, perceptual-
   * hash dedup, the streaming SCD2 twin — plus the q118 degenerate-IQR
   * guard.

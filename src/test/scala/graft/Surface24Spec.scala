@@ -1,6 +1,6 @@
 package graft
 
-/** Invariants for the round-15 wave (Surface24Queries): DSIR hashed-
+/** Invariants for the round-15 wave: DSIR hashed-
   * bigram importance weights and the duplicated-span extent audit —
   * each recounted driver-side from first principles at sf0.001.
   */
@@ -236,7 +236,7 @@ class Surface24Spec extends SparkSpec {
     val fpMult = rawChunks.values.flatten.toSeq.groupBy(_._2)
       .view.mapValues(_.size).toMap
     val chunks = rawChunks.view.mapValues(_.filter { case (_, fp) =>
-      fpMult(fp) <= graft.queries.Surface24Queries.dupFpCap
+      fpMult(fp) <= graft.queries.DedupQueries.dupFpCap
     }).filter(_._2.nonEmpty).toMap
     val expect = scala.collection.mutable.Map[(Long, Long), (Long, Long)]()
     for {

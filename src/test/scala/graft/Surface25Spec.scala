@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.{col, to_date}
 
-/** Invariants for the round-16 wave (Surface25Queries): each judged
+/** Invariants for the round-16 wave: each judged
   * statistic recounted driver-side from first principles at sf0.001,
   * plus the c41 twin-equality check against the batch operator.
   */

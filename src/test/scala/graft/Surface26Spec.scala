@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions.col
 
-/** Invariants for the round-16 second wave (Surface26Queries): each
+/** Invariants for the round-16 second wave: each
   * judged statistic recounted driver-side from first principles at
   * sf0.001 (screens and HITS from the raw tables; kappa/McNemar cell
   * algebra from the judged detectors' own frames, whose derivations

@@ -1,6 +1,6 @@
 package graft
 
-/** Invariants for the round-17 wave (Surface27Queries): each judged
+/** Invariants for the round-17 wave: each judged
   * statistic recounted driver-side from first principles at sf0.001,
   * plus the c43 streaming twin's batch-equality gate.
   */

@@ -2,8 +2,8 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-/** Driver-side first-principles recounts for the round-19 wave
-  * (Surface29Queries): the cell-partitioned IVF probe, SemDeDup at
+/** Driver-side first-principles recounts for the round-19 wave:
+  * the cell-partitioned IVF probe, SemDeDup at
   * the production k=16 regime, and incremental connected components.
   */
 class Surface29Spec extends SparkSpec {

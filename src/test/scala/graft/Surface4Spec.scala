@@ -6,7 +6,7 @@ import graft.operators.TextAnalysis
 /** Round-5 operator tests: fixed-point ratio quantization, composite-key
   * arg-max determinism, sorted top-k lists, n-gram contamination, and
   * element-wise mean pooling — the expression logic behind the
-  * Surface4Queries judged set, on in-memory frames.
+  * judged set, on in-memory frames.
   */
 class Surface4Spec extends SparkSpec {
   import spark.implicits._

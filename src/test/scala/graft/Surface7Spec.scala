@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.queries.{DedupQueries, Surface6Queries, Surface7Queries}
 
 /** Properties of the round-7 tranche that the DuckDB oracle can't
   * state directly: partition-invariance of the two-stage weighted
@@ -15,7 +14,7 @@ class Surface7Spec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   test("weighted sample two-stage prefilter equals the naive single window") {
-    val got = Surface7Queries.all("e35_weighted_sample")(spark, sf)
+    val got = SparkEntry.queries("e35_weighted_sample")(spark, sf)
       .select("lang", "doc_id", "rk").as[(String, Long, Long)]
       .collect().toSet
     // naive form: one corpus-wide window per language
@@ -33,7 +32,7 @@ class Surface7Spec extends SparkSpec {
   }
 
   test("funnel stages are strictly ordered and depth counts them") {
-    val rows = Surface6Queries.all("q76_funnel")(spark, sf)
+    val rows = SparkEntry.queries("q76_funnel")(spark, sf)
       .select(col("t_view").cast("long"), col("t_click").cast("long"),
         col("t_purchase").cast("long"), col("funnel_depth"))
       .as[(Long, Option[Long], Option[Long], Long)].collect()
@@ -46,7 +45,7 @@ class Surface7Spec extends SparkSpec {
   }
 
   test("retention: week-0 cell equals cohort size; offsets nonnegative") {
-    val cells = Surface6Queries.all("q77_retention")(spark, sf)
+    val cells = SparkEntry.queries("q77_retention")(spark, sf)
       .as[(Long, Long, Long)].collect()
     assert(cells.forall(_._2 >= 0))
     // every user is active in their cohort week, so offset-0 rows must
@@ -58,17 +57,17 @@ class Surface7Spec extends SparkSpec {
   }
 
   test("cluster-size profile conserves the component node mass") {
-    val sizes = DedupQueries.all("e38_cluster_sizes")(spark, sf)
+    val sizes = SparkEntry.queries("e38_cluster_sizes")(spark, sf)
       .as[(Long, Long)].collect()
     val mass = sizes.map { case (sz, n) => sz * n }.sum
-    val nodes = DedupQueries.all("e15_components")(spark, sf).count()
+    val nodes = SparkEntry.queries("e15_components")(spark, sf).count()
     assert(mass === nodes)
     // pair-graph components are never singletons
     assert(sizes.forall(_._1 >= 2))
   }
 
   test("minhash estimate audit: n_match bounded, error consistent") {
-    val rows = DedupQueries.all("e39_minhash_est")(spark, sf)
+    val rows = SparkEntry.queries("e39_minhash_est")(spark, sf)
       .select("n_match", "est_jaccard", "true_jaccard", "abs_err")
       .as[(Long, Double, Double, Double)].collect()
     assert(rows.nonEmpty)
@@ -81,7 +80,7 @@ class Surface7Spec extends SparkSpec {
   }
 
   test("curriculum buckets are contiguous deciles of the length order") {
-    val rows = Surface7Queries.all("e36_curriculum")(spark, sf)
+    val rows = SparkEntry.queries("e36_curriculum")(spark, sf)
       .orderBy("n_chars", "doc_id").as[(Long, Long, Long)].collect()
     val buckets = rows.map(_._3)
     assert(buckets.min === 1L && buckets.max === 10L)
