@@ -170,7 +170,7 @@ object DedupQueries extends Family {
           col("a.col") === col("b.col") &&
           col("a.doc_id") < col("b.doc_id"))
         .select(col("a.doc_id").as("id_a"), col("b.doc_id").as("id_b"),
-          bit_count(col("a.simhash").bitwiseXOR(col("b.simhash")))
+          Dedup.hammingDistance(col("a.simhash"), col("b.simhash"))
             .cast("long").as("hamming"))
         .where(col("hamming") <= 3)
         .distinct()

@@ -19,17 +19,15 @@ import graft.queries.Tables
   */
 class EventsFixtureSpec extends SparkSpec {
 
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("events.ts fixture encoding is one Tables.events can normalize") {
-    val raw = spark.read.parquet(s"$sfDir/events.parquet").schema("ts").dataType
+    val raw = spark.read.parquet(s"${Recount.dir}/events.parquet").schema("ts").dataType
     assert(
       raw == LongType || raw == TimestampType || raw == TimestampNTZType,
       s"events.ts fixture drifted to $raw — extend Tables.events dispatch")
   }
 
   test("Tables.events normalizes ts to TimestampType with sane values") {
-    val df = Tables.events(spark, sfDir)
+    val df = Tables.events(spark, Recount.dir)
     assert(df.schema("ts").dataType == TimestampType)
     val row = df.agg(
       min(unix_micros(col("ts"))).as("lo"),

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 class FileFormatsSpec extends SparkSpec {
 
   private def sample(): DataFrame =
-    spark.read.parquet("/root/testdata/sf0.001/lineitem.parquet")
+    spark.read.parquet(s"${Recount.dir}/lineitem.parquet")
       .select("l_orderkey", "l_linenumber", "l_quantity", "l_returnflag",
         "l_shipdate")
       .orderBy("l_orderkey", "l_linenumber").limit(100)

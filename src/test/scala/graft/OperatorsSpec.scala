@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
 import graft.operators._
+import Recount.{cosFixed, cosine}
 
 /** Unit tests for the LLM-pipeline operator set (north star §2.6). */
 class OperatorsSpec extends SparkSpec {
@@ -399,8 +400,7 @@ class OperatorsSpec extends SparkSpec {
       Seq(1L -> 12, 2L -> 13))
     // mean over REAL decoded pixels == mean over the md5 cycle the
     // fixture painted (PNG losslessness, checked end to end)
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val dig = md.digest("hello world".getBytes("UTF-8"))
+    val dig = Recount.md5Bytes("hello world")
     val expMean = (0 until 48).map(i => dig(i % 16) & 0xff).sum / 48.0
     assert(feats(0).mean_byte === expMean)
     // frame sampling: 16 samples / 4-byte frames, every 2nd → 0 and 2
@@ -480,24 +480,13 @@ class OperatorsSpec extends SparkSpec {
       .map(r => r._1 -> r).toMap
     assert(out.size === rows.size)
     // reference: same arithmetic, independent (driver-side) plumbing
-    def dot(a: Seq[Float], b: Seq[Float]) =
-      a.zip(b).foldLeft(0.0)((acc, p) => acc + p._1.toDouble * p._2.toDouble)
-    def cos(a: Seq[Float], b: Seq[Float]) =
-      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
-    def dotFixed(a: Seq[Float], b: Seq[Float]) =
-      a.zip(b).foldLeft(0L)((acc, p) =>
-        acc + math.floor(p._1.toDouble * p._2.toDouble * 1e7).toLong)
-    def cosFixed(a: Seq[Float], b: Seq[Float]) =
-      (dotFixed(a, b).toDouble / 1e7) /
-        (math.sqrt(dotFixed(a, a).toDouble / 1e7) *
-          math.sqrt(dotFixed(b, b).toDouble / 1e7))
     // cell = argmax (score, j) lexicographic — ties to the higher j,
     // the greatest-struct total order ivfCell realizes
     def cellOf(v: Seq[Float]) = cents.zipWithIndex
-      .map { case (c, j) => (cos(v, c), j) }.max._2.toLong
+      .map { case (c, j) => (cosine(v, c), j) }.max._2.toLong
     val cells = rows.map { case (id, v) => id -> cellOf(v) }.toMap
     val cscores = rows.map { case (id, v) =>
-      id -> cents.map(c => cos(v, c)).max }.toMap
+      id -> cents.map(c => cosine(v, c)).max }.toMap
     val losers = (for {
       (ia, va) <- rows; (ib, vb) <- rows
       if ia < ib && cells(ia) == cells(ib) && cosFixed(va, vb) > 0.95
@@ -553,24 +542,13 @@ class OperatorsSpec extends SparkSpec {
     assert(out.size === delta.size,
       "one decision row per delta doc, corpus rows never emitted")
     // brute reference with the operator's default arithmetic
-    def dot(a: Seq[Float], b: Seq[Float]) =
-      a.zip(b).foldLeft(0.0)((acc, p) => acc + p._1.toDouble * p._2.toDouble)
-    def cos(a: Seq[Float], b: Seq[Float]) =
-      dot(a, b) / (math.sqrt(dot(a, a)) * math.sqrt(dot(b, b)))
-    def dotF(a: Seq[Float], b: Seq[Float]) =
-      a.zip(b).foldLeft(0L)((acc, p) =>
-        acc + math.floor(p._1.toDouble * p._2.toDouble * 1e7).toLong)
-    def cosF(a: Seq[Float], b: Seq[Float]) =
-      (dotF(a, b).toDouble / 1e7) /
-        (math.sqrt(dotF(a, a).toDouble / 1e7) *
-          math.sqrt(dotF(b, b).toDouble / 1e7))
     def cellOf(v: Seq[Float]) = cents.zipWithIndex
-      .map { case (c, j) => (cos(v, c), j) }.max._2.toLong
+      .map { case (c, j) => (cosine(v, c), j) }.max._2.toLong
     delta.foreach { case (id, v) =>
       val (cell, n, admitted) = out(id)
       assert(cell === cellOf(v), s"cell mismatch for $id")
       val expect = corpus.count { case (_, cv) =>
-        cellOf(cv) == cell && cosF(v, cv) > 0.95 }
+        cellOf(cv) == cell && cosFixed(v, cv) > 0.95 }
       assert(n === expect.toLong, s"n_matches mismatch for $id")
       assert(admitted === (expect == 0), s"admitted mismatch for $id")
     }

@@ -12,8 +12,6 @@ package graft
   * honestly or grow with a written justification.
   */
 class PlanAuditSpec extends SparkSpec {
-  private val sfDir = "/root/testdata/sf0.001"
-
   /** name -> why the nested-loop join is bounded. */
   private val whitelist: Map[String, String] = Map(
     "e2_topk" ->
@@ -211,7 +209,7 @@ class PlanAuditSpec extends SparkSpec {
   private lazy val executedPlans
       : Seq[(String, org.apache.spark.sql.execution.SparkPlan)] =
     SparkEntry.queries.toSeq.sortBy(_._1).map { case (name, fn) =>
-      name -> fn(spark, sfDir).queryExecution.executedPlan
+      name -> fn(spark, Recount.dir).queryExecution.executedPlan
     }
 
   test("no unbounded CartesianProduct/BroadcastNestedLoopJoin " +

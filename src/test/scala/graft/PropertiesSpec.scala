@@ -336,7 +336,7 @@ class PropertiesSpec extends SparkSpec {
     // half-cent boundary must diverge, documenting the boundary the
     // precondition guards.
     import graft.queries.Tables
-    val dir = "/root/testdata/sf0.001"
+    val dir = Recount.dir
     def same(df: org.apache.spark.sql.DataFrame,
              c: org.apache.spark.sql.Column, sc: Int, what: String): Unit = {
       val r = df.agg(Tables.dsumDec(c, sc).as("limb"),

@@ -34,7 +34,7 @@ class RegistrySpec extends SparkSpec {
   test("registry: a plan registers the native functions on a fresh session") {
     val fresh = spark.newSession()
     assert(!fresh.catalog.functionExists("simhash_fold"))
-    val df = SparkEntry.queries("e1_simhash")(fresh, "/root/testdata/sf0.001")
+    val df = SparkEntry.queries("e1_simhash")(fresh, Recount.dir)
     val plan = df.queryExecution.analyzed
     assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[SimHashFold]))))
   }

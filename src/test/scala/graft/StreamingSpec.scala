@@ -8,11 +8,14 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 import graft.cdc.Debezium
 import graft.sinks.Sinks
-import graft.streaming.Pipeline
+import graft.streaming.{Attribution, Pipeline}
+import Recount._
 
 /** Streaming runtime tests (SURVEY.md §2.4 C5–C7, §2.6 E5): MemoryStream
   * CDC feed → unwrap/route → checkpointed idempotent sink; watermarked
-  * windows dropping late data.
+  * windows dropping late data. Then the streaming family's judged
+  * queries: each streaming twin equals its batch query over the same
+  * input, and the state operators behind them are checked on their own.
   */
 class StreamingSpec extends SparkSpec {
   import spark.implicits._
@@ -236,5 +239,332 @@ class StreamingSpec extends SparkSpec {
       assert(r.keys === Seq("id")) // PK upsert key, cassandra-init.cql:4
       assert(r.mapping.forall { case (a, b) => a == b }) // identity mapping
     }
+  }
+
+  test("bilinear delta join maintenance equals direct recompute") {
+    // old state: orders {1,2}, lines on them; delta: order 7 inserted
+    // with its lines, line (2, 30) deleted
+    val o = Seq((1L, "A"), (2L, "B"), (7L, "A")).toDF("ok", "st")
+    val l = Seq((1L, 10L), (1L, 20L), (2L, 30L), (7L, 40L))
+      .toDF("lk", "v")
+    val oOld = o.where(col("ok") % 7 =!= 0)
+    val oDel = o.where(col("ok") % 7 === 0)
+    val lOld = l.where(col("lk") % 7 =!= 0)
+    val lIns = l.where(col("lk") % 7 === 0).withColumn("sig", lit(1L))
+    val lDel = lOld.where(col("v") === 30L).withColumn("sig", lit(-1L))
+    val lDelta = lIns.unionByName(lDel)
+    val vOld = oOld.join(lOld, col("ok") === col("lk"))
+      .groupBy("st").agg(sum(col("v")).as("sv"), count(lit(1)).as("sig"))
+    def term(of: org.apache.spark.sql.DataFrame,
+             lf: org.apache.spark.sql.DataFrame) =
+      of.join(lf, col("ok") === col("lk"))
+        .select(col("st"), (col("sig") * col("v")).as("sv"), col("sig"))
+    val inc = vOld.unionByName(
+        term(oDel, lOld.withColumn("sig", lit(1L)))
+          .unionByName(term(oOld, lDelta))
+          .unionByName(term(oDel, lDelta)))
+      .groupBy("st").agg(sum("sv").as("total"), sum("sig").as("n"))
+      // garbage-collect groups whose multiplicity hit zero — a direct
+      // recompute has no row for them (inner join over zero pairs)
+      .where(col("n") =!= 0)
+      .as[(String, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    // direct: final state = all orders ⋈ lines minus the deleted one
+    val direct = o.join(l.where(col("v") =!= 30L),
+        col("ok") === col("lk"))
+      .groupBy("st").agg(sum("v").as("total"), count(lit(1)).as("n"))
+      .as[(String, Long, Long)].collect()
+      .map(r => r._1 -> ((r._2, r._3))).toMap
+    assert(inc == direct)
+    // group B's only pair was retracted: it must VANISH, not report 0
+    assert(direct("A") == ((70L, 3L)) && !direct.contains("B"))
+  }
+
+  test("band admission fold: earlier ids flag later ones, state carries") {
+    import graft.streaming.BandAdmission.{fold, BandRow}
+    // batch 1: doc 5 admitted, doc 7 flagged (5 < 7 shares the band)
+    val (f1, mn1) = fold("X", Long.MaxValue,
+      Seq(BandRow(7, "X"), BandRow(5, "X")))
+    assert(f1.map(f => (f.doc_id, f.dup)) == Seq((5L, false), (7L, true)))
+    assert(mn1 == 5L)
+    // batch 2 against carried state: doc 9 flagged by batch-1's doc 5
+    val (f2, mn2) = fold("X", mn1, Seq(BandRow(9, "X")))
+    assert(f2.map(f => (f.doc_id, f.dup)) == Seq((9L, true)) && mn2 == 5L)
+    // equal ids never flag each other
+    val (f3, _) = fold("Y", Long.MaxValue,
+      Seq(BandRow(4, "Y"), BandRow(4, "Y")))
+    assert(f3.forall(!_.dup))
+  }
+
+  test("q109_attribution: buckets partition ALL purchases exactly") {
+    val rows = query("q109_attribution").collect()
+    val purchases = graft.queries.Tables.events(spark, dir)
+      .where(col("event_type") === "purchase").count()
+    assert(rows.map(_.getLong(1)).sum == purchases,
+      "attributed conversions must sum to the total purchase count")
+    val types = rows.map(_.getString(0)).toSet
+    assert(!types.contains("purchase"),
+      "a purchase can never be its own touch")
+    assert(rows.map(_.getString(0)).distinct.length == rows.length)
+  }
+
+  // ---- creditShares: the shared multi-touch split rule ----
+
+  test("creditShares: every purchase's shares sum to exactly 1e6 µ") {
+    for (n <- Seq(0L, 1L, 2L, 3L, 4L, 6L, 7L, 13L)) {
+      val (ft, lt, slt) =
+        if (n == 0) (null, null, null)
+        else if (n == 1) ("click", "click", null)
+        else ("click", "view", "signup")
+      // touch sequence: click, [signup × (n-3+1 at position n-1 end)]…
+      // counts just need to sum to n with ft/lt/slt types present
+      val c: Map[String, Long] =
+        if (n == 0) Map.empty
+        else if (n == 1) Map("click" -> 1L)
+        else if (n == 2) Map("click" -> 1L, "view" -> 1L)
+        else Map("click" -> (1L + (n - 3)), "view" -> 1L, "signup" -> 1L)
+      val shares = Attribution.creditShares(n, ft, lt, slt, c, 100L)
+      assert(shares.map(_.w).sum == 1000000L,
+        s"n=$n shares=${shares.toList}")
+      assert(shares.forall(_.w > 0))
+      assert(shares.forall(s => s.mc == s.w * 100L))
+    }
+  }
+
+  test("creditShares: U-shape — first/last get 40%, middles split " +
+    "20% with remainder to the last middle") {
+    // 5 touches: click, view, view, signup, error
+    // first=click(40%), last=error(40%), middles: view×2, signup×1
+    val shares = Attribution.creditShares(5L, "click", "error", "signup",
+      Map("click" -> 1L, "view" -> 2L, "signup" -> 1L, "error" -> 1L),
+      cents = 1000L).map(s => s.touch_type -> s.w).toMap
+    assert(shares("click") == 400000L)
+    assert(shares("error") == 400000L)
+    val base = 200000L / 3
+    assert(shares("view") == 2 * base)
+    assert(shares("signup") == base + (200000L - 3 * base))
+    assert(shares.values.sum == 1000000L)
+  }
+
+  test("creditShares: 0 touches -> (none); 2 touches -> 50/50") {
+    assert(Attribution.creditShares(0L, null, null, null, Map.empty, 7L)
+      == Seq(Attribution.MTCredit("(none)", 1000000L, 7000000L)))
+    val two = Attribution.creditShares(2L, "click", "view", "click",
+      Map("click" -> 1L, "view" -> 1L), 10L)
+      .map(s => s.touch_type -> s.w).toMap
+    assert(two == Map("click" -> 500000L, "view" -> 500000L))
+  }
+
+  // windowed attribution TTL: judged end-to-end by c33; here the
+  // audit partition
+  test("c33 audit rows partition the touched-entity population") {
+    val rows = query("c33_stream_attribution_ttl").collect()
+    val byType = rows.map(r => r.getString(0) -> r.getLong(1)).toMap
+    val entities = graft.queries.Tables.events(spark, dir)
+      .where(col("event_type") =!= "purchase")
+      .select(col("user_id"),
+        get_json_object(col("props"), "$.k").cast("long"))
+      .distinct().count()
+    assert(byType.getOrElse("(evicted)", 0L) > 0L,
+      "idle entities must measurably expire")
+    assert(byType.getOrElse("(evicted)", 0L) +
+      byType.getOrElse("(live_end)", 0L) == entities,
+      "evicted + live_end must equal the touched-entity count")
+  }
+
+  test("c36 (transformWithState timers) and c33 (EventTimeTimeout) " +
+    "produce the identical attribution rollup") {
+    val c33 = query("c33_stream_attribution_ttl")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(_._1)
+    val c36 = query("c36_stream_attribution_tws")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
+      .sortBy(_._1)
+    assert(c33.toSeq == c36.toSeq,
+      s"twin mismatch:\n c33=${c33.mkString(",")}\n c36=${c36.mkString(",")}")
+    assert(c33.exists(_._1 == "(evicted)") &&
+      c33.exists(_._1 == "(live_end)"))
+  }
+
+  test("c37: last-3 shares partition each purchase exactly (1e6 u) " +
+    "and the stream's conversions sum to the purchase count") {
+    import graft.streaming.Attribution.last3Shares
+    val cases = Seq(Seq(), Seq("a"), Seq("a", "b"), Seq("a", "b", "c"),
+      Seq("a", "a", "b"), Seq("x", "x", "x"), Seq("a", "b", "c", "d"))
+    cases.foreach { r =>
+      assert(last3Shares(r, 100).map(_.w).sum == 1000000L,
+        s"shares for $r don't sum to 1e6")
+    }
+    assert(last3Shares(Seq("a", "a", "b"), 1).find(_.touch_type == "a")
+      .get.w == 800000L)
+    val rows = query("c37_stream_last3")
+      .collect()
+    val nPurch = graft.queries.Tables.events(spark, dir)
+      .where(col("event_type") === "purchase").count()
+    assert(math.abs(rows.map(_.getDouble(1)).sum - nPurch) < 1e-6,
+      s"conversions ${rows.map(_.getDouble(1)).sum} != purchases $nPurch")
+  }
+
+  test("c38 (MapState), c34 (fMGWS walk), and q110 (batch window) " +
+    "produce the identical multi-touch rollup") {
+    def roll(q: String) = query(q).collect()
+      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
+      .sortBy(_._1).toSeq
+    val c38 = roll("c38_stream_multitouch_map")
+    assert(c38 == roll("c34_stream_multitouch"),
+      "MapState vs fMGWS mismatch")
+    assert(c38 == roll("q110_multitouch"), "MapState vs batch mismatch")
+  }
+
+  test("c39: the streaming SCD2 history equals the batch c12_scd2 " +
+    "frame row for row") {
+    def canon(name: String): Seq[String] =
+      query(name)
+        .select(col("c_custkey"), col("c_acctbal"),
+          col("effective_from"), col("effective_to"), col("is_current"))
+        .collect()
+        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
+    assert(canon("c39_stream_scd2") == canon("c12_scd2"))
+  }
+
+  test("c40: TWS session twin equals the built-in session_window output") {
+    val key = (r: org.apache.spark.sql.Row) =>
+      (r.getLong(0), r.getTimestamp(1).getTime,
+        r.getTimestamp(2).getTime, r.getLong(3))
+    val tws = query("c40_stream_session_tws")
+      .collect().map(key).sorted
+    val builtin = query("c21_stream_session")
+      .select("user_id", "session_start", "session_end", "n")
+      .collect().map(key).sorted
+    assert(tws.length == builtin.length)
+    assert(tws sameElements builtin)
+    // sessions are well-formed: start < end, gap-closed end
+    tws.foreach { case (_, st, en, n) =>
+      assert(n >= 1 && en - st >= 1800000L, s"session ($st,$en,$n)")
+    }
+  }
+
+  test("c41: streaming TWS heavy hitters equal the batch operator") {
+    val got = query("c41_stream_topk")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
+    val want = query("e59_heavy_hitters")
+      .collect().map(r => r.getString(0) -> r.getLong(1)).toSeq.sorted
+    assert(got == want)
+    assert(got.nonEmpty)
+  }
+
+  test("c42: streaming mix image equals the batch e144 frame") {
+    val batch = query("e144_temperature_mix")
+      .collect().map(_.toSeq)
+    val stream = query("c42_stream_mix")
+      .collect().map(_.toSeq)
+    assert(stream.toSeq == batch.toSeq)
+  }
+
+  test("c43 streaming twin equals the e163 batch guardrail panel") {
+    val batch = query("e163_ab_guardrails")
+      .collect().toSeq
+    val stream = query("c43_stream_guardrails")
+      .collect().toSeq
+    assert(stream == batch)
+  }
+
+  test("c44 shard-merged sketch equals the e168 batch sketch") {
+    val batch = query("e168_countmin")
+      .collect().map(_.toSeq).toSet
+    val merged = query("c44_stream_countmin")
+      .collect().map(_.toSeq).toSet
+    assert(merged == batch)
+  }
+
+  test("c45 streaming twin equals the e170 batch CUPED panel") {
+    val batch = query("e170_cuped")
+      .collect().toSeq
+    val stream = query("c45_stream_cuped")
+      .collect().toSeq
+    assert(stream == batch)
+  }
+
+  test("c46 streaming admission equals the e176 batch decision set") {
+    val batch = query("e176_semdedup_delta")
+      .collect().map(_.toSeq).toSet
+    val stream = query("c46_stream_admission")
+      .collect().map(_.toSeq).toSet
+    assert(stream === batch)
+  }
+
+  test("c48: the post-ingest pruned probe over the appended layout " +
+    "equals e178's all-at-once batch index — stream equals batch") {
+    val stream = query("c48_stream_index_append")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    val batch = query("e178_ivf_pruned_probe")
+      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
+    assert(stream == batch, s"stream $stream != batch $batch")
+  }
+
+  test("c49: the checkpoint's state store contents equal the batch " +
+    "aggregate — the engine's internals, not just its output") {
+    val state = query("c49_state_audit")
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .toSet
+    val batch = graft.queries.Tables.events(spark, dir)
+      .groupBy("event_type")
+      .agg(count(lit(1)).as("cnt"),
+        sum(floor(col("value") * 1000).cast("long")).as("value_m"))
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+      .toSet
+    assert(state == batch, s"state $state != batch $batch")
+  }
+
+  test("c50: the TWS ValueState contents equal the batch arg_max — " +
+    "custom state judged like engine buffers") {
+    val state = query("c50_tws_state_audit")
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
+      .toSet
+    val batch = graft.queries.Tables.events(spark, dir)
+      .select(concat(col("event_type"), lit("-"),
+          (col("user_id") % 64).cast("string")).as("key"),
+        col("event_id").as("seq"), col("value"))
+      .groupBy("key")
+      .agg(max_by(col("value"), col("seq")).as("last_value"),
+        count(lit(1)).as("n_seen"))
+      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
+      .toSet
+    assert(state == batch, s"state size ${state.size} != batch recount")
+  }
+
+  test("e182: the spliced table equals a first-principles full " +
+    "aggregate, and the late slice was genuinely non-empty") {
+    val out = query("e182_backfill_overwrite")
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        r.getLong(3))).toSet
+    val ev = graft.queries.Tables.events(spark, dir)
+      .select(col("event_id"),
+        to_date(col("ts")).cast("string").as("day"), col("event_type"),
+        floor(col("value") * 1000).cast("long").as("vm"))
+    val full = ev.groupBy("day", "event_type")
+      .agg(count(lit(1)).as("cnt"), sum(col("vm")).as("value_m"))
+      .collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        r.getLong(3))).toSet
+    assert(out == full, "spliced table diverged from the full aggregate")
+    // the backfill must have had something to splice: the fixture's
+    // late slice (event_id % 5 == 0 on the last two days) is non-empty
+    val days = ev.select("day").distinct().orderBy(col("day").desc)
+      .limit(2).collect().map(_.getString(0)).toSeq
+    val late = ev.where(col("day").isin(days: _*) &&
+      col("event_id") % 5 === 0).count()
+    assert(late > 0, "late slice empty — the splice was a no-op")
+  }
+
+  test("c47: the streamed two-chunk merge lands on exactly e180's " +
+    "(= e15's) table — stream equals batch") {
+    val stream = query("c47_stream_components")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val batch = query("e180_components_delta")
+      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(stream == batch,
+      s"stream-only ${stream -- batch}; batch-only ${batch -- stream}")
   }
 }
