@@ -25,6 +25,12 @@ object Recount {
       .map(r => (r.getLong(0), r.getString(1), r.getString(2),
         r.getString(3)))
 
+  /** embeddings as (vec_id, vector), the query vector (vec_id 0) included. */
+  def embeddings(): Array[(Long, Array[Float])] =
+    graft.queries.Tables.t(spark, dir, "embeddings")
+      .select("vec_id", "embedding").collect()
+      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+
   /** `TextAnalysis.tokens` on the driver: lower-cased [a-z0-9] runs. */
   def toks(text: String): Array[String] =
     text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)

@@ -4,8 +4,8 @@ import org.apache.spark.sql.functions._
 import graft.operators.{Corpus, Similarity}
 
 /** Unit coverage for the round-8 third-wave shapes on handcrafted
-  * frames: the SemDeDup keep-peripheral rule, boilerplate segment
-  * removal/reassembly, and delta-algebra view maintenance with deletes.
+  * frames: the SemDeDup keep-peripheral rule and boilerplate segment
+  * removal/reassembly.
   */
 class Surface13Spec extends SparkSpec {
   import spark.implicits._
@@ -65,44 +65,5 @@ class Surface13Spec extends SparkSpec {
       .map(r => r._1 -> r).toMap
     assert(out(1L) == ((1L, "", 1L, 1L)))
     assert(out(3L) == ((3L, "u v w x", 2L, 1L)))
-  }
-
-  test("bilinear delta join maintenance equals direct recompute") {
-    // old state: orders {1,2}, lines on them; delta: order 7 inserted
-    // with its lines, line (2, 30) deleted
-    val o = Seq((1L, "A"), (2L, "B"), (7L, "A")).toDF("ok", "st")
-    val l = Seq((1L, 10L), (1L, 20L), (2L, 30L), (7L, 40L))
-      .toDF("lk", "v")
-    val oOld = o.where(col("ok") % 7 =!= 0)
-    val oDel = o.where(col("ok") % 7 === 0)
-    val lOld = l.where(col("lk") % 7 =!= 0)
-    val lIns = l.where(col("lk") % 7 === 0).withColumn("sig", lit(1L))
-    val lDel = lOld.where(col("v") === 30L).withColumn("sig", lit(-1L))
-    val lDelta = lIns.unionByName(lDel)
-    val vOld = oOld.join(lOld, col("ok") === col("lk"))
-      .groupBy("st").agg(sum(col("v")).as("sv"), count(lit(1)).as("sig"))
-    def term(of: org.apache.spark.sql.DataFrame,
-             lf: org.apache.spark.sql.DataFrame) =
-      of.join(lf, col("ok") === col("lk"))
-        .select(col("st"), (col("sig") * col("v")).as("sv"), col("sig"))
-    val inc = vOld.unionByName(
-        term(oDel, lOld.withColumn("sig", lit(1L)))
-          .unionByName(term(oOld, lDelta))
-          .unionByName(term(oDel, lDelta)))
-      .groupBy("st").agg(sum("sv").as("total"), sum("sig").as("n"))
-      // garbage-collect groups whose multiplicity hit zero — a direct
-      // recompute has no row for them (inner join over zero pairs)
-      .where(col("n") =!= 0)
-      .as[(String, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    // direct: final state = all orders ⋈ lines minus the deleted one
-    val direct = o.join(l.where(col("v") =!= 30L),
-        col("ok") === col("lk"))
-      .groupBy("st").agg(sum("v").as("total"), count(lit(1)).as("n"))
-      .as[(String, Long, Long)].collect()
-      .map(r => r._1 -> ((r._2, r._3))).toMap
-    assert(inc == direct)
-    // group B's only pair was retracted: it must VANISH, not report 0
-    assert(direct("A") == ((70L, 3L)) && !direct.contains("B"))
   }
 }

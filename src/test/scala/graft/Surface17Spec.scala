@@ -1,13 +1,12 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Recount._
 
 /** Round-10 additions: explicit cross-job Bloom semi-join and
   * prefix-filtered exact Jaccard join.
   */
 class Surface17Spec extends SparkSpec {
-  private val sfDir = "/root/testdata/sf0.001"
-
   test("driver-built bloom admits every true key (no false negatives)") {
     graft.functions.GraftFunctions.register(spark)
     import spark.implicits._
@@ -32,14 +31,14 @@ class Surface17Spec extends SparkSpec {
 
   test("q106 equals the plain exact semi-join (bloom is pruning-only)") {
     import graft.queries.Tables.{t, dsum}
-    val got = SparkEntry.queries("q106_bloom_semi")(spark, sfDir)
+    val got = query("q106_bloom_semi")
       .orderBy("l_returnflag").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-    val ord = t(spark, sfDir, "orders")
+    val ord = t(spark, dir, "orders")
       .where(col("o_orderdate") >= lit("1996-03-01").cast("timestamp") &&
         col("o_orderdate") < lit("1996-04-01").cast("timestamp"))
       .select("o_orderkey")
-    val want = t(spark, sfDir, "lineitem")
+    val want = t(spark, dir, "lineitem")
       .join(ord, col("l_orderkey") === col("o_orderkey"), "left_semi")
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n_lines"), dsum(col("l_quantity"), 2).as("q"))
@@ -48,27 +47,11 @@ class Surface17Spec extends SparkSpec {
     assert(got.nonEmpty && got.sameElements(want))
   }
 
-  test("band admission fold: earlier ids flag later ones, state carries") {
-    import graft.streaming.BandAdmission.{fold, BandRow}
-    // batch 1: doc 5 admitted, doc 7 flagged (5 < 7 shares the band)
-    val (f1, mn1) = fold("X", Long.MaxValue,
-      Seq(BandRow(7, "X"), BandRow(5, "X")))
-    assert(f1.map(f => (f.doc_id, f.dup)) == Seq((5L, false), (7L, true)))
-    assert(mn1 == 5L)
-    // batch 2 against carried state: doc 9 flagged by batch-1's doc 5
-    val (f2, mn2) = fold("X", mn1, Seq(BandRow(9, "X")))
-    assert(f2.map(f => (f.doc_id, f.dup)) == Seq((9L, true)) && mn2 == 5L)
-    // equal ids never flag each other
-    val (f3, _) = fold("Y", Long.MaxValue,
-      Seq(BandRow(4, "Y"), BandRow(4, "Y")))
-    assert(f3.forall(!_.dup))
-  }
-
   test("prefix filtering is lossless vs brute-force all-pairs Jaccard") {
     import graft.queries.Tables.t
     // brute-force truth at sf0.001: distinct token sets, all-pairs
     // intersection via token equi-join, threshold 3*inter >= na+nb
-    val docs = t(spark, sfDir, "documents").where(col("doc_id") < 300)
+    val docs = t(spark, dir, "documents").where(col("doc_id") < 300)
     val tk = docs.select(col("doc_id"),
       explode(array_distinct(filter(
         split(lower(col("text")), "[^a-z0-9]+"),
@@ -84,7 +67,7 @@ class Surface17Spec extends SparkSpec {
       .where(col("n_common") * 3 >= col("n_a") + col("n_b"))
       .select("id_a", "id_b", "n_common", "n_a", "n_b")
       .collect().map(_.toSeq).toSet
-    val got = SparkEntry.queries("e87_prefix_join")(spark, sfDir)
+    val got = query("e87_prefix_join")
       .collect().map(_.toSeq).toSet
     assert(got.nonEmpty && got == want)
   }

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Recount._
 
 /** Invariants for the round-11 second wave beyond
   * the value oracle: ranking shape for BM25, algebraic ranges for the
@@ -9,13 +10,9 @@ import org.apache.spark.sql.functions._
   * scales; these pin the SEMANTICS a value hash can't explain).
   */
 class Surface18Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-  private def q(name: String) =
-    SparkEntry.queries(name)(spark, dir)
-
   test("e96_bm25: per-query top-5, ranks contiguous, scores " +
     "non-increasing in rank") {
-    val rows = q("e96_bm25")
+    val rows = query("e96_bm25")
       .select("query_id", "rk", "score").collect()
       .groupBy(_.getString(0))
     assert(rows.keySet == Set("t1", "t2", "t3"))
@@ -32,7 +29,7 @@ class Surface18Spec extends SparkSpec {
   }
 
   test("e97_ols_trend: one row per event_type, finite coefficients") {
-    val rows = q("e97_ols_trend").collect()
+    val rows = query("e97_ols_trend").collect()
     assert(rows.map(_.getString(0)).distinct.length == rows.length)
     rows.foreach { r =>
       assert(!r.getDouble(2).isNaN && !r.getDouble(2).isInfinite)
@@ -45,7 +42,7 @@ class Surface18Spec extends SparkSpec {
       .groupBy(col("event_type"), date_trunc("day", col("ts")))
       .count().groupBy("event_type").count()
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    q("e98_acf").collect().foreach { r =>
+    query("e98_acf").collect().foreach { r =>
       val acf = r.getDouble(2)
       assert(acf >= -1.0 - 1e-12 && acf <= 1.0 + 1e-12, s"acf1=$acf")
       assert(r.getLong(1) == daily(r.getString(0)) - 1,
@@ -54,7 +51,7 @@ class Surface18Spec extends SparkSpec {
   }
 
   test("e99_hll_merge: union row present; merged estimate bound holds") {
-    val rows = q("e99_hll_merge").collect()
+    val rows = query("e99_hll_merge").collect()
     val all = rows.filter(_.getString(0) == "__all__")
     assert(all.length == 1, "exactly one __all__ union row")
     assert(rows.forall(_.getBoolean(2)),
@@ -72,7 +69,7 @@ class Surface18Spec extends SparkSpec {
     val li = graft.queries.Tables.t(spark, dir, "lineitem")
       .select(col("l_returnflag"), col("l_extendedprice"),
         col("l_quantity"))
-    q("q108_weighted_median").collect().foreach { r =>
+    query("q108_weighted_median").collect().foreach { r =>
       val (flag, med) = (r.getString(0), r.getDouble(1))
       val below = li.where(col("l_returnflag") === flag &&
         col("l_extendedprice") < med)

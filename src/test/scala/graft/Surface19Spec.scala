@@ -1,23 +1,10 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Recount._
 
 /** Invariants for the round-11 third wave. */
 class Surface19Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
-  test("q109_attribution: buckets partition ALL purchases exactly") {
-    val rows = SparkEntry.queries("q109_attribution")(spark, dir).collect()
-    val purchases = graft.queries.Tables.events(spark, dir)
-      .where(col("event_type") === "purchase").count()
-    assert(rows.map(_.getLong(1)).sum == purchases,
-      "attributed conversions must sum to the total purchase count")
-    val types = rows.map(_.getString(0)).toSet
-    assert(!types.contains("purchase"),
-      "a purchase can never be its own touch")
-    assert(rows.map(_.getString(0)).distinct.length == rows.length)
-  }
-
   test("AudioCodec: WAV encode -> decode is an exact PCM round trip") {
     import graft.operators.Multimodal.AudioCodec
     val samples = Array.tabulate(160)(i =>
@@ -30,14 +17,13 @@ class Surface19Spec extends SparkSpec {
 
   test("e101_audio_stats: columns agree with a direct driver-side " +
     "recompute of the fixture signal") {
-    val rows = SparkEntry.queries("e101_audio_stats")(spark, dir)
+    val rows = query("e101_audio_stats")
       .orderBy("doc_id").limit(5).collect()
     val docs = graft.queries.Tables.t(spark, dir, "documents")
       .select("doc_id", "text", "n_chars").orderBy("doc_id").limit(5)
       .collect()
-    val md = java.security.MessageDigest.getInstance("MD5")
     docs.zip(rows).foreach { case (d, r) =>
-      val dig = md.digest(d.getString(1).getBytes("UTF-8"))
+      val dig = md5Bytes(d.getString(1))
       val n = (d.getLong(2) % 96 + 32).toInt
       val s = Array.tabulate(n)(i => (dig(i % 16) & 0xff) * 257 - 32768)
       assert(r.getLong(1) == n)
@@ -67,7 +53,7 @@ class Surface19Spec extends SparkSpec {
 
   test("e103_ks_pairs: D in [0, 1], 10 unordered pairs, and the " +
     "KS identity D = sup|F1 - F2| holds on a driver recompute") {
-    val rows = SparkEntry.queries("e103_ks_pairs")(spark, dir).collect()
+    val rows = query("e103_ks_pairs").collect()
     assert(rows.length == 10)
     rows.foreach { r =>
       val d = r.getDouble(5)
@@ -92,7 +78,7 @@ class Surface19Spec extends SparkSpec {
   }
 
   test("e100_gini: coefficient in [0, 1), one row per language") {
-    val rows = SparkEntry.queries("e100_gini")(spark, dir).collect()
+    val rows = query("e100_gini").collect()
     assert(rows.map(_.getString(0)).distinct.length == rows.length)
     rows.foreach { r =>
       val g = r.getDouble(2)

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Recount._
 
 /** Invariants for the round-12 statistics wave.
   * Values are additionally cross-checked against independent
@@ -8,10 +9,8 @@ import org.apache.spark.sql.functions._
   * chi-square all agree to 8 decimals — see the round-12 notes).
   */
 class Surface21Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
   test("e104: U stays inside [0, na*nb] and z is finite for all pairs") {
-    val rows = SparkEntry.queries("e104_mannwhitney")(spark, dir).collect()
+    val rows = query("e104_mannwhitney").collect()
     assert(rows.length == 10)
     rows.foreach { r =>
       val (na, nb, u2) = (r.getLong(2), r.getLong(3), r.getLong(4))
@@ -27,7 +26,7 @@ class Surface21Spec extends SparkSpec {
     val ev = graft.queries.Tables.events(spark, dir)
       .select("event_type", "value").collect()
       .map(r => r.getString(0) -> r.getDouble(1))
-    val rows = SparkEntry.queries("e104_mannwhitney")(spark, dir).collect()
+    val rows = query("e104_mannwhitney").collect()
     rows.foreach { r =>
       val (a, b) = (r.getString(0), r.getString(1))
       val va = ev.filter(_._1 == a).map(_._2)
@@ -45,7 +44,7 @@ class Surface21Spec extends SparkSpec {
   }
 
   test("e105: chi2 >= 0, n = event count, dof = 36") {
-    val r = SparkEntry.queries("e105_chisq")(spark, dir).head()
+    val r = query("e105_chisq").head()
     assert(r.getDouble(0) >= 0.0)
     assert(r.getLong(1) == 36L)
     assert(r.getLong(2) ==
@@ -53,7 +52,7 @@ class Surface21Spec extends SparkSpec {
   }
 
   test("e106: |rho| <= 1 per group; group ns cover the table") {
-    val rows = SparkEntry.queries("e106_spearman")(spark, dir).collect()
+    val rows = query("e106_spearman").collect()
     assert(rows.nonEmpty)
     assert(rows.forall(r => math.abs(r.getDouble(2)) <= 1.0))
     assert(rows.map(_.getLong(1)).sum ==
@@ -61,7 +60,7 @@ class Surface21Spec extends SparkSpec {
   }
 
   test("q113: MAD is the median of |x - median| (driver recompute)") {
-    val rows = SparkEntry.queries("q113_mad")(spark, dir).collect()
+    val rows = query("q113_mad").collect()
       .map(r => r.getString(0) -> (r.getDouble(1), r.getDouble(2))).toMap
     val li = graft.queries.Tables.t(spark, dir, "lineitem")
       .select("l_returnflag", "l_extendedprice").collect()
@@ -81,7 +80,7 @@ class Surface21Spec extends SparkSpec {
 
   test("q114: mode is the argmax of the value histogram with " +
     "smallest-value ties") {
-    val rows = SparkEntry.queries("q114_mode")(spark, dir).collect()
+    val rows = query("q114_mode").collect()
       .map(r => r.getString(0) -> (r.getDouble(1), r.getLong(2))).toMap
     val li = graft.queries.Tables.t(spark, dir, "lineitem")
       .select("l_returnflag", "l_quantity").collect()
@@ -94,7 +93,7 @@ class Surface21Spec extends SparkSpec {
   }
 
   test("e112: distinct ratios in (0,1], d <= n per source") {
-    val rows = SparkEntry.queries("e112_distinct_ngrams")(spark, dir)
+    val rows = query("e112_distinct_ngrams")
       .collect()
     assert(rows.nonEmpty)
     rows.foreach { r =>
@@ -107,7 +106,7 @@ class Surface21Spec extends SparkSpec {
   }
 
   test("e111: coverage is monotone in k and ends <= 1") {
-    val rows = SparkEntry.queries("e111_vocab_coverage")(spark, dir)
+    val rows = query("e111_vocab_coverage")
       .orderBy("k").collect()
     assert(rows.map(_.getLong(0)).toSeq == Seq(100L, 1000L, 10000L))
     val cov = rows.map(_.getDouble(3))
@@ -118,9 +117,9 @@ class Surface21Spec extends SparkSpec {
 
   test("e110: every reported row is an eval doc near-dup to a train " +
     "doc under the e8 split") {
-    val rows = SparkEntry.queries("e110_neardup_contam")(spark, dir)
+    val rows = query("e110_neardup_contam")
       .collect()
-    val split = SparkEntry.queries("e8_split")(spark, dir).collect()
+    val split = query("e8_split").collect()
       .map(r => r.getLong(0) -> r.getString(2)).toMap
     rows.foreach { r =>
       assert(split(r.getLong(0)) != "train", "eval side must not be train")
@@ -132,7 +131,7 @@ class Surface21Spec extends SparkSpec {
 
   test("e107: per first-token ranks are 1..5, counts non-increasing, " +
     "probabilities valid") {
-    val rows = SparkEntry.queries("e107_bigram_lm")(spark, dir)
+    val rows = query("e107_bigram_lm")
       .orderBy("t1", "rk").collect()
     rows.groupBy(_.getString(0)).foreach { case (_, rs) =>
       val ranks = rs.map(_.getLong(2)).toSeq

@@ -1,33 +1,14 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Recount._
 
 /** Invariants for the round-13 wave: the BPE merge
   * trainer and Kendall's tau-b.
   */
 class Surface22Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
-  /** Corpus word histogram (words of length >= 2), driver side. */
-  private def wordHist: Seq[(String, Long)] =
-    graft.queries.Tables.t(spark, dir, "documents")
-      .select(explode(
-        graft.operators.TextAnalysis.tokens(col("text"))).as("w"))
-      .where(length(col("w")) >= 2)
-      .groupBy("w").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toSeq
-
-  /** Greedy left-to-right BPE merge of (a, b) over a symbol list. */
-  private def applyMerge(syms: List[String], a: String, b: String)
-      : List[String] = syms match {
-    case x :: y :: rest if x == a && y == b =>
-      (a + b) :: applyMerge(rest, a, b)
-    case x :: rest => x :: applyMerge(rest, a, b)
-    case Nil => Nil
-  }
-
   test("e113: full merge table equals a driver-side sequential trainer") {
-    val rows = SparkEntry.queries("e113_bpe_train")(spark, dir)
+    val rows = query("e113_bpe_train")
       .orderBy("merge_idx").collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getLong(4)))
     assert(rows.length == graft.queries.TokenizerQueries.bpeIters)
@@ -49,7 +30,7 @@ class Surface22Spec extends SparkSpec {
 
   test("e113: merged = left||right and pair counts never increase " +
     "across rounds (a round-k+1 pair embeds a round-k pair)") {
-    val rows = SparkEntry.queries("e113_bpe_train")(spark, dir)
+    val rows = query("e113_bpe_train")
       .orderBy("merge_idx").collect()
     rows.foreach(r =>
       assert(r.getString(3) == r.getString(1) + r.getString(2)))
@@ -85,8 +66,8 @@ class Surface22Spec extends SparkSpec {
 
   test("e115: segmentation stats match a driver-side greedy apply " +
     "of the trained merges") {
-    val r = SparkEntry.queries("e115_bpe_apply")(spark, dir).head()
-    val merges = SparkEntry.queries("e113_bpe_train")(spark, dir)
+    val r = query("e115_bpe_apply").head()
+    val merges = query("e113_bpe_train")
       .orderBy("merge_idx").collect()
       .map(m => (m.getString(1), m.getString(2)))
     var types = 0L; var wtot = 0L; var stot = 0L; var single = 0L
@@ -139,9 +120,9 @@ class Surface22Spec extends SparkSpec {
 
   test("e177: first batched merge equals e113's first sequential " +
     "merge, and the table is e113-shaped after projecting the pass") {
-    val batched = SparkEntry.queries("e177_bpe_batched")(spark, dir)
+    val batched = query("e177_bpe_batched")
       .orderBy("merge_idx").collect()
-    val seq1 = SparkEntry.queries("e113_bpe_train")(spark, dir)
+    val seq1 = query("e113_bpe_train")
       .orderBy("merge_idx").head()
     val b1 = batched.head
     assert((b1.getString(2), b1.getString(3), b1.getLong(5)) ==
@@ -160,7 +141,7 @@ class Surface22Spec extends SparkSpec {
   }
 
   test("q115: gini in [0,1) and matches a driver-side sorted recompute") {
-    val rows = SparkEntry.queries("q115_gini")(spark, dir).collect()
+    val rows = query("q115_gini").collect()
     val li = graft.queries.Tables.t(spark, dir, "lineitem")
       .select("l_returnflag", "l_extendedprice").collect()
       .map(r => r.getString(0) -> math.round(r.getDouble(1) * 100))
@@ -181,7 +162,7 @@ class Surface22Spec extends SparkSpec {
 
   test("q116: |acf| <= 1, pair counts shrink by one per lag, and " +
     "lag-1 matches a driver-side Pearson") {
-    val rows = SparkEntry.queries("q116_acf")(spark, dir).collect()
+    val rows = query("q116_acf").collect()
       .sortBy(_.getLong(0))
     assert(rows.map(_.getLong(0)).toSeq == Seq(1L, 2L, 3L))
     rows.sliding(2).foreach(w =>
@@ -207,7 +188,7 @@ class Surface22Spec extends SparkSpec {
 
   test("q117: trimmed/winsorized means match a driver-side sorted " +
     "recompute and bracket sensibly") {
-    val rows = SparkEntry.queries("q117_trimmed_mean")(spark, dir)
+    val rows = query("q117_trimmed_mean")
       .collect()
     val li = graft.queries.Tables.t(spark, dir, "lineitem")
       .select("l_returnflag", "l_extendedprice").collect()
@@ -232,7 +213,7 @@ class Surface22Spec extends SparkSpec {
 
   test("q118: quartiles match a driver-side sorted selection; " +
     "bowley in [-1,1] and iqr consistent") {
-    val rows = SparkEntry.queries("q118_bowley")(spark, dir).collect()
+    val rows = query("q118_bowley").collect()
     val li = graft.queries.Tables.t(spark, dir, "lineitem")
       .select("l_returnflag", "l_extendedprice").collect()
       .map(r => r.getString(0) -> r.getDouble(1))
@@ -251,7 +232,7 @@ class Surface22Spec extends SparkSpec {
 
   test("e116: digit counts cover the table, probabilities sum to 1, " +
     "expected matches the Benford law") {
-    val rows = SparkEntry.queries("e116_benford")(spark, dir).collect()
+    val rows = query("e116_benford").collect()
     assert(rows.map(_.getInt(0)).forall(d => d >= 1 && d <= 9))
     assert(rows.map(_.getLong(1)).sum ==
       graft.queries.Tables.t(spark, dir, "lineitem").count())
@@ -261,7 +242,7 @@ class Surface22Spec extends SparkSpec {
   }
 
   test("e117: top-25 collocations match a driver-side lift recount") {
-    val byName = SparkEntry.queries("e117_collocations")(spark, dir)
+    val byName = query("e117_collocations")
       .select("t1", "t2", "n_ab", "lift_micro").collect()
       .map(r => (r.getString(0), r.getString(1), r.getLong(2),
         r.getLong(3)))
@@ -286,52 +267,8 @@ class Surface22Spec extends SparkSpec {
       s"top-25 mismatch:\n engine=${byName.take(3).mkString(",")}\n driver=${expect.take(3).mkString(",")}")
   }
 
-  test("c36 (transformWithState timers) and c33 (EventTimeTimeout) " +
-    "produce the identical attribution rollup") {
-    val c33 = SparkEntry.queries("c33_stream_attribution_ttl")(spark, dir)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(_._1)
-    val c36 = SparkEntry.queries("c36_stream_attribution_tws")(spark, dir)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getDouble(2)))
-      .sortBy(_._1)
-    assert(c33.toSeq == c36.toSeq,
-      s"twin mismatch:\n c33=${c33.mkString(",")}\n c36=${c36.mkString(",")}")
-    assert(c33.exists(_._1 == "(evicted)") &&
-      c33.exists(_._1 == "(live_end)"))
-  }
-
-  test("c37: last-3 shares partition each purchase exactly (1e6 u) " +
-    "and the stream's conversions sum to the purchase count") {
-    import graft.streaming.Attribution.last3Shares
-    val cases = Seq(Seq(), Seq("a"), Seq("a", "b"), Seq("a", "b", "c"),
-      Seq("a", "a", "b"), Seq("x", "x", "x"), Seq("a", "b", "c", "d"))
-    cases.foreach { r =>
-      assert(last3Shares(r, 100).map(_.w).sum == 1000000L,
-        s"shares for $r don't sum to 1e6")
-    }
-    assert(last3Shares(Seq("a", "a", "b"), 1).find(_.touch_type == "a")
-      .get.w == 800000L)
-    val rows = SparkEntry.queries("c37_stream_last3")(spark, dir)
-      .collect()
-    val nPurch = graft.queries.Tables.events(spark, dir)
-      .where(col("event_type") === "purchase").count()
-    assert(math.abs(rows.map(_.getDouble(1)).sum - nPurch) < 1e-6,
-      s"conversions ${rows.map(_.getDouble(1)).sum} != purchases $nPurch")
-  }
-
-  test("c38 (MapState), c34 (fMGWS walk), and q110 (batch window) " +
-    "produce the identical multi-touch rollup") {
-    def roll(q: String) = SparkEntry.queries(q)(spark, dir).collect()
-      .map(r => (r.getString(0), r.getDouble(1), r.getDouble(2)))
-      .sortBy(_._1).toSeq
-    val c38 = roll("c38_stream_multitouch_map")
-    assert(c38 == roll("c34_stream_multitouch"),
-      "MapState vs fMGWS mismatch")
-    assert(c38 == roll("q110_multitouch"), "MapState vs batch mismatch")
-  }
-
   test("e114: tau_b in [-1,1]; C/D match a driver-side O(n^2) recount") {
-    val rows = SparkEntry.queries("e114_kendall")(spark, dir).collect()
+    val rows = query("e114_kendall").collect()
     assert(rows.length == 3)
     val li = graft.queries.Tables.t(spark, dir, "lineitem")
       .select("l_returnflag", "l_quantity", "l_discount").collect()

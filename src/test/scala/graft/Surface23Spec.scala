@@ -1,22 +1,20 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Recount._
 
 /** Invariants for the round-14 wave: Kruskal–Wallis,
   * Brown–Forsythe, CUSUM, lexical richness, t-closeness, perceptual-
-  * hash dedup, the streaming SCD2 twin — plus the q118 degenerate-IQR
-  * guard.
+  * hash dedup — plus the q118 degenerate-IQR guard.
   */
 class Surface23Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
   private def pooled(): Array[(String, Long)] =
     graft.queries.Tables.t(spark, dir, "lineitem")
       .select("l_returnflag", "l_extendedprice").collect()
       .map(r => r.getString(0) -> math.round(r.getDouble(1) * 100))
 
   test("q119: H and rank sums match a driver-side average-rank recount") {
-    val row = SparkEntry.queries("q119_kruskal")(spark, dir).head()
+    val row = query("q119_kruskal").head()
     val li = pooled()
     // average ranks over the pooled sample (ties share the mean rank)
     val byV = li.map(_._2).groupBy(identity).view
@@ -45,7 +43,7 @@ class Surface23Spec extends SparkSpec {
   }
 
   test("q120: F matches a driver-side median-deviation recount") {
-    val row = SparkEntry.queries("q120_levene")(spark, dir).head()
+    val row = query("q120_levene").head()
     val li = pooled()
     val groups = Seq("A", "N", "R")
     val devs = groups.map { g =>
@@ -73,7 +71,7 @@ class Surface23Spec extends SparkSpec {
   }
 
   test("q122: ANOVA F matches a driver-side exact-sum recount") {
-    val row = SparkEntry.queries("q122_anova")(spark, dir).head()
+    val row = query("q122_anova").head()
     val li = pooled()
     val groups = Seq("A", "N", "R")
     val cs = groups.map(g => li.filter(_._1 == g).map(_._2))
@@ -96,7 +94,7 @@ class Surface23Spec extends SparkSpec {
 
   test("e121: clipped unigram overlap and F match a driver-side " +
     "recount on every candidate pair") {
-    val rows = SparkEntry.queries("e121_rouge_audit")(spark, dir)
+    val rows = query("e121_rouge_audit")
       .collect()
     assert(rows.nonEmpty)
     val toks = graft.queries.Tables.t(spark, dir, "documents")
@@ -124,7 +122,7 @@ class Surface23Spec extends SparkSpec {
 
   test("e122: tie-aware CvM matches a driver-side pooled-CDF recount " +
     "and is nonnegative") {
-    val row = SparkEntry.queries("e122_cvm")(spark, dir).head()
+    val row = query("e122_cvm").head()
     val li = pooled()
     val byV = li.groupBy(_._2).view.mapValues { xs =>
       (xs.length.toLong, xs.count(_._1 == "A").toLong,
@@ -151,13 +149,11 @@ class Surface23Spec extends SparkSpec {
 
   test("e123: VAD report matches a driver-side md5-derived energy " +
     "recount for every clip") {
-    val rows = SparkEntry.queries("e123_audio_vad")(spark, dir)
+    val rows = query("e123_audio_vad")
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
-    val md = java.security.MessageDigest.getInstance("MD5")
     graft.queries.Tables.t(spark, dir, "documents")
       .select("doc_id", "text", "n_chars").collect().foreach { r =>
-        val dig = md.digest(Option(r.getString(1)).getOrElse("")
-          .getBytes("UTF-8"))
+        val dig = md5Bytes(Option(r.getString(1)).getOrElse(""))
         val ns = (r.getLong(2) % 96 + 32).toInt
         val nf = ns / 8
         var (voiced, segs, longest, run) = (0L, 0L, 0L, 0L)
@@ -183,13 +179,11 @@ class Surface23Spec extends SparkSpec {
 
   test("e124: scene cuts match a driver-side md5-derived frame-diff " +
     "recount for every clip") {
-    val rows = SparkEntry.queries("e124_scene_cuts")(spark, dir)
+    val rows = query("e124_scene_cuts")
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
-    val md = java.security.MessageDigest.getInstance("MD5")
     graft.queries.Tables.t(spark, dir, "documents")
       .select("doc_id", "text", "n_chars").collect().foreach { r =>
-        val dig = md.digest(Option(r.getString(1)).getOrElse("")
-          .getBytes("UTF-8"))
+        val dig = md5Bytes(Option(r.getString(1)).getOrElse(""))
         val w = (r.getLong(2) % 16 + 4).toInt
         val nf = (r.getLong(2) % 6 + 2).toInt
         val npx = 4 * w
@@ -213,8 +207,8 @@ class Surface23Spec extends SparkSpec {
 
   test("q123: Mann-Kendall S, tie-corrected variance and z match a " +
     "driver-side pair walk") {
-    val row = SparkEntry.queries("q123_mann_kendall")(spark, dir).head()
-    val xs = SparkEntry.queries("q121_cusum")(spark, dir)
+    val row = query("q123_mann_kendall").head()
+    val xs = query("q121_cusum")
       .orderBy("d").collect().map(_.getAs[Long]("x"))
     val dDays = xs.length
     var s = 0L
@@ -235,7 +229,7 @@ class Surface23Spec extends SparkSpec {
   }
 
   test("q121: excursions match a driver-side cumsum and end at zero") {
-    val rows = SparkEntry.queries("q121_cusum")(spark, dir)
+    val rows = query("q121_cusum")
       .orderBy("d").collect()
     val xs = rows.map(_.getAs[Long]("x"))
     val d = xs.length.toLong
@@ -253,7 +247,7 @@ class Surface23Spec extends SparkSpec {
 
   test("e118: richness statistics match a driver-side histogram " +
     "recount and satisfy the K/D identity") {
-    val row = SparkEntry.queries("e118_lexical_richness")(spark, dir)
+    val row = query("e118_lexical_richness")
       .head()
     val counts = graft.queries.Tables.t(spark, dir, "documents")
       .select(explode(
@@ -277,7 +271,7 @@ class Surface23Spec extends SparkSpec {
 
   test("e119: per-class TV distance matches a driver-side recount " +
     "and sits in [0, 1]") {
-    val rows = SparkEntry.queries("e119_t_closeness")(spark, dir)
+    val rows = query("e119_t_closeness")
       .collect()
     val docs = graft.queries.Tables.t(spark, dir, "documents")
       .select(col("source"), expr("n_chars div 200").as("b"),
@@ -302,16 +296,14 @@ class Surface23Spec extends SparkSpec {
   }
 
   test("e120: fingerprint buckets match a driver-side md5 recount") {
-    val rows = SparkEntry.queries("e120_phash_buckets")(spark, dir)
+    val rows = query("e120_phash_buckets")
       .collect()
       .map(r => r.getAs[Long]("fp") ->
         (r.getAs[Long]("n_images"), r.getAs[Long]("min_doc"),
           r.getAs[Long]("max_doc"))).toMap
-    val md = java.security.MessageDigest.getInstance("MD5")
     val fps = graft.queries.Tables.t(spark, dir, "documents")
       .select("doc_id", "text", "n_chars").collect().map { r =>
-        val dig = md.digest(Option(r.getString(1)).getOrElse("")
-          .getBytes("UTF-8"))
+        val dig = md5Bytes(Option(r.getString(1)).getOrElse(""))
         val w = (r.getLong(2) % 64 + 1).toInt
         val nPx = 4 * w
         val m = math.min(nPx, 16)
@@ -328,17 +320,6 @@ class Surface23Spec extends SparkSpec {
       s"${rows.size} engine buckets vs ${expected.size} driver buckets")
   }
 
-  test("c39: the streaming SCD2 history equals the batch c12_scd2 " +
-    "frame row for row") {
-    def canon(name: String): Seq[String] =
-      SparkEntry.queries(name)(spark, dir)
-        .select(col("c_custkey"), col("c_acctbal"),
-          col("effective_from"), col("effective_to"), col("is_current"))
-        .collect()
-        .map(_.toSeq.map(String.valueOf).mkString("|")).sorted.toSeq
-    assert(canon("c39_stream_scd2") == canon("c12_scd2"))
-  }
-
   test("q118: a constant-valued group yields NULL Bowley skewness, " +
     "not Infinity/NaN") {
     import spark.implicits._
@@ -348,7 +329,7 @@ class Surface23Spec extends SparkSpec {
       .toDF("l_returnflag", "l_extendedprice")
       .write.parquet(s"$tmp/lineitem.parquet")
     try {
-      val rows = SparkEntry.queries("q118_bowley")(spark, tmp.toString)
+      val rows = query("q118_bowley", tmp.toString)
         .collect().map(r => r.getString(0) -> r).toMap
       assert(rows("X").getAs[Double]("iqr") == 0.0)
       assert(rows("X").isNullAt(rows("X").fieldIndex("bowley")))

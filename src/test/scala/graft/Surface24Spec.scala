@@ -1,34 +1,21 @@
 package graft
 
+import Recount._
+
 /** Invariants for the round-15 wave: DSIR hashed-
   * bigram importance weights and the duplicated-span extent audit —
   * each recounted driver-side from first principles at sf0.001.
   */
 class Surface24Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
-  private def md5hex(s: String): String =
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s.getBytes("UTF-8")).map("%02x".format(_)).mkString
-
-  private def toks(text: String): Array[String] =
-    text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
-
-  private def docs(): Array[(Long, String, String)] =
-    graft.queries.Tables.t(spark, dir, "documents")
-      .select("doc_id", "lang", "text").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-
   test("e125: weights match a first-principles hashed-bigram recount") {
-    val rows = SparkEntry.queries("e125_dsir_weights")(spark, dir)
+    val rows = query("e125_dsir_weights")
       .collect().map(r => r.getLong(0) ->
         (r.getLong(1), r.getLong(2), r.getDouble(3))).toMap
     // recount: per-doc bucket histogram, corpus + target totals
-    val perDoc = docs().map { case (id, lang, text) =>
+    val perDoc = docs().map { case (id, text, lang, _) =>
       val tk = toks(Option(text).getOrElse(""))
       val buckets = tk.sliding(2).filter(_.length == 2)
-        .map(p => java.lang.Long.parseLong(
-          md5hex(p(0) + " " + p(1)).take(4), 16) % 64)
+        .map(p => md5Prefix(p(0) + " " + p(1), 4) % 64)
         .toSeq.groupBy(identity).view.mapValues(_.size.toLong).toMap
       (id, lang, buckets)
     }.filter(_._3.nonEmpty)
@@ -53,7 +40,7 @@ class Surface24Spec extends SparkSpec {
   }
 
   test("q124: Theil–Sen slope matches a driver-side all-pairs median") {
-    val row = SparkEntry.queries("q124_theil_sen")(spark, dir).head()
+    val row = query("q124_theil_sen").head()
     val daily = graft.queries.Tables.events(spark, dir)
       .groupBy(org.apache.spark.sql.functions.to_date(
         org.apache.spark.sql.functions.col("ts")).as("d"))
@@ -73,7 +60,7 @@ class Surface24Spec extends SparkSpec {
   }
 
   test("e127: confusion matrix partitions the corpus; fracs sum to 1 per lang") {
-    val rows = SparkEntry.queries("e127_langid_confusion")(spark, dir)
+    val rows = query("e127_langid_confusion")
       .collect()
     val total = rows.map(_.getAs[Long]("n")).sum
     assert(total == docs().length)
@@ -90,14 +77,13 @@ class Surface24Spec extends SparkSpec {
   }
 
   test("e128: clipped counts match the generative md5 rail bytes") {
-    val got = SparkEntry.queries("e128_audio_clipping")(spark, dir)
+    val got = query("e128_audio_clipping")
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2))).toMap
     graft.queries.Tables.t(spark, dir, "documents")
       .select("doc_id", "text", "n_chars").collect().foreach { r =>
         val (id, text, nChars) =
           (r.getLong(0), Option(r.getString(1)).getOrElse(""), r.getLong(2))
-        val bytes = md5hex(text).grouped(2)
-          .map(Integer.parseInt(_, 16)).toArray
+        val bytes = md5Bytes(text).map(_ & 0xff)
         val n = (nChars % 96 + 32).toInt
         val clipped = (0 until n).count(i =>
           bytes(i % 16) == 0xff || bytes(i % 16) == 0x00)
@@ -106,20 +92,12 @@ class Surface24Spec extends SparkSpec {
   }
 
   test("e129: prefix-dim recall matches a driver-side exact recount") {
-    val got = SparkEntry.queries("e129_matryoshka_recall")(spark, dir)
+    val got = query("e129_matryoshka_recall")
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val vecs = graft.queries.Tables.t(spark, dir, "embeddings")
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val vecs = embeddings()
     val q = vecs.find(_._1 == 0L).get._2
-    def cos(a: Array[Float], b: Array[Float], m: Int): Double = {
-      def fold(x: Array[Float], y: Array[Float]) =
-        (0 until m).foldLeft(0.0)((acc, i) =>
-          acc + x(i).toDouble * y(i).toDouble)
-      fold(a, b) / (math.sqrt(fold(a, a)) * math.sqrt(fold(b, b)))
-    }
     def top10(m: Int): Set[Long] = vecs.filter(_._1 != 0L)
-      .map { case (id, v) => (id, cos(v, q, m)) }
+      .map { case (id, v) => (id, cosine(v.take(m), q.take(m))) }
       .sortBy { case (id, c) => (-c, id) }.take(10).map(_._1).toSet
     val full = top10(64)
     Seq(8, 16, 32).foreach { m =>
@@ -131,7 +109,7 @@ class Surface24Spec extends SparkSpec {
   }
 
   test("e130: Hellinger matrix is a bounded symmetric metric over profiles") {
-    val rows = SparkEntry.queries("e130_hellinger_drift")(spark, dir)
+    val rows = query("e130_hellinger_drift")
       .collect()
     val nSources = graft.queries.Tables.t(spark, dir, "documents")
       .select("source").distinct().count()
@@ -156,27 +134,10 @@ class Surface24Spec extends SparkSpec {
     assert(math.abs(r0.getAs[Double]("bc") - bc) < 1e-7)
   }
 
-  test("c40: TWS session twin equals the built-in session_window output") {
-    val key = (r: org.apache.spark.sql.Row) =>
-      (r.getLong(0), r.getTimestamp(1).getTime,
-        r.getTimestamp(2).getTime, r.getLong(3))
-    val tws = SparkEntry.queries("c40_stream_session_tws")(spark, dir)
-      .collect().map(key).sorted
-    val builtin = SparkEntry.queries("c21_stream_session")(spark, dir)
-      .select("user_id", "session_start", "session_end", "n")
-      .collect().map(key).sorted
-    assert(tws.length == builtin.length)
-    assert(tws sameElements builtin)
-    // sessions are well-formed: start < end, gap-closed end
-    tws.foreach { case (_, st, en, n) =>
-      assert(n >= 1 && en - st >= 1800000L, s"session ($st,$en,$n)")
-    }
-  }
-
   test("e131: KS uniformity statistic matches a driver-side recount") {
-    val row = SparkEntry.queries("e131_hash_uniformity")(spark, dir).head()
-    val ks = docs().map { case (id, _, _) =>
-      java.lang.Long.parseLong(md5hex(id.toString).take(4), 16) % 100
+    val row = query("e131_hash_uniformity").head()
+    val ks = docs().map { case (id, _, _, _) =>
+      md5Prefix(id.toString, 4) % 100
     }
     val n = ks.length.toLong
     val counts = ks.groupBy(identity).view.mapValues(_.size.toLong).toMap
@@ -194,7 +155,7 @@ class Surface24Spec extends SparkSpec {
   }
 
   test("q125: seasonal eta2 matches a driver-side dow decomposition") {
-    val row = SparkEntry.queries("q125_seasonal_strength")(spark, dir)
+    val row = query("q125_seasonal_strength")
       .head()
     val daily = graft.queries.Tables.events(spark, dir)
       .groupBy(org.apache.spark.sql.functions.to_date(
@@ -219,11 +180,11 @@ class Surface24Spec extends SparkSpec {
   }
 
   test("e126: span extents match a brute-force pair walk") {
-    val got = SparkEntry.queries("e126_dup_spans")(spark, dir)
+    val got = query("e126_dup_spans")
       .collect().map(r => (r.getLong(0), r.getLong(1)) ->
         (r.getLong(2), r.getLong(3))).toMap
     // recount: chunk fingerprints per doc, then brute-force diagonals
-    val rawChunks = docs().map { case (id, _, text) =>
+    val rawChunks = docs().map { case (id, text, _, _) =>
       val tk = toks(Option(text).getOrElse(""))
       id -> tk.grouped(16).zipWithIndex
         .map { case (c, i) => (i.toLong, md5hex(c.mkString(" "))) }.toSeq

@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.functions.col
+import Recount._
 
 /** Invariants for the round-16 second wave: each
   * judged statistic recounted driver-side from first principles at
@@ -9,20 +10,9 @@ import org.apache.spark.sql.functions.col
   * the oracle gate already grades).
   */
 class Surface26Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
-  private def toks(text: String): Array[String] =
-    text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
-
-  private def docs(): Array[(Long, String, String, String)] =
-    graft.queries.Tables.t(spark, dir, "documents")
-      .select("doc_id", "text", "lang", "source").collect()
-      .map(r => (r.getLong(0), r.getString(1), r.getString(2),
-        r.getString(3)))
-
   test("e140: kappa matches a driver-side confusion recount") {
-    val row = SparkEntry.queries("e140_langid_kappa")(spark, dir).head()
-    val det = SparkEntry.queries("e4_langid")(spark, dir).collect()
+    val row = query("e140_langid_kappa").head()
+    val det = query("e4_langid").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val pairs = docs().map(d => (d._3, det(d._1)))
     val n = pairs.length.toLong
@@ -38,9 +28,9 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e141: McNemar cells match a driver-side flag recount") {
-    val row = SparkEntry.queries("e141_mcnemar_dedup")(spark, dir).head()
+    val row = query("e141_mcnemar_dedup").head()
     def ids(q: String): Set[Long] =
-      SparkEntry.queries(q)(spark, dir).select("id_a", "id_b").collect()
+      query(q).select("id_a", "id_b").collect()
         .flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     val mh = ids("e1_minhash_pairs")
     val sh = ids("e32_simhash_pairs")
@@ -61,7 +51,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e142: Cochran Q matches a first-principles screen recount") {
-    val row = SparkEntry.queries("e142_cochran_q")(spark, dir).head()
+    val row = query("e142_cochran_q").head()
     val terms = Set("spark", "stream", "vector", "window")
     val rows = docs().map { d =>
       val tk = toks(d._2)
@@ -90,9 +80,9 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e143: gains table matches a driver-side rank-and-cut recount") {
-    val out = SparkEntry.queries("e143_dsir_gains")(spark, dir)
+    val out = query("e143_dsir_gains")
       .collect().map(r => r.getAs[Long]("decile") -> r).toMap
-    val w = SparkEntry.queries("e125_dsir_weights")(spark, dir)
+    val w = query("e125_dsir_weights")
       .select("doc_id", "w_num", "w_den").collect()
       .map(r => (r.getLong(0), r.getLong(1).toDouble / r.getLong(2)))
     val lang = docs().map(d => d._1 -> d._3).toMap
@@ -125,7 +115,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e144: mixture weights match a token recount and sum to ~1") {
-    val rows = SparkEntry.queries("e144_temperature_mix")(spark, dir)
+    val rows = query("e144_temperature_mix")
       .collect().map(r => r.getAs[String]("source") -> r).toMap
     val cnt = docs().groupBy(_._4).view
       .mapValues(_.map(d => toks(d._2).length.toLong).sum).toMap
@@ -153,9 +143,9 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e146: RRF matches a driver-side rank-and-fuse recount") {
-    val out = SparkEntry.queries("e146_rrf_fusion")(spark, dir).collect()
+    val out = query("e146_rrf_fusion").collect()
     def ranks(q: String): Map[Long, Long] =
-      SparkEntry.queries(q)(spark, dir).collect()
+      query(q).collect()
         .map(r => (r.getLong(0), r.getDouble(1)))
         .sortBy { case (id, cos) => (-cos, id) }
         .zipWithIndex.map { case ((id, _), i) => id -> (i + 1L) }.toMap
@@ -176,35 +166,16 @@ class Surface26Spec extends SparkSpec {
     }
   }
 
-  test("c42: streaming mix image equals the batch e144 frame") {
-    val batch = SparkEntry.queries("e144_temperature_mix")(spark, dir)
-      .collect().map(_.toSeq)
-    val stream = SparkEntry.queries("c42_stream_mix")(spark, dir)
-      .collect().map(_.toSeq)
-    assert(stream.toSeq == batch.toSeq)
-  }
-
   test("e154: MMR selection matches a driver-side greedy recount") {
-    val out = SparkEntry.queries("e154_mmr_diversify")(spark, dir)
+    val out = query("e154_mmr_diversify")
       .collect().sortBy(_.getAs[Long]("step"))
-    val ex = SparkEntry.queries("e2_topk")(spark, dir).collect()
+    val ex = query("e2_topk").collect()
       .map(r => r.getLong(0) -> r.getDouble(1)).toMap
-    val emb = graft.queries.Tables.t(spark, dir, "embeddings")
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
-    def cos(a: Array[Float], b: Array[Float]): Double = {
-      var d0 = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < a.length) {
-        d0 += a(i).toDouble * b(i).toDouble
-        na += a(i).toDouble * a(i).toDouble
-        nb += b(i).toDouble * b(i).toDouble; i += 1
-      }
-      d0 / (math.sqrt(na) * math.sqrt(nb))
-    }
+    val emb = embeddings().toMap
     var selected = List.empty[Long]
     val picks = (1 to 3).map { _ =>
       val cand = ex.keys.filterNot(selected.contains).map { id =>
-        val div = selected.map(s => cos(emb(id), emb(s)))
+        val div = selected.map(s => cosine(emb(id), emb(s)))
           .foldLeft(Double.NegativeInfinity)(math.max)
         val score = if (selected.isEmpty) ex(id)
           else 0.7 * ex(id) - 0.3 * div
@@ -227,11 +198,9 @@ class Surface26Spec extends SparkSpec {
 
   test("e152/e153: RBO and Neyman allocation match driver recounts") {
     // e152: recompute both rankings and the truncated RBO
-    val emb = graft.queries.Tables.t(spark, dir, "embeddings")
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val emb = embeddings()
     val q = emb.find(_._1 == 0L).get._2
-    val ex = SparkEntry.queries("e2_topk")(spark, dir)
+    val ex = query("e2_topk")
       .select("vec_id").collect().map(_.getLong(0))
     val ap = emb.filter(_._1 != 0L).map { case (id, x) =>
       id -> x.zip(q).count { case (a, b) => (a >= 0) != (b >= 0) }
@@ -243,7 +212,7 @@ class Surface26Spec extends SparkSpec {
       val x = common.count(id => rx(id) < dd && ra(id) < dd)
       0.1 * math.pow(0.9, dd - 1) * x / dd
     }.sum
-    val row = SparkEntry.queries("e152_rbo")(spark, dir).head()
+    val row = query("e152_rbo").head()
     assert(row.getAs[Long]("n_common") == common.size)
     assert(math.abs(row.getAs[Double]("rbo_trunc") - rbo) < 1e-7)
     assert(common.nonEmpty) // degenerate-agreement guard
@@ -259,7 +228,7 @@ class Surface26Spec extends SparkSpec {
       l -> math.floor(n.toDouble * sh * 1e6).toLong
     }
     val tQw = qw.values.sum
-    val rows = SparkEntry.queries("e153_neyman_alloc")(spark, dir)
+    val rows = query("e153_neyman_alloc")
       .collect().map(r => r.getAs[String]("lang") -> r).toMap
     assert(rows.keySet == qw.keySet)
     qw.foreach { case (l, w) =>
@@ -271,26 +240,15 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e155: Kendall W matches a driver-side three-ranker recount") {
-    val row = SparkEntry.queries("e155_kendall_w")(spark, dir).head()
-    val emb = graft.queries.Tables.t(spark, dir, "embeddings")
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray).toMap
+    val row = query("e155_kendall_w").head()
+    val emb = embeddings().toMap
     val q = emb(0L)
-    def cosPrefix(x: Array[Float], m: Int): Double = {
-      var d0 = 0.0; var na = 0.0; var nb = 0.0; var i = 0
-      while (i < m) {
-        d0 += x(i).toDouble * q(i).toDouble
-        na += x(i).toDouble * x(i).toDouble
-        nb += q(i).toDouble * q(i).toDouble; i += 1
-      }
-      d0 / (math.sqrt(na) * math.sqrt(nb))
-    }
-    val pool = SparkEntry.queries("e2_topk")(spark, dir).collect()
+    val pool = query("e2_topk").collect()
       .map(r => (r.getLong(0), r.getDouble(1)))
       .map { case (id, rel) =>
         val x = emb(id)
         val ham = x.zip(q).count { case (a, b) => (a >= 0) != (b >= 0) }
-        (id, rel, ham.toLong, cosPrefix(x, 32))
+        (id, rel, ham.toLong, cosine(x.take(32), q.take(32)))
       }
     // s = 2*below + tied(incl self) + 1, per ranker, "better" first
     def sranks[T](score: ((Long, Double, Long, Double)) => T,
@@ -322,7 +280,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e156: segmentation matches a driver-side block recount") {
-    val rows = SparkEntry.queries("e156_texttiling")(spark, dir)
+    val rows = query("e156_texttiling")
       .collect().map(r => r.getAs[Long]("doc_id") -> r).toMap
     var boundaries = 0L
     docs().filter(d => toks(d._2).nonEmpty).foreach { d0 =>
@@ -344,7 +302,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e157: signed-rank statistic matches a driver-side recount") {
-    val row = SparkEntry.queries("e157_wilcoxon")(spark, dir).head()
+    val row = query("e157_wilcoxon").head()
     val ev = graft.queries.Tables.events(spark, dir)
       .select(org.apache.spark.sql.functions.to_date(col("ts")).as("d"),
         col("event_type")).collect()
@@ -373,9 +331,9 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e158: classifier report matches a confusion-cell recount") {
-    val out = SparkEntry.queries("e158_classifier_report")(spark, dir)
+    val out = query("e158_classifier_report")
       .collect().map(r => r.getAs[String]("lang") -> r).toMap
-    val det = SparkEntry.queries("e4_langid")(spark, dir).collect()
+    val det = query("e4_langid").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
     val pairs = docs().map(d => (d._3, det(d._1)))
     val n = pairs.length.toLong
@@ -399,10 +357,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e159/e160: resampling statistics match driver recounts") {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def hash13(s0: String): Long = java.lang.Long.parseLong(
-      md.digest(s0.getBytes("UTF-8")).map("%02x".format(_))
-        .mkString.take(13), 16)
+    def hash13(s0: String): Long = md5Prefix(s0, 13)
     // e159: sign-flip permutation
     val ev = graft.queries.Tables.events(spark, dir)
       .select(org.apache.spark.sql.functions.to_date(col("ts")).as("d"),
@@ -420,7 +375,7 @@ class Surface26Spec extends SparkSpec {
       }.sum
     }
     val nGe = tbs.count(t => math.abs(t) >= math.abs(tObs)).toLong
-    val row = SparkEntry.queries("e159_permutation_test")(spark, dir)
+    val row = query("e159_permutation_test")
       .head()
     assert(row.getAs[Long]("n_days") == diffs.length)
     assert(row.getAs[Long]("t_obs") == tObs)
@@ -430,9 +385,7 @@ class Surface26Spec extends SparkSpec {
     // the permutation distribution must straddle the observed value
     assert(nGe > 0 && nGe < 64)
     // e160: grouped jackknife
-    val hash4 = (id: Long) => java.lang.Long.parseLong(
-      md.digest(id.toString.getBytes("UTF-8")).map("%02x".format(_))
-        .mkString.take(4), 16) % 10L
+    val hash4 = (id: Long) => md5Prefix(id.toString, 4) % 10L
     val byG = docs().map(d0 => hash4(d0._1) -> toks(d0._2).length.toLong)
       .groupBy(_._1).view.mapValues(xs =>
         (xs.length.toLong, xs.map(_._2).sum)).toMap
@@ -443,7 +396,7 @@ class Surface26Spec extends SparkSpec {
     val gn = qs.length.toLong
     val sq = qs.sum
     val sdev2 = qs.map(q => (q * gn - sq) * (q * gn - sq)).sum
-    val row2 = SparkEntry.queries("e160_jackknife")(spark, dir).head()
+    val row2 = query("e160_jackknife").head()
     assert(row2.getAs[Long]("n_docs") == n)
     assert(row2.getAs[Long]("g_buckets") == gn)
     assert(math.abs(row2.getAs[Double]("theta_hat") -
@@ -454,10 +407,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e161/e162: conformal and DiD match driver recounts") {
-    val md = java.security.MessageDigest.getInstance("MD5")
-    def bucket(id: Long): Long = java.lang.Long.parseLong(
-      md.digest(id.toString.getBytes("UTF-8")).map("%02x".format(_))
-        .mkString.take(4), 16) % 100L
+    def bucket(id: Long): Long = md5Prefix(id.toString, 4) % 100L
     // e161: split-conformal
     val ds = docs().map(d0 =>
       (d0._1, d0._3, toks(d0._2).length.toLong, bucket(d0._1)))
@@ -473,7 +423,7 @@ class Surface26Spec extends SparkSpec {
     val test = ds.filter(d0 => split(d0._4) == "test")
     val covered = test.count(d0 =>
       math.abs(d0._3.toDouble - m(d0._2)) <= qhat).toLong
-    val row = SparkEntry.queries("e161_conformal")(spark, dir).head()
+    val row = query("e161_conformal").head()
     assert(row.getAs[Long]("n_cal") == cal.length)
     assert(row.getAs[Long]("k_rank") == k)
     assert(math.abs(row.getAs[Double]("qhat") - qhat) < 1e-7)
@@ -492,7 +442,7 @@ class Surface26Spec extends SparkSpec {
     }.toLong
     val uC = ev.filter(_._1 % 2 == 0).map(_._1).distinct.length.toLong
     val uT = ev.filter(_._1 % 2 == 1).map(_._1).distinct.length.toLong
-    val row2 = SparkEntry.queries("e162_did")(spark, dir).head()
+    val row2 = query("e162_did").head()
     assert(row2.getAs[Long]("u_c") == uC)
     assert(row2.getAs[Long]("u_t") == uT)
     assert(row2.getAs[Long]("c_c1") == cell(0, 1))
@@ -503,16 +453,14 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e151: binary recall matches a driver-side Hamming recount") {
-    val row = SparkEntry.queries("e151_binary_recall")(spark, dir).head()
-    val emb = graft.queries.Tables.t(spark, dir, "embeddings")
-      .select("vec_id", "embedding").collect()
-      .map(r => r.getLong(0) -> r.getSeq[Float](1).toArray)
+    val row = query("e151_binary_recall").head()
+    val emb = embeddings()
     val q = emb.find(_._1 == 0L).get._2
     val corpus = emb.filter(_._1 != 0L)
     val approx = corpus.map { case (id, x) =>
       id -> x.zip(q).count { case (a, b) => (a >= 0) != (b >= 0) }.toLong
     }.sortBy { case (id, h) => (h, id) }.take(10)
-    val exact = SparkEntry.queries("e2_topk")(spark, dir)
+    val exact = query("e2_topk")
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val hits = approx.count(p => exact(p._1)).toLong
     assert(row.getAs[Long]("n_hit") == hits)
@@ -524,7 +472,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e149/e150: graph statistics match driver-side edge recounts") {
-    val pairs = SparkEntry.queries("e1_minhash_pairs")(spark, dir)
+    val pairs = query("e1_minhash_pairs")
       .select("id_a", "id_b").collect()
       .map(r => (r.getLong(0), r.getLong(1)))
     val src = docs().map(d => d._1 -> d._4).toMap
@@ -536,7 +484,7 @@ class Surface26Spec extends SparkSpec {
       .groupBy(p => src(p._1)).view.mapValues(_.length.toLong)
     val qNum = dc.map { case (c, d0) =>
       4L * m * mc.getOrElse(c, 0L) - d0 * d0 }.sum
-    val row = SparkEntry.queries("e149_modularity")(spark, dir).head()
+    val row = query("e149_modularity").head()
     assert(row.getAs[Long]("n_edges") == m)
     assert(row.getAs[Long]("n_within") == mc.values.sum)
     assert(row.getAs[Long]("q_num") == qNum)
@@ -552,7 +500,7 @@ class Surface26Spec extends SparkSpec {
         (a + dx, b + dx * dx, c + dx * dy)
     }
     val n = or2.length.toLong
-    val row2 = SparkEntry.queries("e150_assortativity")(spark, dir).head()
+    val row2 = query("e150_assortativity").head()
     assert(row2.getAs[Long]("n_orientations") == n)
     assert(row2.getAs[Long]("sx") == sx)
     assert(row2.getAs[Long]("sxx") == sxx)
@@ -564,16 +512,13 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e147: bootstrap SE matches a driver-side Poisson recount") {
-    val row = SparkEntry.queries("e147_poisson_bootstrap")(spark, dir)
+    val row = query("e147_poisson_bootstrap")
       .head()
     val cdf = Array(0.36787944117144233, 0.7357588823428847,
       0.9196986029286058, 0.9810118431238463, 0.9963401531726563,
       0.9994058151824183, 0.999916758850712)
-    val md = java.security.MessageDigest.getInstance("MD5")
     def weight(b: Long, id: Long): Long = {
-      val hex = md.digest(s"$b#$id".getBytes("UTF-8"))
-        .map("%02x".format(_)).mkString.take(13)
-      val u = java.lang.Long.parseLong(hex, 16).toDouble / 4503599627370496.0
+      val u = md5Prefix(s"$b#$id", 13).toDouble / 4503599627370496.0
       val k = cdf.indexWhere(u < _)
       if (k < 0) 7L else k.toLong
     }
@@ -599,7 +544,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e148: PC1 matches a driver-side power-iteration recount") {
-    val out = SparkEntry.queries("e148_power_iteration")(spark, dir)
+    val out = query("e148_power_iteration")
       .collect().sortBy(_.getAs[Long]("pos"))
     val emb = graft.queries.Tables.t(spark, dir, "embeddings")
       .where(col("vec_id") =!= 0).select("embedding").collect()
@@ -649,7 +594,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e145: HITS scores match a driver-side two-iteration recount") {
-    val out = SparkEntry.queries("e145_hits")(spark, dir).collect()
+    val out = query("e145_hits").collect()
     val kRe = """"k"\s*:\s*(\d+)""".r
     val edges = graft.queries.Tables.events(spark, dir)
       .where(col("event_type") === "click")
@@ -678,7 +623,7 @@ class Surface26Spec extends SparkSpec {
   }
 
   test("e163: guardrail panel matches a driver-side per-user recount") {
-    val row = SparkEntry.queries("e163_ab_guardrails")(spark, dir).head()
+    val row = query("e163_ab_guardrails").head()
     val perUser = graft.queries.Tables.events(spark, dir)
       .select("user_id", "event_type").collect()
       .groupBy(_.getLong(0)).toSeq.map { case (u, rs) =>

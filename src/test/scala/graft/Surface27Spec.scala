@@ -1,36 +1,24 @@
 package graft
 
+import Recount._
+
 /** Invariants for the round-17 wave: each judged
-  * statistic recounted driver-side from first principles at sf0.001,
-  * plus the c43 streaming twin's batch-equality gate.
+  * statistic recounted driver-side from first principles at sf0.001.
   */
 class Surface27Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
   private def md5Hash(id: Long): Long =
     java.lang.Long.parseLong(
       java.security.MessageDigest.getInstance("MD5")
         .digest(id.toString.getBytes("UTF-8"))
         .take(3).map("%02x".format(_)).mkString, 16)
 
-  private def toks(text: String): Array[String] =
-    text.toLowerCase.split("[^a-z0-9]+").filter(_.nonEmpty)
-
-  test("c43 streaming twin equals the e163 batch guardrail panel") {
-    val batch = SparkEntry.queries("e163_ab_guardrails")(spark, dir)
-      .collect().toSeq
-    val stream = SparkEntry.queries("c43_stream_guardrails")(spark, dir)
-      .collect().toSeq
-    assert(stream == batch)
-  }
-
   test("e165: nested-sample growth panel matches a driver recount") {
-    val row = SparkEntry.queries("e165_heaps_growth")(spark, dir).head()
+    val row = query("e165_heaps_growth").head()
     val docs = graft.queries.Tables.t(spark, dir, "documents")
       .select("doc_id", "text").collect()
       .map(r => (r.getLong(0), r.getString(1)))
     def lvl(p: Long => Boolean) = {
-      val sel = docs.filter(d => p(md5Hash(d._1)))
+      val sel = docs.filter(d => p(md5Prefix(d._1.toString, 6)))
       val ts = sel.flatMap(d => toks(d._2))
       (sel.length.toLong, ts.length.toLong, ts.distinct.length.toLong)
     }
@@ -51,7 +39,7 @@ class Surface27Spec extends SparkSpec {
   }
 
   test("e166: exact quantiles match a driver sort; bounds hold") {
-    val out = SparkEntry.queries("e166_quantile_audit")(spark, dir)
+    val out = query("e166_quantile_audit")
       .collect()
     val vals = graft.queries.Tables.t(spark, dir, "lineitem")
       .select("l_returnflag", "l_extendedprice").collect()
@@ -72,16 +60,11 @@ class Surface27Spec extends SparkSpec {
   }
 
   test("e168: count-min estimates match an exact driver-built sketch") {
-    val out = SparkEntry.queries("e168_countmin")(spark, dir).collect()
+    val out = query("e168_countmin").collect()
     val counts = graft.queries.Tables.t(spark, dir, "documents")
       .select("text").collect().flatMap(r => toks(r.getString(0)))
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
-    def bucket(j: Int, tok: String): Long = {
-      val hx = java.security.MessageDigest.getInstance("MD5")
-        .digest(s"cm$j|$tok".getBytes("UTF-8"))
-        .take(4).map("%02x".format(_)).mkString
-      java.lang.Long.parseLong(hx, 16) % 64L
-    }
+    def bucket(j: Int, tok: String): Long = md5Prefix(s"cm$j|$tok", 8) % 64L
     val cells = scala.collection.mutable.Map[(Int, Long), Long]()
       .withDefaultValue(0L)
     counts.foreach { case (tok, c) =>
@@ -100,16 +83,8 @@ class Surface27Spec extends SparkSpec {
     }
   }
 
-  test("c44 shard-merged sketch equals the e168 batch sketch") {
-    val batch = SparkEntry.queries("e168_countmin")(spark, dir)
-      .collect().map(_.toSeq).toSet
-    val merged = SparkEntry.queries("c44_stream_countmin")(spark, dir)
-      .collect().map(_.toSeq).toSet
-    assert(merged == batch)
-  }
-
   test("e169: skyline matches a brute-force dominance recount") {
-    val out = SparkEntry.queries("e169_skyline")(spark, dir)
+    val out = query("e169_skyline")
       .collect().map(r => (r.getAs[Long]("n_chars"),
         r.getAs[Long]("best_dt"), r.getAs[Long]("n_docs")))
     val pd = graft.queries.Tables.t(spark, dir, "documents")
@@ -132,7 +107,7 @@ class Surface27Spec extends SparkSpec {
   }
 
   test("e170: CUPED panel matches a driver-side moment recount") {
-    val row = SparkEntry.queries("e170_cuped")(spark, dir).head()
+    val row = query("e170_cuped").head()
     val evs = graft.queries.Tables.events(spark, dir)
       .selectExpr("user_id", "event_type", "unix_micros(ts) AS tm")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getLong(2)))
@@ -196,7 +171,7 @@ class Surface27Spec extends SparkSpec {
       .groupBy(identity).view.mapValues(_.length.toLong).toMap
 
   test("e171: MASE components match a driver recount") {
-    val row = SparkEntry.queries("e171_mase")(spark, dir).head()
+    val row = query("e171_mase").head()
     val daily = dailyViews()
     val terms = daily.keys.toSeq.flatMap { d =>
       for (y1 <- daily.get(d.minusDays(1)); y7 <- daily.get(d.minusDays(7)))
@@ -214,7 +189,7 @@ class Surface27Spec extends SparkSpec {
   }
 
   test("e172: changepoint split matches an exhaustive driver scan") {
-    val row = SparkEntry.queries("e172_changepoint")(spark, dir).head()
+    val row = query("e172_changepoint").head()
     val daily = dailyViews().toSeq.sortBy(_._1)
     val n = daily.size.toLong
     val s = daily.map(_._2).sum
@@ -240,7 +215,7 @@ class Surface27Spec extends SparkSpec {
   }
 
   test("e173: sketch deltas bracket the true deltas per CM overcounts") {
-    val out = SparkEntry.queries("e173_cm_delta")(spark, dir).collect()
+    val out = query("e173_cm_delta").collect()
     assert(out.length == 20)
     out.foreach { r =>
       val (ta, tb) = (r.getAs[Long]("true_a"), r.getAs[Long]("true_b"))
@@ -260,7 +235,7 @@ class Surface27Spec extends SparkSpec {
   }
 
   test("e167: int8 quantization census matches a driver recount") {
-    val row = SparkEntry.queries("e167_int8_quant")(spark, dir).head()
+    val row = query("e167_int8_quant").head()
     val vecs = graft.queries.Tables.t(spark, dir, "embeddings")
       .select("embedding").collect()
       .map(_.getSeq[Float](0))

@@ -1,27 +1,17 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Recount._
 
-/** Round-18 wave gates: the c45 streaming twin's batch-equality check
-  * and a first-principles census of e174's output shape (the
-  * brute-force SemDeDup agreement itself lives in OperatorsSpec on a
-  * controlled twin fixture).
+/** Round-18 wave gates: a first-principles census of e174's output
+  * shape (the brute-force SemDeDup agreement itself lives in
+  * OperatorsSpec on a controlled twin fixture).
   */
 class Surface28Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
-  test("c45 streaming twin equals the e170 batch CUPED panel") {
-    val batch = SparkEntry.queries("e170_cuped")(spark, dir)
-      .collect().toSeq
-    val stream = SparkEntry.queries("c45_stream_cuped")(spark, dir)
-      .collect().toSeq
-    assert(stream == batch)
-  }
-
   test("e174: one row per vector, losers only from multi-member cells, " +
     "survivors nonempty per cell") {
     val corpus = graft.queries.Tables.t(spark, dir, "embeddings")
-    val out = SparkEntry.queries("e174_semdedup")(spark, dir)
+    val out = query("e174_semdedup")
       .select("vec_id", "cell", "keep")
       .collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getBoolean(2)))
@@ -43,7 +33,7 @@ class Surface28Spec extends SparkSpec {
 
   test("e175: BH panel matches a driver-side recount of moments, z, " +
     "ranks and the step-up rejection set") {
-    val rows = SparkEntry.queries("e175_fdr")(spark, dir).collect()
+    val rows = query("e175_fdr").collect()
       .map(r => r.getString(0) -> r).toMap
     val types = Seq("click", "error", "purchase", "signup", "view")
     assert(rows.keySet === types.toSet)
@@ -92,17 +82,9 @@ class Surface28Spec extends SparkSpec {
       s"degenerate fixture: k* = $kStar rejects every metric")
   }
 
-  test("c46 streaming admission equals the e176 batch decision set") {
-    val batch = SparkEntry.queries("e176_semdedup_delta")(spark, dir)
-      .collect().map(_.toSeq).toSet
-    val stream = SparkEntry.queries("c46_stream_admission")(spark, dir)
-      .collect().map(_.toSeq).toSet
-    assert(stream === batch)
-  }
-
   test("e176: every delta doc decided once; admitted iff zero matches; " +
     "corpus docs never emitted") {
-    val out = SparkEntry.queries("e176_semdedup_delta")(spark, dir)
+    val out = query("e176_semdedup_delta")
       .collect().map(r =>
         (r.getLong(0), r.getLong(1), r.getLong(2), r.getBoolean(3)))
     val deltaIds = graft.queries.Tables.t(spark, dir, "embeddings")

@@ -1,19 +1,18 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import Recount._
 
 /** Driver-side first-principles recounts for the round-19 wave:
   * the cell-partitioned IVF probe, SemDeDup at
   * the production k=16 regime, and incremental connected components.
   */
 class Surface29Spec extends SparkSpec {
-  private val dir = "/root/testdata/sf0.001"
-
   test("e178: the pruned-layout probe returns exactly the unpruned " +
     "nprobe=2 result (layout changes cost, never answers)") {
-    val pruned = SparkEntry.queries("e178_ivf_pruned_probe")(spark, dir)
+    val pruned = query("e178_ivf_pruned_probe")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val unpruned = SparkEntry.queries("e33_ivf_probe2")(spark, dir)
+    val unpruned = query("e33_ivf_probe2")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(pruned == unpruned,
       s"pruned $pruned != unpruned $unpruned")
@@ -21,7 +20,7 @@ class Surface29Spec extends SparkSpec {
 
   test("e179: k=16 cell assignment, cohesion score, and keep/prune " +
     "decisions match a driver-side brute-force recount") {
-    val out = SparkEntry.queries("e179_semdedup_k16")(spark, dir)
+    val out = query("e179_semdedup_k16")
       .collect()
       .map(r => r.getLong(0) ->
         ((r.getLong(1), r.getDouble(2), r.getBoolean(3)))).toMap
@@ -29,7 +28,8 @@ class Surface29Spec extends SparkSpec {
       .select("vec_id", "embedding").collect()
       .map(r => r.getLong(0) -> r.getSeq[Float](1).toIndexedSeq).toMap
     val cents = graft.operators.Similarity.syntheticCentroids(16, 64)
-    // left-to-right double folds — the engine's (and oracle's) order
+    // left-to-right double folds — the engine's (and oracle's) order.
+    // `.sum` reduces from the first product, not from Recount.dot's 0.0
     def dot(a: Seq[Float], b: Seq[Float]): Double =
       a.zip(b).map { case (x, y) => x.toDouble * y.toDouble }.sum
     def cos(a: Seq[Float], b: Seq[Float]): Double =
@@ -66,9 +66,9 @@ class Surface29Spec extends SparkSpec {
 
   test("e180: the delta path reproduces e15's from-scratch clustering " +
     "of the full candidate graph, row for row") {
-    val delta = SparkEntry.queries("e180_components_delta")(spark, dir)
+    val delta = query("e180_components_delta")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val scratch = SparkEntry.queries("e15_components")(spark, dir)
+    val scratch = query("e15_components")
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(delta == scratch,
       s"delta-only ${delta -- scratch}; scratch-only ${scratch -- delta}")
@@ -95,87 +95,12 @@ class Surface29Spec extends SparkSpec {
     assert(twice == out, s"re-apply changed labels: $twice")
   }
 
-  test("c48: the post-ingest pruned probe over the appended layout " +
-    "equals e178's all-at-once batch index — stream equals batch") {
-    val stream = SparkEntry.queries("c48_stream_index_append")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val batch = SparkEntry.queries("e178_ivf_pruned_probe")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    assert(stream == batch, s"stream $stream != batch $batch")
-  }
-
   test("e181: the probe over the compacted index equals e178's " +
     "over the freshly-built one — maintenance never changes answers") {
-    val compacted = SparkEntry.queries("e181_index_compact")(spark, dir)
+    val compacted = query("e181_index_compact")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
-    val fresh = SparkEntry.queries("e178_ivf_pruned_probe")(spark, dir)
+    val fresh = query("e178_ivf_pruned_probe")
       .collect().map(r => (r.getLong(0), r.getDouble(1))).toSeq
     assert(compacted == fresh, s"compacted $compacted != fresh $fresh")
-  }
-
-  test("c49: the checkpoint's state store contents equal the batch " +
-    "aggregate — the engine's internals, not just its output") {
-    val state = SparkEntry.queries("c49_state_audit")(spark, dir)
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .toSet
-    val batch = graft.queries.Tables.events(spark, dir)
-      .groupBy("event_type")
-      .agg(count(lit(1)).as("cnt"),
-        sum(floor(col("value") * 1000).cast("long")).as("value_m"))
-      .collect().map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
-      .toSet
-    assert(state == batch, s"state $state != batch $batch")
-  }
-
-  test("c50: the TWS ValueState contents equal the batch arg_max — " +
-    "custom state judged like engine buffers") {
-    val state = SparkEntry.queries("c50_tws_state_audit")(spark, dir)
-      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-      .toSet
-    val batch = graft.queries.Tables.events(spark, dir)
-      .select(concat(col("event_type"), lit("-"),
-          (col("user_id") % 64).cast("string")).as("key"),
-        col("event_id").as("seq"), col("value"))
-      .groupBy("key")
-      .agg(max_by(col("value"), col("seq")).as("last_value"),
-        count(lit(1)).as("n_seen"))
-      .collect().map(r => (r.getString(0), r.getDouble(1), r.getLong(2)))
-      .toSet
-    assert(state == batch, s"state size ${state.size} != batch recount")
-  }
-
-  test("e182: the spliced table equals a first-principles full " +
-    "aggregate, and the late slice was genuinely non-empty") {
-    val out = SparkEntry.queries("e182_backfill_overwrite")(spark, dir)
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).toSet
-    val ev = graft.queries.Tables.events(spark, dir)
-      .select(col("event_id"),
-        to_date(col("ts")).cast("string").as("day"), col("event_type"),
-        floor(col("value") * 1000).cast("long").as("vm"))
-    val full = ev.groupBy("day", "event_type")
-      .agg(count(lit(1)).as("cnt"), sum(col("vm")).as("value_m"))
-      .collect()
-      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-        r.getLong(3))).toSet
-    assert(out == full, "spliced table diverged from the full aggregate")
-    // the backfill must have had something to splice: the fixture's
-    // late slice (event_id % 5 == 0 on the last two days) is non-empty
-    val days = ev.select("day").distinct().orderBy(col("day").desc)
-      .limit(2).collect().map(_.getString(0)).toSeq
-    val late = ev.where(col("day").isin(days: _*) &&
-      col("event_id") % 5 === 0).count()
-    assert(late > 0, "late slice empty — the splice was a no-op")
-  }
-
-  test("c47: the streamed two-chunk merge lands on exactly e180's " +
-    "(= e15's) table — stream equals batch") {
-    val stream = SparkEntry.queries("c47_stream_components")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val batch = SparkEntry.queries("e180_components_delta")(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    assert(stream == batch,
-      s"stream-only ${stream -- batch}; batch-only ${batch -- stream}")
   }
 }

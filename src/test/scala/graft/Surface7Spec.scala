@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import Recount._
 
 /** Properties of the round-7 tranche that the DuckDB oracle can't
   * state directly: partition-invariance of the two-stage weighted
@@ -11,17 +12,16 @@ import org.apache.spark.sql.functions._
 class Surface7Spec extends SparkSpec {
   import spark.implicits._
 
-  private val sf = "/root/testdata/sf0.001"
 
   test("weighted sample two-stage prefilter equals the naive single window") {
-    val got = SparkEntry.queries("e35_weighted_sample")(spark, sf)
+    val got = query("e35_weighted_sample")
       .select("lang", "doc_id", "rk").as[(String, Long, Long)]
       .collect().toSet
     // naive form: one corpus-wide window per language
     val u = conv(substring(md5(col("doc_id").cast("string")), 1, 6),
       16, 10).cast("long")
     val w = Window.partitionBy("lang").orderBy(col("w_key"), col("doc_id"))
-    val want = spark.read.parquet(s"$sf/documents.parquet")
+    val want = spark.read.parquet(s"$dir/documents.parquet")
       .select(col("lang"), col("doc_id"),
         (u.cast("double") / col("n_chars").cast("double")).as("w_key"))
       .withColumn("rk", row_number().over(w).cast("long"))
@@ -32,7 +32,7 @@ class Surface7Spec extends SparkSpec {
   }
 
   test("funnel stages are strictly ordered and depth counts them") {
-    val rows = SparkEntry.queries("q76_funnel")(spark, sf)
+    val rows = query("q76_funnel")
       .select(col("t_view").cast("long"), col("t_click").cast("long"),
         col("t_purchase").cast("long"), col("funnel_depth"))
       .as[(Long, Option[Long], Option[Long], Long)].collect()
@@ -45,29 +45,29 @@ class Surface7Spec extends SparkSpec {
   }
 
   test("retention: week-0 cell equals cohort size; offsets nonnegative") {
-    val cells = SparkEntry.queries("q77_retention")(spark, sf)
+    val cells = query("q77_retention")
       .as[(Long, Long, Long)].collect()
     assert(cells.forall(_._2 >= 0))
     // every user is active in their cohort week, so offset-0 rows must
     // carry the full cohort: sum over offset-0 = total distinct users
     val week0 = cells.filter(_._2 == 0L).map(_._3).sum
-    val users = queries.Tables.events(spark, sf)
+    val users = queries.Tables.events(spark, dir)
       .select("user_id").distinct().count()
     assert(week0 === users)
   }
 
   test("cluster-size profile conserves the component node mass") {
-    val sizes = SparkEntry.queries("e38_cluster_sizes")(spark, sf)
+    val sizes = query("e38_cluster_sizes")
       .as[(Long, Long)].collect()
     val mass = sizes.map { case (sz, n) => sz * n }.sum
-    val nodes = SparkEntry.queries("e15_components")(spark, sf).count()
+    val nodes = query("e15_components").count()
     assert(mass === nodes)
     // pair-graph components are never singletons
     assert(sizes.forall(_._1 >= 2))
   }
 
   test("minhash estimate audit: n_match bounded, error consistent") {
-    val rows = SparkEntry.queries("e39_minhash_est")(spark, sf)
+    val rows = query("e39_minhash_est")
       .select("n_match", "est_jaccard", "true_jaccard", "abs_err")
       .as[(Long, Double, Double, Double)].collect()
     assert(rows.nonEmpty)
@@ -80,7 +80,7 @@ class Surface7Spec extends SparkSpec {
   }
 
   test("curriculum buckets are contiguous deciles of the length order") {
-    val rows = SparkEntry.queries("e36_curriculum")(spark, sf)
+    val rows = query("e36_curriculum")
       .orderBy("n_chars", "doc_id").as[(Long, Long, Long)].collect()
     val buckets = rows.map(_._3)
     assert(buckets.min === 1L && buckets.max === 10L)
