@@ -193,7 +193,7 @@ object Bench {
     // per-executor code paths with one canary query.)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "documents", "embeddings").foreach { tbl =>
-      untimed(s"warmup:$tbl")(spark.read.parquet(s"$sfDir/$tbl.parquet")
+      untimed(s"warmup:$tbl")(graft.queries.Tables.t(spark, sfDir, tbl)
         .write.format("noop").mode("overwrite").save())
     }
     untimed("warmup:events")(graft.queries.Tables.events(spark, sfDir)

@@ -1301,7 +1301,7 @@ object DedupQueries extends Family {
     // contract (same oracle text).
     Judged("e180_components_delta", (s, dir) => {
       val pairs = candidatePairs(s, dir)
-      val baseLabels = s.read.parquet(
+      val baseLabels = Tables.parquet(s,
         baseComponentLabels(s, dir).toString)
       val deltaEdges = pairs
         .where(col("id_a") % 10 === 0 || col("id_b") % 10 === 0)

@@ -1242,7 +1242,7 @@ object RelationalQueries extends Family {
       // time is the pruned scan (~0.3 s), not an events-table rewrite.
       // r7 showed the in-query rewrite amplifies host contention 25×
       // (1.2 s clean → 31.8 s contended).
-      val pruned = s.read.parquet(eventsByType(s, dir))
+      val pruned = Tables.parquet(s, eventsByType(s, dir))
         .where(col("event_type") === "click")
         .select(col("event_id"), col("ts"), col("user_id"), col("value"),
           col("event_type").cast("string").as("event_type"))
@@ -1712,7 +1712,7 @@ object RelationalQueries extends Family {
           ("purchase", "conversion"), ("signup", "conversion"),
           ("error", "ops")).toDF("event_type", "category").coalesce(1)
       }
-      val joined = s.read.parquet(eventsByType(s, dir))
+      val joined = Tables.parquet(s, eventsByType(s, dir))
         .join(dim.where(col("category") === "engagement"), "event_type")
         .groupBy(col("event_type").cast("string").as("event_type"))
         .agg(count(lit(1)).as("n"),

@@ -134,7 +134,7 @@ object Stage {
     val path = durable(name, dir, derivation) { p =>
       built.write.mode("overwrite").parquet(p.toString)
     }
-    s.read.parquet(path.toString)
+    Tables.parquet(s, path.toString)
   }
 
   /** Durable LONG sizing scalar (a feed's max doc id, a ts bound): the
@@ -307,7 +307,7 @@ object Stage {
     * a closure, a value without a content hashCode) throws: the stage
     * must then pass its lazy inputs as the derivation.
     */
-  private[queries] def planDigest(plan: LogicalPlan): String = {
+  private[graft] def planDigest(plan: LogicalPlan): String = {
     plan.foreachWithSubqueries {
       case n @ (_: LogicalRDD | _: ExternalRDD[_] | _: ObjectProducer |
                 _: ObjectConsumer) => identityHashed(n.nodeName)

@@ -1,7 +1,6 @@
 package graft.schemas
 
 import org.apache.spark.sql.types._
-import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Declared schema catalog (SURVEY.md §2.2 K3).
   *
@@ -13,8 +12,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * exercised by [[decimalAtRest]].
   *
   * At 100 TB these schemas are the contract that lets every scan prune
-  * columns at the parquet reader — nothing in the engine infers schemas
-  * from data.
+  * columns at the parquet reader. A table read from parquet gets its
+  * schema from the data: `graft.queries.Tables.parquet` infers it once
+  * per JVM per file listing and passes it explicitly on every later
+  * read.
   */
 object Catalog {
 
@@ -103,8 +104,4 @@ object Catalog {
         (t, f.name, f.dataType.simpleString, i)
       }
     }
-
-  /** Parquet reader for the driver testdata tables (TESTDATA.md). */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
 }

@@ -311,9 +311,11 @@ class OperatorsSpec extends SparkSpec {
       .select(col("id"), Dedup.simhash(TextAnalysis.tokens(col("text"))).as("h"))
     val hs = df.as[(Long, Long)].collect().toMap
     assert(hs(1L) === hs(2L))
-    val dist = df.select(Dedup.hammingDistance(lit(hs(1L)), lit(hs(3L))))
-      .as[Int].head()
-    assert(dist > 0)
+    def dist(a: Long, b: Long): Int =
+      df.select(Dedup.hammingDistance(lit(a), lit(b))).as[Int].head()
+    assert(dist(hs(1L), hs(1L)) == 0)
+    assert(dist(hs(1L), hs(2L)) == 0)
+    assert(dist(hs(1L), hs(3L)) > 0)
   }
 
   test("native simhash_fold is bit-identical to the HOF fold form (E1)") {

@@ -100,8 +100,8 @@ class Surface21Spec extends SparkSpec {
       assert(r.getLong(1) <= r.getLong(2) && r.getLong(4) <= r.getLong(5))
       assert(r.getDouble(3) > 0 && r.getDouble(3) <= 1)
       assert(r.getDouble(6) > 0 && r.getDouble(6) <= 1)
-      assert(r.getDouble(6) >= r.getDouble(3) - 1e-9 ||
-        r.getDouble(6) <= 1.0) // distinct-2 typically >= distinct-1
+      assert(r.getDouble(6) >= r.getDouble(3) - 1e-9,
+        s"distinct-2 below distinct-1 for ${r.getString(0)}")
     }
   }
 
