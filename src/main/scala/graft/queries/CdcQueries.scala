@@ -181,14 +181,17 @@ object CdcQueries extends Family {
     // the oracle is a plain UNION ALL with a NULL literal.
     Judged("c15_schema_evolution", (s, dir) => {
       val c = t(s, dir, "customer")
-      // durableChunkFeed appends both generations into ONE dir (the
-      // CDC-sink table under schema drift); mtime pinning is
-      // irrelevant here (batch read) but harmless
-      val tbl = Stage.durableChunkFeed("feed-c15", dir)(Seq(
+      // both generations are appended into ONE dir (the CDC-sink table
+      // under schema drift); a batch table, not a stream feed
+      val gens = Seq(
         c.where(col("c_custkey") % 2 === 0)
           .select("c_custkey", "c_name", "c_acctbal"),
         c.where(col("c_custkey") % 2 === 1)
-          .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")))
+          .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment"))
+      val tbl = Stage.durable("feed-c15", dir, gens) { stage =>
+        gens.foreach(_.coalesce(1).write.mode("append")
+          .parquet(stage.resolve("feed").toString))
+      }.resolve("feed").toString
       s.read.option("mergeSchema", "true").parquet(tbl)
         .select("c_custkey", "c_name", "c_acctbal", "c_mktsegment")
     },

@@ -251,16 +251,22 @@ object DedupQueries extends Family {
         .groupBy("doc_id", "w").agg(count(lit(1)).as("cnt"))
     }
 
+  /** The band keys of signatures `sig`, one row per (doc_id, band):
+    * the LSH self-join's input and c31's and c35's stream input.
+    */
+  private[queries] def docBands(sig: DataFrame): DataFrame =
+    sig.select(col("doc_id") +:
+      Dedup.bandKeys((0 until minhashK).map(j => col(s"sig_$j")), bands): _*)
+      .select(col("doc_id"), explode(array(
+        (0 until bands).map(b => col(s"band_$b")): _*)).as("band"))
+
   private[queries] def candidatePairs(s: SparkSession, dir: String): DataFrame = {
     val sig = stagedSignatures(s, dir) // hoisted (see Stage scaladoc)
     Stage.durableFrame(s, "lsh-pairs", dir) {
       // band + self-join over the STAGED signatures: both join sides
       // re-scan the tiny sig parquet (no persist needed), the corpus
       // text is never touched again
-      val banded = sig.select(col("doc_id") +:
-        Dedup.bandKeys((0 until minhashK).map(j => col(s"sig_$j")), bands): _*)
-      val long = banded.select(col("doc_id"), explode(array(
-        (0 until bands).map(b => col(s"band_$b")): _*)).as("band"))
+      val long = docBands(sig)
       long.as("a")
         .join(long.as("b"), col("a.band") === col("b.band") &&
           col("a.doc_id") < col("b.doc_id"))

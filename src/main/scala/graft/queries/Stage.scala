@@ -2,8 +2,6 @@ package graft.queries
 
 import java.nio.file.{FileSystemException, Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 
-import scala.collection.mutable
-
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, CommutativeExpression, EqualNullSafe, EqualTo, ExprId, Expression, In, MultiCommutativeOp, NamedExpression, NamedLambdaVariable, UserDefinedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ObjectConsumer, ObjectProducer, TransformWithState}
@@ -12,6 +10,7 @@ import org.apache.spark.sql.execution.{ExternalRDD, LogicalRDD}
 import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.sources.DataSourceRegister
 import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
+import org.apache.spark.sql.types.{StructField, StructType}
 
 /** Staged frames, in two tiers, and the bounded run of a judged stream.
   *
@@ -28,6 +27,12 @@ import org.apache.spark.sql.streaming.{DataStreamWriter, Trigger}
   * checkpoint. A durable stage is served only to the derivation that
   * built it (see [[durable]] for the key and SCALE.md for the rule and
   * the inventory).
+  *
+  * A staged stream feed's format is decided here and nowhere else: a
+  * [[Feed]] carries its files' schema (taken from the chunk plans that
+  * wrote them, every field nullable), one chunk per file, a pinned
+  * mtime per file that fixes the arrival order, checked on every hit,
+  * and one reader, [[Feed.stream]], that takes one file per trigger.
   *
   * [[drain]] runs every judged stream over such feeds, one policy for
   * trigger, state partitions and state-store provider.
@@ -92,7 +97,8 @@ object Stage {
     * Fails closed: a fingerprint or digest that cannot be computed
     * throws (naming the dir or the plan node), a `write` that throws
     * publishes nothing, and a directory without the marker (a killed
-    * writer) is replaced, never read.
+    * writer) or that fails `intact` (a feed whose pinned mtimes were
+    * lost) is replaced, never read.
     *
     * `derivation` must be lazy: it is analyzed on every call, hit or
     * miss, and never executed here. A stage whose result is computed
@@ -100,20 +106,20 @@ object Stage {
     * opaque function (`mapPartitions`, a Scala UDF) passes its lazy
     * INPUTS as `derivation`; the digest rejects such plans outright.
     */
-  def durable(name: String, dir: String, derivation: Seq[DataFrame])
+  def durable(name: String, dir: String, derivation: Seq[DataFrame],
+              intact: Path => Boolean = _ => true)
              (write: Path => Unit): Path = {
     val path = fixtureRoot.resolve(fixtureKey(name, dir, derivation))
-    if (!Files.exists(path.resolve(Marker))) {
+    def served(p: Path) = Files.exists(p.resolve(Marker)) && intact(p)
+    if (!served(path)) {
       val tmp = aside(path, "tmp")
       try {
         write(tmp)
         Files.createDirectories(tmp)
         Files.write(tmp.resolve(Marker), Array.emptyByteArray)
-        discardUnmarked(path)
+        discardUnserved(path, served)
         try Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE)
-        catch {
-          case _: FileSystemException if Files.exists(path.resolve(Marker)) => ()
-        }
+        catch { case _: FileSystemException if served(path) => () }
       } finally deleteRecursively(tmp)
     }
     path
@@ -164,42 +170,81 @@ object Stage {
     new String(Files.readAllBytes(p.resolve("value")), "UTF-8").trim.toLong
   }
 
-  /** Durable STREAM FEED under `<stage>/feed`: each chunk is written as
-    * one coalesced file with a PINNED ascending mtime, so the file
-    * source's arrival order is part of the staged content and not a
-    * race on write times. Feed construction (a filtered pass and a
-    * single-threaded write per chunk) is paid once per key instead of
-    * on every streaming run. `chunks` is by-name: a hit builds the
-    * (lazy) chunk plans to digest them but never executes them.
-    * Checkpoints and outputs stay per-run in [[tempDir]].
+  /** A staged stream feed: its files under `dir` and the schema they
+    * were written with, every field nullable (the file stream source
+    * forces that anyway).
+    */
+  final case class Feed(dir: String, schema: StructType) {
+    /** THE reader of a staged feed: one file per trigger, so each chunk
+      * is one micro-batch, taken in the pinned mtime order.
+      */
+    def stream(s: SparkSession): DataFrame =
+      s.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(dir)
+  }
+
+  object Feed {
+    /** The feed of `frame`'s files written under `dir`. */
+    def apply(dir: String, frame: DataFrame): Feed =
+      Feed(dir, nullable(frame.schema))
+  }
+
+  /** `schema` with every top-level field nullable and without metadata. */
+  private def nullable(schema: StructType): StructType =
+    StructType(schema.fields.map(f => StructField(f.name, f.dataType)))
+
+  /** Durable STREAM FEED under `<stage>/feed`: chunk `i` is written as
+    * one coalesced file whose mtime is pinned to [[pin]]`(i)`, so the
+    * file source's arrival order is part of the staged content and not
+    * a race on write times. On a hit every data file's mtime must be
+    * one of the feed's pins and every pin must be present; otherwise
+    * (a copy that lost the mtimes) the stage is rebuilt, never served.
+    * Feed construction (a filtered pass and a single-threaded write per
+    * chunk) is paid once per key instead of on every streaming run.
+    * `chunks` is by-name: a hit builds the (lazy) chunk plans to digest
+    * them and to take the feed's schema, but never executes them; the
+    * chunks must agree on field names and types. Checkpoints and
+    * outputs stay per-run in [[tempDir]].
     */
   def durableChunkFeed(name: String, dir: String)
-                      (chunks: => Seq[DataFrame]): String = {
+                      (chunks: => Seq[DataFrame]): Feed = {
     val cs = chunks
-    durable(name, dir, cs) { stage =>
-      val feed = stage.resolve("feed")
-      val stamped = mutable.Set[String]()
-      cs.zipWithIndex.foreach { case (c, idx) =>
-        c.coalesce(1).write.mode("append").parquet(feed.toString)
-        feed.toFile.listFiles().foreach { f =>
-          val n = f.getName
-          if (!n.startsWith("_") && !n.startsWith(".") && stamped.add(n))
-            require(f.setLastModified(1700000000000L + idx * 600000L),
-              s"mtime pin failed for $f — arrival order would race")
+    val schemas = cs.map(c => nullable(c.schema)).distinct
+    require(schemas.size == 1, s"durableChunkFeed($name): the chunks must " +
+      s"share one schema, got ${schemas.map(_.simpleString).mkString(" vs ")}")
+    val pins = cs.indices.map(pin).toSet
+    val stage = durable(name, dir, cs,
+      intact = st => dataFiles(st.resolve("feed")).map(_.lastModified).toSet == pins) {
+      stage =>
+        val feed = stage.resolve("feed")
+        cs.zipWithIndex.foreach { case (c, idx) =>
+          val before = dataFiles(feed).toSet
+          c.coalesce(1).write.mode("append").parquet(feed.toString)
+          (dataFiles(feed).toSet -- before).foreach(f =>
+            require(f.setLastModified(pin(idx)),
+              s"mtime pin failed for $f — arrival order would race"))
         }
-      }
-    }.resolve("feed").toString
+    }
+    Feed(stage.resolve("feed").toString, schemas.head)
   }
+
+  /** The pinned mtime of a feed's chunk `i`. */
+  private[graft] def pin(i: Int): Long = 1700000000000L + i * 600000L
+
+  /** The data files of a feed dir (none if it does not exist). */
+  private def dataFiles(dir: Path): Seq[java.io.File] =
+    Option(dir.toFile.listFiles()).toSeq.flatten.filter { f =>
+      val n = f.getName
+      !n.startsWith("_") && !n.startsWith(".")
+    }
 
   /** A staged [[durableChunkFeed]] landed chunk by chunk into `into`,
     * for a judged restart: `chunks` are the staged files in their
     * pinned arrival order, and `land(i)` copies chunk `i` keeping its
-    * pinned mtime, so the file source sees the staged order.
+    * pinned mtime, so [[stream]] sees the staged order.
     */
-  final class Landing(feed: String, into: String) {
-    val chunks: IndexedSeq[java.io.File] = new java.io.File(feed).listFiles()
-      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
-      .sortBy(_.lastModified).toIndexedSeq
+  final class Landing(feed: Feed, into: String) {
+    val chunks: IndexedSeq[java.io.File] =
+      dataFiles(Paths.get(feed.dir)).sortBy(_.lastModified).toIndexedSeq
     Files.createDirectories(Paths.get(into))
 
     def land(i: Int): Unit = {
@@ -209,6 +254,9 @@ object Stage {
       require(dst.toFile.setLastModified(src.lastModified),
         s"mtime pin failed for $dst — arrival order would race")
     }
+
+    /** The landed chunks, read like the feed itself. */
+    def stream(s: SparkSession): DataFrame = feed.copy(dir = into).stream(s)
   }
 
   private val StatePartitions = "spark.sql.shuffle.partitions"
@@ -384,19 +432,20 @@ object Stage {
   private def aside(path: Path, what: String): Path = path.resolveSibling(
     s"${path.getFileName}.$what-${ProcessHandle.current().pid()}-${System.nanoTime()}")
 
-  /** Clear an unmarked dir at `path` (a killed writer) so the publish
-    * rename can land. Not an in-place delete: a concurrent JVM may
-    * publish between the marker check and the delete, so the dir is
-    * first moved aside atomically, and put back if it turns out to be
-    * marked (or dropped, if the winner has already re-published).
+  /** Clear a dir at `path` that may not be `served` (a killed writer, a
+    * feed that lost its order) so the publish rename can land. Not an
+    * in-place delete: a concurrent JVM may publish between the check
+    * and the delete, so the dir is first moved aside atomically, and
+    * put back if it turns out to be served (or dropped, if the winner
+    * has already re-published).
     */
-  private def discardUnmarked(path: Path): Unit =
-    if (Files.exists(path) && !Files.exists(path.resolve(Marker))) {
+  private def discardUnserved(path: Path, served: Path => Boolean): Unit =
+    if (Files.exists(path) && !served(path)) {
       val trash = aside(path, "trash")
       val moved = try {
         Files.move(path, trash, StandardCopyOption.ATOMIC_MOVE); true
       } catch { case _: NoSuchFileException => false }
-      if (moved && Files.exists(trash.resolve(Marker)))
+      if (moved && served(trash))
         try Files.move(trash, path, StandardCopyOption.ATOMIC_MOVE)
         catch { case _: FileSystemException => () }
       deleteRecursively(trash)

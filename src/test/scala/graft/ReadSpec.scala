@@ -46,8 +46,10 @@ class ReadSpec extends SparkSpec {
   private def memoKeys(path: String) =
     Tables.inferredSchemas.keySet.asScala.filter(_._1 == path).toSet
 
-  test("with the memo warm, building q1_agg and q3_join starts no Spark job") {
-    val build = () => Seq("q1_agg", "q3_join").foreach(Recount.query(_))
+  test("with the memo warm, building q1_agg, q3_join and q84_tpch15 starts " +
+    "no Spark job") {
+    val build = () =>
+      Seq("q1_agg", "q3_join", "q84_tpch15").foreach(Recount.query(_))
     build()
     val jobs = jobsDuring(build())
     assert(jobs == 0, s"$jobs jobs while building warm plans")

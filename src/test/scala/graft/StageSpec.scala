@@ -132,6 +132,79 @@ class StageSpec extends SparkSpec {
     }
   }
 
+  /** The data files of `feed` in arrival (mtime) order, as (name, mtime). */
+  private def feedFiles(feed: Stage.Feed): Seq[(String, Long)] =
+    new java.io.File(feed.dir).listFiles().toSeq
+      .filter(f => !f.getName.startsWith("_") && !f.getName.startsWith("."))
+      .map(f => (f.getName, f.lastModified)).sortBy(_._2)
+
+  /** The dirs of stage `name` over sf dir `dir`, staging copies included. */
+  private def stageDirs(dir: String, name: String): Seq[Path] = {
+    val listing = Files.list(Paths.get("target", "graft-fixtures"))
+    try listing.iterator().asScala.toList.filter { p =>
+      val n = p.getFileName.toString
+      n.startsWith(s"$name-") && n.contains(dir.replaceAll("[^A-Za-z0-9]", "_"))
+    } finally listing.close()
+  }
+
+  test("a feed's schema is its chunks' names and types, every field nullable; " +
+    "its stream takes one chunk per micro-batch") {
+    withSfDir { dir =>
+      val chunks = Seq(col("id") < 2, col("id") >= 2).map(p =>
+        table(dir).where(p).select(col("id"), col("xs"), lit(1L).as("one")))
+      assert(!chunks.head.schema("one").nullable)
+      val feed = Stage.durableChunkFeed("spec-feed", dir)(chunks)
+      assert(feed.schema.map(f => (f.name, f.dataType)) ===
+        chunks.head.schema.map(f => (f.name, f.dataType)))
+      assert(feed.schema.forall(_.nullable))
+      val ckpt = s"${Stage.tempDir("graft-stage-spec-")}/ckpt"
+      Stage.drain(feed.stream(spark), ckpt)(_.format("noop"))
+      val batches = new java.io.File(s"$ckpt/offsets").listFiles()
+        .count(_.getName.forall(_.isDigit))
+      assert(batches === chunks.size)
+    }
+  }
+
+  test("chunks that disagree on a field's name or type fail, naming the " +
+    "stage, and publish no dir") {
+    withSfDir { dir =>
+      val id = table(dir).select("id")
+      Seq(id.select(col("id").as("key")), id.select(col("id").cast("int")))
+        .foreach { other =>
+          val e = intercept[IllegalArgumentException] {
+            Stage.durableChunkFeed("spec-mixed", dir)(Seq(id, other))
+          }
+          assert(e.getMessage.contains("spec-mixed"))
+        }
+      assert(stageDirs(dir, "spec-mixed").isEmpty)
+    }
+  }
+
+  test("a feed whose file mtimes were reset is rebuilt in its pinned order; " +
+    "an intact one is served") {
+    withSfDir { dir =>
+      def feed() = Stage.durableChunkFeed("spec-order", dir)(
+        Seq(3L, 1L, 2L).map(i => table(dir).where(col("id") === i).select("id")))
+      val pinned = (0 until 3).map(Stage.pin)
+      val built = feedFiles(feed())
+      assert(built.map(_._2) === pinned)
+      // an intact feed is served as it is: no file is rewritten
+      assert(feedFiles(feed()) === built)
+      // a copy that kept names but not mtimes (`cp -r` without `-p`)
+      val f = feed()
+      new java.io.File(f.dir).listFiles().foreach(_.setLastModified(
+        System.currentTimeMillis()))
+      val rebuilt = feedFiles(feed())
+      assert(rebuilt.map(_._2) === pinned)
+      assert(rebuilt.map(_._1).toSet.intersect(built.map(_._1).toSet).isEmpty)
+      assert(rebuilt.map { case (n, _) =>
+        spark.read.parquet(s"${f.dir}/$n").as[Long].head() } === Seq(3L, 1L, 2L))
+      assert(feedFiles(feed()) === rebuilt)
+      assert(stageDirs(dir, "spec-order").map(_.getFileName) ===
+        Seq(Paths.get(f.dir).getParent.getFileName))
+    }
+  }
+
   test("a stage key does not depend on the JVM's history") {
     withSfDir { dir =>
       val builds = new java.util.concurrent.atomic.AtomicInteger()
