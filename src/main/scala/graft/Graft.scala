@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 /** graft — a Spark-native analytics engine with the data-processing
   * surface of the reference real-time ETL pipeline plus the operator
@@ -115,34 +115,4 @@ object Graft {
     spark.conf.set("spark.sql.optimizer.excludedRules", merged)
     spark
   }
-
-  /** As-of join convenience forwarding. */
-  def asofJoin(left: DataFrame, right: DataFrame, keys: Seq[String],
-               leftTs: String, rightTs: String,
-               rightVals: Seq[(String, String)], tiebreak: Column): DataFrame =
-    graft.operators.AsofJoin.asofJoin(left, right, keys, leftTs, rightTs,
-      rightVals, tiebreak)
-
-  /** SemDeDup semantic dedup (cluster-then-prune) forwarding — see
-    * [[graft.operators.Dedup.semDedup]].
-    */
-  def semDedup(corpus: DataFrame, id: String, vec: String,
-               centroids: Seq[Seq[Float]], minCosine: Double): DataFrame =
-    graft.operators.Dedup.semDedup(corpus, id, vec, centroids, minCosine)
-
-  /** Incremental (delta-vs-corpus) SemDeDup forwarding — see
-    * [[graft.operators.Dedup.semDedupDelta]].
-    *
-    * ADMISSION ONLY, not a post-ingest dedup: each delta doc is
-    * checked against the standing corpus alone — near-dup pairs
-    * entirely WITHIN the delta are all admitted, and admitted docs do
-    * not join the index for later delta docs in the same call. For a
-    * dedup'd post-ingest corpus, run [[semDedup]] over the delta (or
-    * fold the admitted docs into the corpus) as a second step.
-    */
-  def semDedupDelta(delta: DataFrame, corpus: DataFrame, id: String,
-                    vec: String, centroids: Seq[Seq[Float]],
-                    minCosine: Double): DataFrame =
-    graft.operators.Dedup.semDedupDelta(delta, corpus, id, vec,
-      centroids, minCosine)
 }

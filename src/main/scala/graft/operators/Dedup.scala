@@ -604,6 +604,12 @@ object Dedup {
     * `(id, cell, n_matches, admitted)` with `n_matches` the exact
     * count of corpus near-dups.
     *
+    * Admission only, not a post-ingest dedup: near-dup pairs entirely
+    * within the delta are all admitted, and admitted docs do not join
+    * the index for later delta docs in the same call. For a dedup'd
+    * post-ingest corpus, run [[semDedup]] over the delta as a second
+    * step.
+    *
     * Scale shape (100 TB corpus + daily delta): the corpus is stored
     * partitioned by cell, so the join reads only the delta's cells;
     * per-delta work is one cell's corpus members (O(1) rows when the

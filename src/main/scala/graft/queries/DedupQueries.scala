@@ -30,16 +30,21 @@ object DedupQueries extends Family {
           % ${Dedup.minhashPrime}) AS sig_$j"""
     }.mkString(", ")
 
-  /** LSH band buckets → distinct candidate pairs (k=8, 4 bands of 2) —
-    * the shared tail of every minhash-family oracle.
+  /** MinHash signatures `sig` of `sh` (k=8) and their LSH band keys
+    * `band` (4 md5 bands of 2): the oracle side of [[docBands]], shared
+    * by every minhash-family oracle.
     */
-  private[queries] val bandPairsCte =
+  private[queries] val bandCte =
     s"""sig AS (SELECT doc_id, ${sigExprs(minhashK)} FROM sh GROUP BY doc_id),
         band AS (SELECT doc_id, unnest([
           md5(concat_ws('_', '0', sig_0, sig_1)),
           md5(concat_ws('_', '1', sig_2, sig_3)),
           md5(concat_ws('_', '2', sig_4, sig_5)),
-          md5(concat_ws('_', '3', sig_6, sig_7))]) AS band FROM sig),
+          md5(concat_ws('_', '3', sig_6, sig_7))]) AS band FROM sig)"""
+
+  /** [[bandCte]] plus its distinct candidate pairs `pairs`. */
+  private[queries] val bandPairsCte =
+    s"""$bandCte,
         pairs AS (SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
           FROM band a JOIN band b ON a.band = b.band
             AND a.doc_id < b.doc_id)"""
@@ -75,13 +80,7 @@ object DedupQueries extends Family {
 
   /** e1_minhash_pairs's oracle, shared with the queries that embed it. */
   private[queries] val minhashPairsSql =
-      s"""WITH $shingleCte,
-          sig AS (SELECT doc_id, ${sigExprs(minhashK)} FROM sh GROUP BY doc_id),
-          band AS (SELECT doc_id, unnest([
-            md5(concat_ws('_', '0', sig_0, sig_1)),
-            md5(concat_ws('_', '1', sig_2, sig_3)),
-            md5(concat_ws('_', '2', sig_4, sig_5)),
-            md5(concat_ws('_', '3', sig_6, sig_7))]) AS band FROM sig)
+      s"""WITH $shingleCte, $bandCte
           SELECT DISTINCT a.doc_id AS id_a, b.doc_id AS id_b
           FROM band a JOIN band b ON a.band = b.band AND a.doc_id < b.doc_id"""
 
@@ -525,13 +524,7 @@ object DedupQueries extends Family {
         "doc_id", "sh", minhashK, bands)
     },
       // delta-vs-corpus banding: same sig/band derivation, asymmetric join
-      s"""WITH $shingleCte,
-          sig AS (SELECT doc_id, ${sigExprs(minhashK)} FROM sh GROUP BY doc_id),
-          band AS (SELECT doc_id, unnest([
-            md5(concat_ws('_', '0', sig_0, sig_1)),
-            md5(concat_ws('_', '1', sig_2, sig_3)),
-            md5(concat_ws('_', '2', sig_4, sig_5)),
-            md5(concat_ws('_', '3', sig_6, sig_7))]) AS band FROM sig)
+      s"""WITH $shingleCte, $bandCte
           SELECT DISTINCT a.doc_id AS id_new, b.doc_id AS id_corpus
           FROM band a JOIN band b ON a.band = b.band
           WHERE a.doc_id % 10 = 0 AND b.doc_id % 10 <> 0"""),
@@ -703,7 +696,7 @@ object DedupQueries extends Family {
           col("n_pairs"))
     },
       {
-      def bandCte(nb: Int): String = {
+      def bandsOf(nb: Int): String = {
         val r = minhashK / nb
         val groups = (0 until nb).map { b =>
           val cols = (b * r until (b + 1) * r).map(j => s"sig_$j")
@@ -718,7 +711,7 @@ object DedupQueries extends Family {
       s"""WITH $shingleCte,
           sig AS (SELECT doc_id, ${sigExprs(minhashK)} FROM sh
                   GROUP BY doc_id),
-          ${bandCte(1)}, ${bandCte(2)}, ${bandCte(4)}, ${bandCte(8)}
+          ${bandsOf(1)}, ${bandsOf(2)}, ${bandsOf(4)}, ${bandsOf(8)}
           SELECT CAST(1 AS BIGINT) AS bands, CAST(8 AS BIGINT)
               AS rows_per_band,
             (SELECT count(*) FROM p1) AS n_pairs

@@ -2,6 +2,7 @@ package graft.queries
 
 import java.nio.file.{FileSystemException, Files, NoSuchFileException, Path, Paths, StandardCopyOption}
 
+import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{BinaryComparison, CommutativeExpression, EqualNullSafe, EqualTo, ExprId, Expression, In, MultiCommutativeOp, NamedExpression, NamedLambdaVariable, UserDefinedExpression}
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, ObjectConsumer, ObjectProducer, TransformWithState}
@@ -34,8 +35,10 @@ import org.apache.spark.sql.types.{StructField, StructType}
   * mtime per file that fixes the arrival order, checked on every hit,
   * and one reader, [[Feed.stream]], that takes one file per trigger.
   *
-  * [[drain]] runs every judged stream over such feeds, one policy for
-  * trigger, state partitions and state-store provider.
+  * [[drained]] runs a judged stream over such feeds in a run dir of
+  * its own and lands it in the sink its output mode picks ([[sink]]);
+  * [[drain]] under it is the one policy for trigger, state partitions
+  * and state-store provider.
   */
 object Stage {
   // One shutdown hook sweeps every staged dir (a hook thread per dir
@@ -78,7 +81,7 @@ object Stage {
     */
   private[graft] val Marker = "_STAGED"
 
-  private val fixtureRoot = Paths.get("target", "graft-fixtures").toAbsolutePath
+  private val fixtureRoot = Paths.get("target", "graft-fixtures").toAbsolutePath.normalize
 
   /** THE durable stage: build once, serve to the same derivation only.
     *
@@ -264,11 +267,13 @@ object Stage {
   private val RocksDb =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** THE bounded run of a judged stream: start `stream` with checkpoint
+  /** The bounded run of a judged stream: start `stream` with checkpoint
     * `ckpt`, output `mode` and the `Trigger.AvailableNow` trigger
     * (the streaming engine run as a batch job over what has landed),
-    * and wait for it. The caller's `sink` shapes the writer (a file
-    * sink, a `foreachBatch`, `noop`); everything else is decided here:
+    * and wait for it. `sink` shapes the writer: [[drained]] passes its
+    * mode's [[sink]]; a query whose sink is its own (two sinks, an
+    * epoch-tagged upsert, an operator per batch, `noop`) passes that.
+    * Everything else is decided here:
     *  - 8 shuffle partitions, which is the state-store count of every
     *    stateful operator (each store pays checkpoint I/O per batch;
     *    results are partition-count invariant);
@@ -290,10 +295,46 @@ object Stage {
     }
   }
 
-  /** The common [[drain]] sink: each micro-batch appends parquet to `out`. */
-  def appendTo[T](out: String): DataStreamWriter[T] => DataStreamWriter[T] =
+  /** What a bounded run landed: `frame` is the output read back as a
+    * batch frame; `out` (the sink dir) and `ckpt` (the checkpoint) are
+    * kept for the audits that read them.
+    */
+  final case class Drained(frame: DataFrame, out: String, ckpt: String) {
+    /** The micro-batches the run planned, from its offsets log. */
+    def batches: Int = new java.io.File(s"$ckpt/offsets").listFiles()
+      .count(_.getName.forall(_.isDigit))
+  }
+
+  /** THE bounded run of a judged stream: [[drain]] in a run dir of its
+    * own under [[tempDir]], into output `mode`'s [[sink]], and the
+    * landed output read back.
+    */
+  def drained[T](stream: Dataset[T], mode: String = "append"): Drained = {
+    val run = tempDir("graft-run-")
+    val (out, ckpt) = (run.resolve("out").toString, run.resolve("ckpt").toString)
+    drain(stream, ckpt, mode)(sink(mode, out))
+    Drained(stream.sparkSession.read.parquet(out), out, ckpt)
+  }
+
+  /** The sink output `mode` picks, writing parquet to `out`:
+    *  - append: Spark's file sink, which commits each batch exactly
+    *    once through its `_spark_metadata` log (a read of `out` goes
+    *    through that log);
+    *  - update: each batch appended (the file sink rejects update mode);
+    *  - complete: each batch overwrites `out`, so it holds the last
+    *    batch's full image.
+    */
+  def sink[T](mode: String, out: String): DataStreamWriter[T] => DataStreamWriter[T] =
+    mode match {
+      case "append" => _.format("parquet").option("path", out)
+      case "update" => eachBatch(out, "append")
+      case "complete" => eachBatch(out, "overwrite")
+    }
+
+  private def eachBatch[T](out: String, saveMode: String)
+      : DataStreamWriter[T] => DataStreamWriter[T] =
     _.foreachBatch { (batch: Dataset[T], _: Long) =>
-      batch.toDF().write.mode("append").parquet(out); ()
+      batch.toDF().write.mode(saveMode).parquet(out); ()
     }
 
   /** The only place a fixture key is formed: `<name>-<sf dir>-
@@ -305,7 +346,7 @@ object Stage {
                          derivation: Seq[DataFrame]): String = {
     val md = java.security.MessageDigest.getInstance("SHA-256")
     (s"layout=$layoutVersion" +: derivation.map(df =>
-        planDigest(df.queryExecution.analyzed)))
+        planDigest(df.queryExecution.analyzed, dir)))
       .foreach(p => md.update(s"$p\n".getBytes("UTF-8")))
     val digest = md.digest().take(8).map("%02x".format(_)).mkString
     val sfKey = dir.replaceAll("[^A-Za-z0-9]", "_")
@@ -340,11 +381,13 @@ object Stage {
       .take(4).map("%02x".format(_)).mkString
   }
 
-  /** JVM-stable digest of an analyzed plan: a content hash of its
-    * canonical form. `semanticHash` is not stable across JVMs:
+  /** JVM-stable digest of an analyzed plan over sf dir `dir`: a content
+    * hash of its canonical form. `semanticHash` is not stable across
+    * JVMs:
     *  - a file relation hashes its `FileFormat`, whose hashCode is its
     *    class's identity hash. Here it is hashed as its format short
-    *    name, sorted root paths, schema and options;
+    *    name, sorted root paths and `path` option ([[located]]),
+    *    schema and options;
     *  - a commutative chain (`a + b + c`) canonicalizes to a
     *    `MultiCommutativeOp` that hashes its operator `Class` by
     *    identity, and canonicalization orders the operands of
@@ -355,7 +398,7 @@ object Stage {
     * a closure, a value without a content hashCode) throws: the stage
     * must then pass its lazy inputs as the derivation.
     */
-  private[graft] def planDigest(plan: LogicalPlan): String = {
+  private[graft] def planDigest(plan: LogicalPlan, dir: String): String = {
     plan.foreachWithSubqueries {
       case n @ (_: LogicalRDD | _: ExternalRDD[_] | _: ObjectProducer |
                 _: ObjectConsumer) => identityHashed(n.nodeName)
@@ -364,7 +407,26 @@ object Stage {
         case _ => ()
       })
     }
-    stableHash(plan.canonicalized).toHexString
+    stableHash(plan.canonicalized, located(dir)).toHexString
+  }
+
+  /** A file root as a key sees it: relative to the fixture root or to
+    * the sf dir `dir` when it lies under one (the key name already
+    * carries the sf dir and its fingerprint), else absolute. So a
+    * fixture root moved to another checkout serves every stage.
+    */
+  private def located(dir: String): String => String = {
+    val roots = Seq("fixtures:" -> fixtureRoot,
+      "sf:" -> Paths.get(dir).toAbsolutePath.normalize)
+    path => {
+      val uri = new HPath(path).toUri
+      Option.when(Option(uri.getScheme).forall(_ == "file") && uri.getAuthority == null)(
+          Paths.get(uri.getPath).toAbsolutePath.normalize)
+        .flatMap(at => roots.collectFirst {
+          case (tag, root) if at.startsWith(root) => tag + root.relativize(at)
+        })
+        .getOrElse(path)
+    }
   }
 
   private def identityHashed(what: String): Nothing =
@@ -373,12 +435,12 @@ object Stage {
         "(an RDD, a closure or an object); pass its lazy inputs as the " +
         "derivation instead")
 
-  private def stableHash(v: Any): Int = {
+  private def stableHash(v: Any, where: String => String): Int = {
     import scala.util.hashing.MurmurHash3.{orderedHash, unorderedHash}
     def node(name: String, parts: Iterator[Any]): Int =
-      orderedHash(Iterator.single(name.##) ++ parts.map(stableHash))
+      orderedHash(Iterator.single(name.##) ++ parts.map(hash))
     def unordered(name: String, operands: Seq[Expression]): Int =
-      orderedHash(Seq(name.##, unorderedHash(operands.map(stableHash))))
+      orderedHash(Seq(name.##, unorderedHash(operands.map(hash))))
     def operator(e: Expression): Option[Class[_]] = e match {
       case m: MultiCommutativeOp => Some(m.opCls)
       case c: CommutativeExpression => Some(c.getClass)
@@ -389,7 +451,7 @@ object Stage {
         case m: MultiCommutativeOp => m.operands
         case _ => e.children
       }).flatMap(c => if (operator(c).contains(op)) operands(c, op) else Seq(c))
-    v match {
+    def hash(v: Any): Int = v match {
       case null => 0
       case e: Expression if operator(e).nonEmpty =>
         val op = operator(e).get
@@ -406,8 +468,11 @@ object Stage {
             case f => f.getClass.getName
           }
           node("files", Iterator(format,
-            fs.location.rootPaths.map(_.toString).sorted, fs.schema.json,
-            fs.bucketSpec, fs.options.toSeq.sorted, r.output))
+            fs.location.rootPaths.map(p => where(p.toString)).sorted,
+            fs.schema.json, fs.bucketSpec, fs.options.toSeq.map {
+              case (k, path) if k.equalsIgnoreCase("path") => k -> where(path)
+              case kv => kv
+            }.sorted, r.output))
         case other => identityHashed(other.getClass.getName)
       }
       // an attribute's or alias's id sits outside its product fields
@@ -417,15 +482,16 @@ object Stage {
       case id: ExprId => id.id.##
       case c: Class[_] => c.getName.##
       case e: java.lang.Enum[_] => node(e.getClass.getName, Iterator(e.name))
-      case m: scala.collection.Map[_, _] => unorderedHash(m.map(stableHash))
-      case s: scala.collection.Set[_] => unorderedHash(s.toSeq.map(stableHash))
-      case it: Iterable[_] => orderedHash(it.map(stableHash))
-      case a: Array[_] => orderedHash(a.map(stableHash))
+      case m: scala.collection.Map[_, _] => unorderedHash(m.map(hash))
+      case s: scala.collection.Set[_] => unorderedHash(s.toSeq.map(hash))
+      case it: Iterable[_] => orderedHash(it.map(hash))
+      case a: Array[_] => orderedHash(a.map(hash))
       case p: Product => node(p.productPrefix, p.productIterator)
       case x if x.getClass.getMethod("hashCode").getDeclaringClass ==
           classOf[Object] => identityHashed(x.getClass.getName)
       case x => x.##
     }
+    hash(v)
   }
 
   /** A writer-unique sibling of `path` (staging copy or trash). */

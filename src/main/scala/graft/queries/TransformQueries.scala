@@ -183,7 +183,7 @@ object TransformQueries extends Family {
               from_json(col("value"), schema).as("r"))
             .select(col("poll"), col("r.symbol").as("symbol"),
               col("r.price").cast(DoubleType).as("price")),
-            s"$base/ckpt")(Stage.appendTo(s"$base/out"))
+            s"$base/ckpt")(Stage.sink("append", s"$base/out"))
         s.read.parquet(s"$base/out")
       } finally server.stop(0)
     },

@@ -1,18 +1,20 @@
 package graft
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 import java.sql.Timestamp
 
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import graft.queries.Stage
 import graft.streaming.{Pipeline, StatefulOps}
 
 /** [[Stage.drain]], the one bounded run of every judged stream: the
   * policy (8 state partitions, RocksDB exactly for transformWithState)
   * as seen from inside a foreachBatch, and the conf restore, also
-  * after a failed run.
+  * after a failed run; and [[Stage.drained]], whose output mode picks
+  * the sink.
   */
 class DrainSpec extends SparkSpec {
   import spark.implicits._
@@ -97,5 +99,53 @@ class DrainSpec extends SparkSpec {
         .exists(c => Option(c.getMessage).exists(_.contains("sink down"))), e)
       assert(confs() === before)
     } finally spark.conf.unset(Provider)
+  }
+
+  /** A feed of key batches, one file each, arriving in order (one
+    * micro-batch per file).
+    */
+  private def keyFeed(batches: Seq[String]*): Stage.Feed = {
+    val base = Files.createTempDirectory("graft-drained")
+    val dir = Files.createDirectories(base.resolve("feed"))
+    batches.zipWithIndex.foreach { case (keys, i) =>
+      val part = base.resolve(s"b$i")
+      keys.toDF("key").coalesce(1).write.parquet(part.toString)
+      Files.list(part).iterator().asScala
+        .filter(_.getFileName.toString.endsWith(".parquet")).foreach { f =>
+          val to = Files.move(f, dir.resolve(s"b$i.parquet"))
+          assert(to.toFile.setLastModified(Stage.pin(i)))
+        }
+    }
+    Stage.Feed(dir.toString, StructType(Seq(StructField("key", StringType))))
+  }
+
+  private def counts(df: DataFrame): Seq[(String, Long)] =
+    df.as[(String, Long)].collect().toSeq.sorted
+
+  test("drained: an append-mode stream lands through the file sink, every row once") {
+    val before = confs()
+    val run = Stage.drained(keyFeed(Seq("a", "b"), Seq("c", "a")).stream(spark))
+    assert(Files.isDirectory(Paths.get(run.out, "_spark_metadata")))
+    assert(run.frame.as[String].collect().toSeq.sorted === Seq("a", "a", "b", "c"))
+    assert(run.batches === 2)
+    assert(confs() === before)
+  }
+
+  test("drained: an update-mode keyed count lands every batch's updates") {
+    val before = confs()
+    val run = Stage.drained(keyFeed(Seq("a", "b", "a"), Seq("a", "c")).stream(spark)
+      .groupBy("key").count(), "update")
+    assert(!Files.exists(Paths.get(run.out, "_spark_metadata")))
+    assert(counts(run.frame) === Seq(("a", 2L), ("a", 3L), ("b", 1L), ("c", 1L)))
+    assert(confs() === before)
+  }
+
+  test("drained: a complete-mode aggregate leaves only the last batch's full image") {
+    val before = confs()
+    val run = Stage.drained(keyFeed(Seq("a", "b", "a"), Seq("a", "c")).stream(spark)
+      .groupBy("key").count(), "complete")
+    assert(run.batches === 2)
+    assert(counts(run.frame) === Seq(("a", 3L), ("b", 1L), ("c", 1L)))
+    assert(confs() === before)
   }
 }

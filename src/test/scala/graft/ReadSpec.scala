@@ -88,7 +88,7 @@ class ReadSpec extends SparkSpec {
     val paths = Seq("documents", "events", "lineitem", "embeddings")
       .map(n => s"${Recount.dir}/$n.parquet") :+ parted
     def digest(df: org.apache.spark.sql.DataFrame) =
-      Stage.planDigest(df.queryExecution.analyzed)
+      Stage.planDigest(df.queryExecution.analyzed, Recount.dir)
     Session.withConf(spark)(NanosAsLong -> "true") {
       paths.foreach { p =>
         Tables.parquet(spark, p)

@@ -205,25 +205,60 @@ class StageSpec extends SparkSpec {
     }
   }
 
+  /** Run [[StageProbe]] with `args` in a fresh JVM whose working
+    * directory (and so whose fixture root) is `cwd`; returns its output.
+    */
+  private def probe(cwd: java.io.File, args: String*): String = {
+    val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
+    val opts = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.filter(a =>
+        a.startsWith("--add-opens") || a.startsWith("-Dspark."))
+    val cp = System.getProperty("java.class.path").split(java.io.File.pathSeparator)
+      .map(new java.io.File(_).getAbsolutePath).mkString(java.io.File.pathSeparator)
+    val cmd = Seq(javaBin) ++ opts ++ Seq("-Xmx1g", "-cp", cp, "graft.StageProbe") ++ args
+    val proc = new ProcessBuilder(cmd: _*).directory(cwd)
+      .redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
+    assert(proc.waitFor() === 0, out)
+    out
+  }
+
+  private def probed(out: String): Option[String] = out.linesIterator.collectFirst {
+    case l if l.startsWith("STAGE ") => l.stripPrefix("STAGE ")
+  }
+
   test("a stage key does not depend on the JVM's history") {
     withSfDir { dir =>
       val builds = new java.util.concurrent.atomic.AtomicInteger()
       val here = staged(dir, StageProbe.derivation(spark, dir), builds)
       // a fresh JVM that hashes other objects first: identity hashes (a
       // FileFormat's, a commutative chain's operator class) differ there
-      val javaBin = Paths.get(System.getProperty("java.home"), "bin", "java").toString
-      val opts = java.lang.management.ManagementFactory.getRuntimeMXBean
-        .getInputArguments.asScala.filter(a =>
-          a.startsWith("--add-opens") || a.startsWith("-Dspark."))
-      val cmd = Seq(javaBin) ++ opts ++ Seq("-Xmx1g", "-cp",
-        System.getProperty("java.class.path"), "graft.StageProbe", dir)
-      val proc = new ProcessBuilder(cmd: _*).redirectErrorStream(true).start()
-      val out = scala.io.Source.fromInputStream(proc.getInputStream).mkString
-      assert(proc.waitFor() === 0, out)
-      val probed = out.linesIterator.collectFirst {
-        case l if l.startsWith("STAGE ") => l.stripPrefix("STAGE ")
-      }
-      assert(probed === Some(here.toString), out)
+      val out = probe(new java.io.File("."), dir)
+      assert(probed(out) === Some(here.toString), out)
+      assert(!out.contains("BUILT"), out)
+    }
+  }
+
+  test("a fixture root copied to another directory serves every stage, " +
+    "a derived stage included") {
+    withSfDir { dir =>
+      val here = StageProbe.chain(spark, dir)
+      // this sf dir's stages, copied with their mtimes into the fixture
+      // root of another working directory (the rest of the root may
+      // hold other sf dirs' stages of any size)
+      val moved = Stage.tempDir("graft-stage-moved-")
+      val root = Files.createDirectories(moved.resolve("target").resolve("graft-fixtures"))
+      val sfKey = dir.replaceAll("[^A-Za-z0-9]", "_")
+      val listing = Files.list(Paths.get("target", "graft-fixtures"))
+      try listing.iterator().asScala.filter(_.getFileName.toString.contains(sfKey))
+        .foreach { p =>
+          val cp = new ProcessBuilder("cp", "-a", p.toString, root.toString).start()
+          assert(cp.waitFor() === 0, s"cp -a $p")
+        }
+      finally listing.close()
+      val out = probe(moved.toFile, dir, "chain")
+      assert(probed(out).map(Paths.get(_).getFileName) === Some(here.getFileName), out)
+      assert(probed(out).exists(p => Paths.get(p).startsWith(root.toRealPath())), out)
       assert(!out.contains("BUILT"), out)
     }
   }
@@ -241,17 +276,31 @@ object StageProbe {
     spark.read.parquet(s"$dir/t.parquet").select(greatest(
       (1 to 6).map(i => col("id") + lit(i.toLong) + col("id") * i): _*).as("v"))
 
+  /** The stage `name` over `derivation`, printing BUILT if it missed. */
+  private def stage(name: String, dir: String, derivation: DataFrame): Path =
+    Stage.durable(name, dir, Seq(derivation)) { p =>
+      println("BUILT")
+      derivation.write.parquet(p.toString)
+    }
+
+  /** An upstream stage over [[derivation]] and a derived stage that
+    * reads it; returns the derived stage's path.
+    */
+  def chain(spark: org.apache.spark.sql.SparkSession, dir: String): Path = {
+    val up = stage("spec-up", dir, derivation(spark, dir))
+    stage("spec-derived", dir, spark.read.parquet(up.toString).where(col("v") > 0))
+  }
+
+  /** args: the sf dir, then `chain` to probe [[chain]]'s derived stage. */
   def main(args: Array[String]): Unit = {
     (1 to 5000).foreach(i => new Object().hashCode() + i.toString.hashCode)
     Seq(classOf[String], classOf[Thread], classOf[StageSpec]).foreach(_.hashCode)
     val spark = org.apache.spark.sql.SparkSession.builder()
       .master("local[1]").config("spark.ui.enabled", "false").getOrCreate()
     try {
-      val t = derivation(spark, args(0))
-      val p = Stage.durable("spec", args(0), Seq(t)) { p =>
-        println("BUILT")
-        t.write.parquet(p.toString)
-      }
+      val p =
+        if (args.lift(1).contains("chain")) chain(spark, args(0))
+        else stage("spec", args(0), derivation(spark, args(0)))
       println(s"STAGE $p")
     } finally spark.stop()
   }
