@@ -4,9 +4,11 @@
 Usage: check_oracle.py <verify_out_dir> <sf_dir>
 Reads <out>/oracle_sql.json, registers each testdata parquet as a DuckDB
 view, runs each oracle SQL, and compares (rows, schema-ish, values) against
-<out>/<name>/ parquet written by graft.Verify.
+<out>/<name>/ parquet written by graft.Verify. The names are spread over
+one worker process per CPU this process may use, each with its own DuckDB
+connection; the PASS/FAIL lines still print in sorted name order.
 """
-import json, sys, math
+import json, sys, math, os, multiprocessing
 import duckdb
 import numpy as np
 import pandas as pd
@@ -71,63 +73,74 @@ def cell_eq(a, b):
         return a == b
     return a == b or str(a) == str(b)
 
-def main():
-    out_dir, sf_dir = sys.argv[1], sys.argv[2]
+con = None
+
+def open_tables(sf_dir):
+    global con
     con = duckdb.connect()
     for t in TABLES:
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')")
+
+def check(job):
+    """(passed, line) for one oracle, run on this worker's connection."""
+    out_dir, name, sql = job
+    # spark side FIRST: on a targeted verify (names passed to
+    # graft.Verify) most names have no dump, and evaluating the
+    # oracle SQL for them anyway costs minutes at sf0.1 (the BPE /
+    # LSH training chains are heavy in DuckDB). Strictness for
+    # dumped names is unchanged — the driver's own checker still
+    # runs every oracle on full dumps.
+    try:
+        got = canon(pd.read_parquet(f"{out_dir}/{name}"))
+    except Exception as e:
+        return False, f"FAIL {name}: spark result unreadable: {e}"
+    try:
+        exp = canon(con.execute(sql).df())
+    except Exception as e:
+        return False, f"FAIL {name}: oracle SQL error: {e}"
+    if list(exp.columns) != list(got.columns):
+        return False, f"FAIL {name}: columns {list(got.columns)} vs oracle {list(exp.columns)}"
+    if len(exp) != len(got):
+        return False, f"FAIL {name}: rows {len(got)} vs oracle {len(exp)}"
+    # DRIVER-STRICT: the driver's canonicalizer (raw pandas
+    # sort_values -> Categorical) crashes on non-scalar cells, so a
+    # judged frame carrying an array/list/struct column has NO
+    # correctness signal at all (e50_tokenize in r7). Serialize
+    # list outputs to strings instead (house rule, q35_collect).
+    ns = next(((side, c) for side, df_ in (("spark", got), ("oracle", exp))
+               for c in df_.columns if len(df_)
+               and is_nonscalar(df_[c].iloc[0])), None)
+    if ns:
+        return False, (f"FAIL {name}: non-scalar cells in {ns[0]} col {ns[1]} "
+                       f"(driver canonicalizer would crash -> err)")
+    # DRIVER-STRICT: column-level int-vs-float dtype drift fails the
+    # driver hash even when every value compares equal numerically.
+    dk = next((c for c in exp.columns
+               if {exp[c].dtype.kind, got[c].dtype.kind} == {"i", "f"}
+               or {exp[c].dtype.kind, got[c].dtype.kind} == {"u", "f"}), None)
+    if dk:
+        return False, (f"FAIL {name}: dtype drift col {dk}: spark={got[dk].dtype} "
+                       f"oracle={exp[dk].dtype} (driver hashes '5' vs '5.0')")
+    for i in range(len(exp)):
+        for c in exp.columns:
+            if not cell_eq(got[c].iloc[i], exp[c].iloc[i]):
+                return False, (f"FAIL {name}: row {i} col {c}: "
+                               f"spark={got[c].iloc[i]!r} oracle={exp[c].iloc[i]!r}")
+    return True, f"PASS {name} ({len(exp)} rows)"
+
+def main():
+    out_dir, sf_dir = sys.argv[1], sys.argv[2]
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    jobs = [(out_dir, name, sql) for name, sql in sorted(oracles.items())]
+    workers = max(1, min(len(os.sched_getaffinity(0)), len(jobs)))
     n_pass = n_fail = 0
-    for name, sql in sorted(oracles.items()):
-        # spark side FIRST: on a targeted verify (names passed to
-        # graft.Verify) most names have no dump, and evaluating the
-        # oracle SQL for them anyway costs minutes at sf0.1 (the BPE /
-        # LSH training chains are heavy in DuckDB). Strictness for
-        # dumped names is unchanged — the driver's own checker still
-        # runs every oracle on full dumps.
-        try:
-            got = canon(pd.read_parquet(f"{out_dir}/{name}"))
-        except Exception as e:
-            print(f"FAIL {name}: spark result unreadable: {e}"); n_fail += 1; continue
-        try:
-            exp = canon(con.execute(sql).df())
-        except Exception as e:
-            print(f"FAIL {name}: oracle SQL error: {e}"); n_fail += 1; continue
-        if list(exp.columns) != list(got.columns):
-            print(f"FAIL {name}: columns {list(got.columns)} vs oracle {list(exp.columns)}"); n_fail += 1; continue
-        if len(exp) != len(got):
-            print(f"FAIL {name}: rows {len(got)} vs oracle {len(exp)}"); n_fail += 1; continue
-        # DRIVER-STRICT: the driver's canonicalizer (raw pandas
-        # sort_values -> Categorical) crashes on non-scalar cells, so a
-        # judged frame carrying an array/list/struct column has NO
-        # correctness signal at all (e50_tokenize in r7). Serialize
-        # list outputs to strings instead (house rule, q35_collect).
-        ns = next(((side, c) for side, df_ in (("spark", got), ("oracle", exp))
-                   for c in df_.columns if len(df_)
-                   and is_nonscalar(df_[c].iloc[0])), None)
-        if ns:
-            print(f"FAIL {name}: non-scalar cells in {ns[0]} col {ns[1]} "
-                  f"(driver canonicalizer would crash -> err)"); n_fail += 1; continue
-        # DRIVER-STRICT: column-level int-vs-float dtype drift fails the
-        # driver hash even when every value compares equal numerically.
-        dk = next((c for c in exp.columns
-                   if {exp[c].dtype.kind, got[c].dtype.kind} == {"i", "f"}
-                   or {exp[c].dtype.kind, got[c].dtype.kind} == {"u", "f"}), None)
-        if dk:
-            print(f"FAIL {name}: dtype drift col {dk}: spark={got[dk].dtype} "
-                  f"oracle={exp[dk].dtype} (driver hashes '5' vs '5.0')"); n_fail += 1; continue
-        bad = None
-        for i in range(len(exp)):
-            for c in exp.columns:
-                if not cell_eq(got[c].iloc[i], exp[c].iloc[i]):
-                    bad = (i, c, got[c].iloc[i], exp[c].iloc[i]); break
-            if bad: break
-        if bad:
-            i, c, g, e = bad
-            print(f"FAIL {name}: row {i} col {c}: spark={g!r} oracle={e!r}"); n_fail += 1
-        else:
-            print(f"PASS {name} ({len(exp)} rows)"); n_pass += 1
+    with multiprocessing.get_context("fork").Pool(
+            workers, initializer=open_tables, initargs=(sf_dir,)) as pool:
+        for ok, line in pool.imap(check, jobs, chunksize=1):
+            print(line, flush=True)
+            n_pass += ok; n_fail += not ok
     print(f"== {n_pass} pass, {n_fail} fail ==")
     sys.exit(1 if n_fail else 0)
 
-main()
+if __name__ == "__main__":
+    main()

@@ -113,14 +113,15 @@ def main():
             f"range({rep}) r(i){shift_src} ORDER BY r.i) "
             f"TO '{out}/{t}.parquet'")
         if t == "events":
-            # DuckDB COPY writes timestamps as us; the driver testdata is
-            # TIMESTAMP(NANOS) and Tables.events reads it via the
-            # nanosAsLong path — keep the replica type-identical
+            # DuckDB's COPY picks its own timestamp encoding; cast ts back
+            # to the source column's type so the replica reads as the
+            # source does
+            ts = pq.read_schema(srcf).field("ts")
             tb = pq.read_table(f"{out}/{t}.parquet")
-            idx = tb.schema.get_field_index("ts")
-            tb = tb.set_column(idx, pa.field("ts", pa.timestamp("ns")),
-                               tb.column("ts").cast(pa.timestamp("ns")))
-            pq.write_table(tb, f"{out}/{t}.parquet")
+            if tb.schema.field("ts").type != ts.type:
+                idx = tb.schema.get_field_index("ts")
+                tb = tb.set_column(idx, ts, tb.column("ts").cast(ts.type))
+                pq.write_table(tb, f"{out}/{t}.parquet")
     print(f"wrote {rep}x replica of {src} -> {out}: {', '.join(tables)}")
 
 

@@ -191,13 +191,11 @@ object Bench {
     // otherwise depends only on map iteration order. (At sf0.1 the
     // whole dataset is ~17 MB; a real cluster bench would instead warm
     // per-executor code paths with one canary query.)
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { tbl =>
-      untimed(s"warmup:$tbl")(graft.queries.Tables.t(spark, sfDir, tbl)
+    import graft.queries.Tables
+    Tables.names(spark, sfDir).foreach { tbl =>
+      untimed(s"warmup:$tbl")(Tables.table(spark, sfDir, tbl)
         .write.format("noop").mode("overwrite").save())
     }
-    untimed("warmup:events")(graft.queries.Tables.events(spark, sfDir)
-      .write.format("noop").mode("overwrite").save())
     // and one aggregation/shuffle per engine path (codegen'd hash agg,
     // sort, exchange machinery), plus one canary per STREAMING engine
     // path: the micro-batch machinery (offset/commit logs, state-store

@@ -10,7 +10,9 @@ object Session {
   def envCpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").trim.toInt
 
   /** A `local[cpus]` session with `cpus` shuffle partitions, UTC session
-    * time, no UI, the engine's excluded optimizer rules and its native
+    * time, no UI, parquet TIMESTAMP(NANOS) read as epoch-nanos longs
+    * (the legacy `events` encoding [[graft.queries.Tables.events]]
+    * normalizes), the engine's excluded optimizer rules and its native
     * functions registered, so every query plans the same way from the
     * first one on.
     */
@@ -20,6 +22,7 @@ object Session {
       .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.optimizer.excludedRules", Graft.excludedOptimizerRules)
       .getOrCreate()
     s.sparkContext.setLogLevel("WARN")

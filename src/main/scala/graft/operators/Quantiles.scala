@@ -46,6 +46,12 @@ object Quantiles {
   def ldiv(a: Column, b: Column): Column =
     call_function("div", a, b)
 
+  /** The base of the engine's exact long-limb sums: a value splits into
+    * hi·10¹² + mid·10⁶ + lo ([[graft.queries.Tables.lsum]],
+    * [[Skew.saltedSum]]).
+    */
+  private[graft] val limb = 1000000L
+
   /** 1-based rank of the lower median: (n + 1) div 2. */
   def medianRank(cnt: Column): Column = ldiv(cnt + lit(1L), 2)
 

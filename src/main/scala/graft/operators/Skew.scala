@@ -38,7 +38,7 @@ object Skew {
     */
   def saltedSum(df: DataFrame, keys: Seq[String], saltBy: Column,
                 sums: Seq[(Column, Int, String)], buckets: Int): DataFrame = {
-    val limb = 1000000L
+    import Quantiles.limb
     def u(c: Column, scale: Int): Column =
       floor(c * lit(math.pow(10, scale)) + lit(0.5)).cast(LongType)
     def limbs(c: Column, scale: Int, name: String): Seq[Column] = {

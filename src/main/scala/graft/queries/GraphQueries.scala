@@ -60,27 +60,16 @@ object GraphQueries extends Family {
           SELECT n_triangles, n_edges, n_nodes FROM tri, ed, nd"""),
 
     // Recursive CTE (Spark 4 UnionLoop): depth of every customer in a
-    // synthetic parent tree (parent(k) = k div 2, rooted at 0) —
+    // synthetic parent tree (parent(k) = floor(k / 2), rooted at 0) —
     // iterative plan, each UnionLoop step a narrow join of the frontier
     // against the broadcast-able parent edge set; depth ≤ log₂(keys).
-    Judged("q89_recursive", (s, dir) => {
-      t(s, dir, "customer").select("c_custkey")
-        .createOrReplaceTempView("q89_cust")
-      s.sql("""
-        WITH RECURSIVE reach(c_custkey, depth) AS (
-          SELECT CAST(0 AS BIGINT) AS c_custkey, 0 AS depth
-          UNION ALL
-          SELECT c.c_custkey, r.depth + 1
-          FROM q89_cust c JOIN reach r ON c.c_custkey DIV 2 = r.c_custkey
-          WHERE c.c_custkey > 0)
-        SELECT c_custkey, depth FROM reach""")
-    },
-      // same synthetic parent tree, same reachability semantics
+    Judged.sql("q89_recursive",
       """WITH RECURSIVE reach(c_custkey, depth) AS (
            SELECT CAST(0 AS BIGINT) AS c_custkey, 0 AS depth
            UNION ALL
            SELECT c.c_custkey, r.depth + 1
-           FROM customer c JOIN reach r ON c.c_custkey // 2 = r.c_custkey
+           FROM customer c JOIN reach r
+             ON CAST(floor(c.c_custkey / 2) AS BIGINT) = r.c_custkey
            WHERE c.c_custkey > 0)
          SELECT c_custkey, depth FROM reach"""),
 

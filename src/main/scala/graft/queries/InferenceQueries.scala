@@ -802,13 +802,12 @@ object InferenceQueries extends Family {
       // final products exceed long range past sf0.1 (n·sxx ≈ 6e21);
       // DECIMAL(38,0) keeps them exact (HUGEINT on the oracle side),
       // with the one cast to double after the subtraction
-      def dec(c: Column) = c.cast("decimal(38,0)")
       agg.select(col("g").as("l_returnflag"), col("n"),
-        round((dec(col("n")) * col("sxy") - dec(col("sx")) * col("sy"))
+        round((dec38(col("n")) * col("sxy") - dec38(col("sx")) * col("sy"))
           .cast("double") /
-          (sqrt((dec(col("n")) * col("sxx") - dec(col("sx")) * col("sx"))
+          (sqrt((dec38(col("n")) * col("sxx") - dec38(col("sx")) * col("sx"))
             .cast("double")) *
-            sqrt((dec(col("n")) * col("syy") - dec(col("sy")) * col("sy"))
+            sqrt((dec38(col("n")) * col("syy") - dec38(col("sy")) * col("sy"))
               .cast("double"))), 8).as("rho"))
     },
       """WITH li AS (

@@ -1745,9 +1745,11 @@ object SimilarityQueries extends Family {
       val ap = cand.withColumn("rk", row_number().over(
           Window.partitionBy("qid").orderBy(col("cos").desc, col("vec_id"))))
         .where(col("rk") <= 10)
-      val mt = exact1.join(ap,
-        exact1("qid") === ap("qid") && col("best_vid") === col("vec_id"),
-        "left").select(exact1("qid"), col("rk"))
+      // both frames derive from `qs`: aliased, so the condition names
+      // each side's qid
+      val mt = exact1.as("ex").join(ap.as("ap"),
+        col("ex.qid") === col("ap.qid") && col("best_vid") === col("vec_id"),
+        "left").select(col("ex.qid"), col("rk"))
       val aggs = count(lit(1)).as("n_probes") +:
         count(col("rk")).as("n_found") +:
         (1 to 10).map(r => sum(when(col("rk") === r, 1L).otherwise(0L))

@@ -5,7 +5,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
-import graft.operators.Quantiles.ldiv
+import graft.operators.Quantiles.{ldiv, limb}
 
 /** Testdata table loaders + cross-engine determinism helpers.
   *
@@ -19,8 +19,9 @@ import graft.operators.Quantiles.ldiv
   *
   *  1. `events.ts` has drifted across driver fixture generations:
   *     originally parquet TIMESTAMP(NANOS) (which Spark's reader rejects,
-  *     so we read it as epoch-nanos long via
-  *     `spark.sql.legacy.parquet.nanosAsLong` and truncate to micros),
+  *     so [[graft.Session.local]] sets
+  *     `spark.sql.legacy.parquet.nanosAsLong`, the column reads as
+  *     epoch-nanos long and is truncated to micros),
   *     currently TIMESTAMP(MICROS) (read natively as TIMESTAMP_NTZ).
   *     [[events]] dispatches on the schema it actually finds and
   *     normalizes either form to microsecond `TimestampType` in the UTC
@@ -41,6 +42,21 @@ object Tables {
   /** One parquet table from the sf dir. */
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     parquet(spark, s"$dir/$name.parquet")
+
+  /** The names of the sf dir's tables: each `<name>.parquet` in it,
+    * sorted.
+    */
+  def names(spark: SparkSession, dir: String): Seq[String] = {
+    val root = new Path(dir)
+    root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .listStatus(root).toSeq.map(_.getPath.getName)
+      .collect { case n if n.endsWith(".parquet") => n.stripSuffix(".parquet") }
+      .sorted
+  }
+
+  /** Table `name` of the sf dir: [[events]] for `events`, else [[t]]. */
+  def table(spark: SparkSession, dir: String, name: String): DataFrame =
+    if (name == "events") events(spark, dir) else t(spark, dir, name)
 
   /** A read of the parquet file-or-directory at `path` whose schema is
     * inferred once per JVM. Without a schema, Spark infers it with a
@@ -107,9 +123,9 @@ object Tables {
   /** `events` with ts normalized to microsecond TimestampType (see above).
     * Schema-dispatched so both known fixture encodings work: epoch-nanos
     * long (legacy TIMESTAMP(NANOS) fixture) and native TIMESTAMP(MICROS).
+    * Reads with the session's confs as they are and sets none.
     */
   def events(spark: SparkSession, dir: String): DataFrame = {
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val df = t(spark, dir, "events")
     df.schema("ts").dataType match {
       case LongType =>
@@ -173,22 +189,11 @@ object Tables {
     * unchanged.
     */
   def dsumDec(c: Column, scale: Int): Column = {
-    val limb = 1000000L
     val u = floor(c * lit(math.pow(10, scale)) + lit(0.5)).cast(LongType)
-    // truncated-toward-zero div/mod identity u = hi·10¹² + mid·10⁶ + lo
-    // holds for either sign
-    val lo = sum(u % limb)
-    val mid = sum(ldiv(u, limb) % limb)
-    val hi = sum(ldiv(u, limb * limb))
-    val totalUnscaled =
-      hi.cast(DecimalType(38, 0)) * lit(limb * limb) +
-        mid.cast(DecimalType(38, 0)) * lit(limb) +
-        lo.cast(DecimalType(38, 0))
-    // exact: total/10^s has ≤ s ≤ 6 decimal places and the divide's
+    // exact: lsum(u)/10^s has ≤ s ≤ 6 decimal places and the divide's
     // result scale is ≥ 6, so HALF_UP never fires; the final cast to
     // (38, s) is also exact (the value is on the 10^-s grid)
-    (totalUnscaled / lit(math.pow(10, scale).toLong))
-      .cast(DecimalType(38, scale))
+    (lsum(u) / lit(math.pow(10, scale).toLong)).cast(DecimalType(38, scale))
   }
 
   /** Exact sum of a LONG column as DecimalType(38, 0), aggregated as
@@ -202,7 +207,6 @@ object Tables {
     * for rank-like values ≤ ~10¹² that is ~9·10¹² rows again).
     */
   def lsum(c: Column): Column = {
-    val limb = 1000000L
     // integral `div`: limb inputs from [[lprodSum]] legitimately reach
     // ~10^18, past where a double division is exact
     (sum(ldiv(c, limb * limb)).cast(DecimalType(38, 0)) *
@@ -225,7 +229,6 @@ object Tables {
     * stays the fallback beyond that regime.
     */
   def lprodSum(x: Column, y: Column): Column = {
-    val limb = 1000000L
     val a = ldiv(x, limb)
     val b = x % limb
     (lsum(a * y) * lit(limb) + lsum(b * y))
@@ -248,7 +251,6 @@ object Tables {
     * beyond that regime.
     */
   def lprodSum3(w: Column, x: Column, y: Column): Column = {
-    val limb = 1000000L
     val a1 = ldiv(x, limb); val b1 = x % limb
     val a2 = ldiv(y, limb); val b2 = y % limb
     (lprodSum(a1 * a2, w) * lit(limb * limb) +
@@ -300,12 +302,6 @@ object Tables {
     */
   private[queries] val tokensSql =
     "list_filter(string_split_regex(lower(text), '[^a-z0-9]+'), x -> x <> '')"
-
-  /** Registers each named table as a temp view, for plans written in
-    * SQL.
-    */
-  private[queries] def views(s: SparkSession, dir: String, names: String*): Unit =
-    names.foreach(n => t(s, dir, n).createOrReplaceTempView(n))
 
   /** `c` as double. */
   private[queries] def d(c: Column): Column = c.cast("double")

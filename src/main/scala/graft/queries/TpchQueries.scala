@@ -157,26 +157,11 @@ object TpchQueries extends Family {
     // into exact cents-integer arithmetic (5·cnt·q < Σq) so the filter
     // is reproducible; Catalyst decorrelates the two scalar subqueries
     // into one aggregated join on l_partkey
-    Judged("q67_tpch17", (s, dir) => {
-      views(s, dir, "lineitem", "part")
-      s.sql(
-        """SELECT
-             CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,2))) AS STRING)
-               AS DOUBLE) / 7.0 AS avg_yearly,
-             count(*) AS n
-           FROM lineitem, part
-           WHERE p_partkey = l_partkey
-             AND p_brand = 'Brand#23'
-             AND 5 * (SELECT count(*) FROM lineitem l2
-                      WHERE l2.l_partkey = p_partkey)
-                   * CAST(round(l_quantity * 100) AS BIGINT)
-                 < (SELECT SUM(CAST(round(l2.l_quantity * 100) AS BIGINT))
-                    FROM lineitem l2 WHERE l2.l_partkey = p_partkey)""")
-    },
-      // VARCHAR route on the decimal total: DuckDB's direct DECIMAL→DOUBLE
+    Judged.sql("q67_tpch17",
+      // string route on the decimal total: DuckDB's direct DECIMAL→DOUBLE
       // double-rounds past 2^53; string parse is correctly rounded
       """SELECT
-           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,2))) AS VARCHAR)
+           CAST(CAST(SUM(CAST(l_extendedprice AS DECIMAL(38,2))) AS STRING)
              AS DOUBLE) / 7.0 AS avg_yearly,
            count(*) AS n
          FROM lineitem, part
@@ -194,26 +179,7 @@ object TpchQueries extends Family {
     // DIFFERENT outer table: the decorrelation-hostile shape. Catalyst
     // must plan a semi-join and an anti-join against lineitem, both
     // hash-partitioned on l_orderkey — no per-row subqueries
-    Judged("q68_tpch21", (s, dir) => {
-      views(s, dir, "supplier", "lineitem", "orders")
-      s.sql(
-        """SELECT s_name, count(*) AS numwait
-           FROM supplier, lineitem l1, orders
-           WHERE s_suppkey = l1.l_suppkey
-             AND o_orderkey = l1.l_orderkey
-             AND o_orderstatus = 'F'
-             AND l1.l_shipdate > o_orderdate + INTERVAL 60 DAY
-             AND EXISTS (SELECT 1 FROM lineitem l2
-                         WHERE l2.l_orderkey = l1.l_orderkey
-                           AND l2.l_suppkey <> l1.l_suppkey)
-             AND NOT EXISTS (SELECT 1 FROM lineitem l3
-                             WHERE l3.l_orderkey = l1.l_orderkey
-                               AND l3.l_suppkey <> l1.l_suppkey
-                               AND l3.l_shipdate > o_orderdate + INTERVAL 60 DAY)
-           GROUP BY s_name
-           ORDER BY numwait DESC, s_name
-           LIMIT 100""")
-    },
+    Judged.sql("q68_tpch21",
       """SELECT s_name, count(*) AS numwait
          FROM supplier, lineitem l1, orders
          WHERE s_suppkey = l1.l_suppkey
@@ -235,19 +201,7 @@ object TpchQueries extends Family {
     // subquery on the same fact table. Catalyst plans the subquery as
     // an aggregate then a semi-join on l_orderkey; both the filter agg
     // and the outer agg are partial-aggregated map-side
-    Judged("q69_tpch18", (s, dir) => {
-      views(s, dir, "customer", "orders", "lineitem")
-      s.sql(
-        s"""SELECT c_name, o.o_orderkey, o_orderdate, o_totalprice,
-              CAST(SUM($qtyCents) AS DOUBLE)/100.0 AS sum_qty
-            FROM customer, orders o, lineitem
-            WHERE o.o_orderkey IN (SELECT l_orderkey FROM lineitem
-                                   GROUP BY l_orderkey
-                                   HAVING SUM($qtyCents) > 25000)
-              AND c_custkey = o_custkey AND o.o_orderkey = l_orderkey
-            GROUP BY c_name, o.o_orderkey, o_orderdate, o_totalprice
-            ORDER BY o_totalprice DESC, o.o_orderkey LIMIT 100""")
-    },
+    Judged.sql("q69_tpch18",
       s"""SELECT c_name, o.o_orderkey, o_orderdate, o_totalprice,
             CAST(SUM($qtyCents) AS DOUBLE)/100.0 AS sum_qty
           FROM customer, orders o, lineitem
@@ -261,18 +215,7 @@ object TpchQueries extends Family {
     // TPC-H Q4: order-priority checking — EXISTS correlated on the
     // order key AND the outer order date (the join-condition-with-
     // outer-column shape). One semi-join on l_orderkey
-    Judged("q70_tpch4", (s, dir) => {
-      views(s, dir, "orders", "lineitem")
-      s.sql(
-        """SELECT o_orderpriority, count(*) AS order_count
-           FROM orders
-           WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
-             AND o_orderdate <  TIMESTAMP '1998-01-01 00:00:00'
-             AND EXISTS (SELECT 1 FROM lineitem
-                         WHERE l_orderkey = o_orderkey
-                           AND l_shipdate > o_orderdate + INTERVAL 30 DAY)
-           GROUP BY o_orderpriority ORDER BY o_orderpriority""")
-    },
+    Judged.sql("q70_tpch4",
       """SELECT o_orderpriority, count(*) AS order_count
          FROM orders
          WHERE o_orderdate >= TIMESTAMP '1997-01-01 00:00:00'
@@ -285,16 +228,7 @@ object TpchQueries extends Family {
     // TPC-H Q13: customer order-count distribution — LEFT join with an
     // extra join-side predicate (kept orders only), then a histogram of
     // per-customer counts. Two hash exchanges (custkey, then count)
-    Judged("q71_tpch13", (s, dir) => {
-      views(s, dir, "customer", "orders")
-      s.sql(
-        """SELECT c_count, count(*) AS custdist FROM (
-             SELECT c_custkey, count(o_orderkey) AS c_count
-             FROM customer LEFT JOIN orders
-               ON c_custkey = o_custkey AND o_orderpriority <> '1-URGENT'
-             GROUP BY c_custkey)
-           GROUP BY c_count ORDER BY custdist DESC, c_count DESC""")
-    },
+    Judged.sql("q71_tpch13",
       """SELECT c_count, count(*) AS custdist FROM (
            SELECT c_custkey, count(o_orderkey) AS c_count
            FROM customer LEFT JOIN orders
@@ -307,19 +241,7 @@ object TpchQueries extends Family {
     // compares a grouped derived table against a per-part total —
     // cross-multiplied to exact integers. Catalyst decorrelates the
     // scalar subquery into an aggregate join on l_partkey
-    Judged("q72_tpch20", (s, dir) => {
-      views(s, dir, "supplier", "lineitem", "part")
-      s.sql(
-        s"""SELECT s_name, s_acctbal FROM supplier WHERE s_suppkey IN (
-              SELECT g.l_suppkey FROM (
-                SELECT l_suppkey, l_partkey AS pk, SUM($qtyCents) AS q
-                FROM lineitem, part
-                WHERE l_partkey = p_partkey AND p_name LIKE 'small%'
-                GROUP BY l_suppkey, l_partkey) g
-              WHERE 10 * g.q > (SELECT SUM($qtyCents) FROM lineitem
-                                WHERE l_partkey = g.pk))
-            ORDER BY s_name""")
-    },
+    Judged.sql("q72_tpch20",
       s"""SELECT s_name, s_acctbal FROM supplier WHERE s_suppkey IN (
             SELECT g.l_suppkey FROM (
               SELECT l_suppkey, l_partkey AS pk, SUM($qtyCents) AS q
@@ -334,19 +256,7 @@ object TpchQueries extends Family {
     // per-part minimum found by a correlated MIN over a shared CTE
     // (min is order-insensitive, so cents-exact). Decorrelates to an
     // aggregate self-join on partkey
-    Judged("q73_tpch2", (s, dir) => {
-      views(s, dir, "part", "supplier", "lineitem")
-      s.sql(
-        s"""WITH ps AS (SELECT l_partkey, l_suppkey, MIN($priceCents) AS minp
-                        FROM lineitem GROUP BY l_partkey, l_suppkey)
-            SELECT p_partkey, s_name, CAST(ps.minp AS DOUBLE)/100.0 AS min_price
-            FROM part, ps, supplier
-            WHERE p_partkey = ps.l_partkey AND s_suppkey = ps.l_suppkey
-              AND p_size = 5
-              AND ps.minp = (SELECT MIN(minp) FROM ps p2
-                             WHERE p2.l_partkey = p_partkey)
-            ORDER BY p_partkey, s_name""")
-    },
+    Judged.sql("q73_tpch2",
       s"""WITH ps AS (SELECT l_partkey, l_suppkey, MIN($priceCents) AS minp
                       FROM lineitem GROUP BY l_partkey, l_suppkey)
           SELECT p_partkey, s_name, CAST(ps.minp AS DOUBLE)/100.0 AS min_price
@@ -360,16 +270,7 @@ object TpchQueries extends Family {
     // TPC-H Q11 shape: suppliers holding >1/500 of total line revenue —
     // grouped HAVING against a global-total scalar subquery,
     // cross-multiplied to exact cents (no integer/double division)
-    Judged("q74_tpch11", (s, dir) => {
-      views(s, dir, "lineitem")
-      s.sql(
-        s"""SELECT l_suppkey,
-              CAST(SUM($priceCents) AS DOUBLE)/100.0 AS total_value
-            FROM lineitem GROUP BY l_suppkey
-            HAVING 500 * SUM($priceCents) >
-              (SELECT SUM($priceCents) FROM lineitem)
-            ORDER BY total_value DESC, l_suppkey""")
-    },
+    Judged.sql("q74_tpch11",
       s"""SELECT l_suppkey,
             CAST(SUM($priceCents) AS DOUBLE)/100.0 AS total_value
           FROM lineitem GROUP BY l_suppkey
@@ -380,23 +281,7 @@ object TpchQueries extends Family {
     // TPC-H Q22 shape: above-average-balance customers with no recent
     // orders, per nation — scalar AVG (cross-multiplied: bal·n > Σbal
     // over positive balances) plus a NOT EXISTS anti-join
-    Judged("q75_tpch22", (s, dir) => {
-      views(s, dir, "customer", "orders")
-      s.sql(
-        """SELECT c_nationkey, count(*) AS numcust,
-             CAST(SUM(CAST(round(c_acctbal*100) AS BIGINT)) AS DOUBLE)/100.0
-               AS totacctbal
-           FROM customer c
-           WHERE CAST(round(c_acctbal*100) AS BIGINT) *
-                   (SELECT count(*) FROM customer WHERE c_acctbal > 0.0)
-                 > (SELECT SUM(CAST(round(c_acctbal*100) AS BIGINT))
-                    FROM customer WHERE c_acctbal > 0.0)
-             AND NOT EXISTS (SELECT 1 FROM orders o
-                             WHERE o.o_custkey = c.c_custkey
-                               AND o.o_orderdate >=
-                                   TIMESTAMP '2001-01-01 00:00:00')
-           GROUP BY c_nationkey ORDER BY c_nationkey""")
-    },
+    Judged.sql("q75_tpch22",
       """SELECT c_nationkey, count(*) AS numcust,
            CAST(SUM(CAST(round(c_acctbal*100) AS BIGINT)) AS DOUBLE)/100.0
              AS totacctbal

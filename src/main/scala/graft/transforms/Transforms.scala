@@ -62,14 +62,6 @@ object Transforms {
       col("time").cast(LongType).as("trade_time"),
       col("isBuyerMaker").cast(BooleanType).as("is_buyer_maker"))
 
-  /** Positional names of the 12-element kline array
-    * (reference: etl.py:148-152).
-    */
-  val klineFieldNames: Seq[String] = Seq(
-    "open_time", "open_price", "high_price", "low_price", "close_price",
-    "volume", "close_time", "quote_asset_volume", "number_of_trades",
-    "taker_buy_base_asset_volume", "taker_buy_quote_asset_volume", "ignore")
-
   /** klines: positional 12-tuple → named columns, keep 8, cast OHLCV to
     * double and times to long, constant symbol
     * (reference: etl.py:146-158). P1 + P3 + P4 + P7.

@@ -70,14 +70,22 @@ class ReadSpec extends SparkSpec {
   test("Tables.events under nanosAsLong true and false gets two memo entries") {
     val path = s"${Recount.dir}/events.parquet"
     Session.withConf(spark)(NanosAsLong -> "false")(Tables.parquet(spark, path))
-    Session.withConf(spark)(NanosAsLong -> "false") {
-      Tables.events(spark, Recount.dir) // sets nanosAsLong to true
+    Session.withConf(spark)(NanosAsLong -> "true") {
+      Tables.events(spark, Recount.dir)
       assert(jobsDuring(Tables.events(spark, Recount.dir)) == 0)
     }
     val confs = memoKeys(path).map(_._3)
     assert(confs.size == 2, s"memo keys: $confs")
     // nanosAsLong is the first conf of the key
     assert(confs.map(_.head) == Set(Some("false"), Some("true")))
+  }
+
+  test("reading Tables.events leaves the session's confs as it found them") {
+    Session.withConf(spark)(NanosAsLong -> "false") {
+      val before = spark.conf.getAll
+      Tables.events(spark, Recount.dir)
+      assert(spark.conf.getAll == before)
+    }
   }
 
   test("a frame read through the helper has the plain inferring read's " +

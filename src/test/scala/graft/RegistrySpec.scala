@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.functions.col
+
 import graft.functions.SimHashFold
-import graft.queries.{Family, Judged}
+import graft.queries.{Family, Judged, Tables}
 
 /** [[SparkEntry]]'s registry: every family listed once, every judged
   * query a plan and its oracle in one entry, and the two driver maps
@@ -37,5 +39,30 @@ class RegistrySpec extends SparkSpec {
     val df = SparkEntry.queries("e1_simhash")(fresh, Recount.dir)
     val plan = df.queryExecution.analyzed
     assert(plan.exists(_.expressions.exists(_.exists(_.isInstanceOf[SimHashFold]))))
+  }
+
+  test("Judged.sql: a text reads its tables from the sf dir it is given") {
+    val byDir = Seq("/root/testdata/sf0.01", Recount.dir).map { dir =>
+      val got = Recount.query("q36_having", dir).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSet
+      val plain = Tables.t(spark, dir, "orders").groupBy("o_custkey").count()
+        .where(col("count") >= 20).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toSet
+      assert(got == plain, dir)
+      got
+    }
+    // sf0.01 has customers with 20+ orders, sf0.001 none: the second
+    // run read its own dir, not the views the first one registered
+    assert(byDir.head.nonEmpty && byDir.last.isEmpty)
+  }
+
+  test("Judged.sql: a SQL-text query's oracle is its text, but for the two " +
+    "whose functions DuckDB spells otherwise") {
+    val texts = SparkEntry.judged.collect {
+      case Judged(name, Judged.SqlText(text), _) => name -> text
+    }
+    assert(texts.size == 20)
+    val own = texts.collect { case (n, t) if SparkEntry.oracleSql(n) != t => n }
+    assert(own.toSet == Set("q41_lateral", "q61_time_range"))
   }
 }

@@ -213,6 +213,15 @@ class Surface25Spec extends SparkSpec {
     assert(math.abs(row.getAs[Double]("mrr") - mrr) < 1e-7)
   }
 
+  test("e136: the row is the same without self-join auto-resolution") {
+    val byDefault = query("e136_ann_mrr").head()
+    val strict = Session.withConf(spark)(
+      "spark.sql.selfJoinAutoResolveAmbiguity" -> "false") {
+      query("e136_ann_mrr").head()
+    }
+    assert(strict == byDefault)
+  }
+
   test("e137: churn sets match a driver-side top-20 recount") {
     // sf0.01, not the suite's sf0.001: the smaller fixture has only
     // 15 users, so both halves' "top-20" would be ALL users and the
